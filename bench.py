@@ -98,12 +98,18 @@ def main() -> None:
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
     t_total0 = time.perf_counter()
+    sc = spark.sparkContext
     for name, fn in sorted(catalog.queries.items()):
         per_run: list[float] = []
+        # Tag the query's jobs (build and run) with its name, so each job
+        # and stage can be traced back to the query that ran it.
+        sc.setJobGroup(name, name)
         for _ in range(reps):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             per_run.append(round(time.perf_counter() - t0, 4))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
         runs[name] = per_run
         timings[name] = min(per_run)
         print(json.dumps({"q": name, "s": timings[name], "r": per_run}), flush=True)

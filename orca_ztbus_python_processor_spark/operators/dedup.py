@@ -26,7 +26,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MERSENNE31 = (1 << 31) - 1  # universal-hash modulus for the minhash family
-_HASH_BITS = 2147483647  # 2^31 - 1 fold of the base xxhash64
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -87,20 +86,6 @@ def _hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def _bind(value_expr: str, var: str, body: str) -> str:
-    """Let-binding for SQL expressions: evaluate ``value_expr`` ONCE and
-    expose it as lambda variable ``var`` inside ``body``.
-
-    Why: Catalyst's CollapseProject inlines an alias that is referenced
-    once — and if that one reference sits inside a higher-order-function
-    lambda, the inlined expression re-evaluates per element (e.g. a
-    shingling pass recomputed 64x inside a minhash transform). A
-    single-element transform() binds the value to a lambda variable,
-    which is evaluated exactly once regardless of how the body loops.
-    """
-    return f"element_at(transform(array({value_expr}), {var} -> {body}), 1)"
-
-
 def _shingles_sql(text_col: str, k: int) -> str:
     return (
         f"array_distinct(transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
@@ -108,41 +93,9 @@ def _shingles_sql(text_col: str, k: int) -> str:
     )
 
 
-def _shingle_hashes_sql(text_col: str, k: int) -> str:
-    return f"transform({_shingles_sql(text_col, k)}, s -> pmod(xxhash64(s), {_HASH_BITS}))"
-
-
 def shingles(text_col: str, k: int = 5) -> Column:
     """Distinct k-character shingles of a text column (codegen'd)."""
     return F.expr(_shingles_sql(text_col, k))
-
-
-def shingle_hashes(text_col: str, k: int = 5) -> Column:
-    """31-bit hashes of the distinct shingles."""
-    return F.expr(_shingle_hashes_sql(text_col, k))
-
-
-def _minhash_sig_body(var: str, num_hashes: int, seed: int) -> str:
-    """Signature array body over a lambda-bound shingle-hash array."""
-    a_lit = "array(" + ",".join(str(a) for a, _ in _hash_params(num_hashes, seed)) + ")"
-    b_lit = "array(" + ",".join(str(b) for _, b in _hash_params(num_hashes, seed)) + ")"
-    return (
-        f"transform(sequence(0, {num_hashes - 1}), j -> array_min("
-        f"transform({var}, h -> pmod(element_at({a_lit}, j + 1) * h"
-        f" + element_at({b_lit}, j + 1), {MERSENNE31}))))"
-    )
-
-
-def minhash_signature(
-    hashes_col: str, num_hashes: int = 64, seed: int = 42
-) -> Column:
-    """The full min-hash signature as ONE array<long> expression, with
-    the input hash array let-bound so it is evaluated exactly once (see
-    ``_bind``) — N separate per-hash columns would each inline and
-    recompute the upstream shingling N times."""
-    return F.expr(
-        _bind(hashes_col, "_mh_in", _minhash_sig_body("_mh_in", num_hashes, seed))
-    )
 
 
 # Star-fallback centers per flood bucket: a flood member disconnects
@@ -235,8 +188,8 @@ def _doc_signatures(
     doc just to drop them (the nibble sketches carry the bits the
     candidate gate needs at 1/16 the width).
 
-    The expression-level form (`_minhash_sig_body`) is pure Spark SQL
-    but higher-order-function lambdas are interpreted, so the 64-hash
+    An expression-level form in pure Spark SQL is possible, but
+    higher-order-function lambdas are interpreted, so the 64-hash
     permutation pass costs ~5 s per million shingles. Here the whole
     text -> byte-shingle -> Carter-Wegman minhash -> band-hash chain is
     one Arrow-batched map stage of numpy matrix ops (~10x). Shingles
@@ -385,7 +338,8 @@ def candidate_pairs_from_sigs(
         # the exact verify it is meant to shortcut.)
         ones = 0x1111111111111111
         # (a ^ b) repeated inline — codegen's subexpression elimination
-        # folds the duplicates; a _bind() here would reintroduce a lambda.
+        # folds the duplicates; a let-binding transform() here would
+        # reintroduce a lambda.
         mism = " + ".join(
             f"bit_count((({x}) | shiftright({x}, 1) | shiftright({x}, 2)"
             f" | shiftright({x}, 3)) & {ones}L)"
@@ -748,36 +702,6 @@ def minhash_near_dups(
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-
-def simhash_signature(text_col: str, bits: int = 64) -> Column:
-    """64-bit SimHash over whitespace tokens: bit i of the signature is
-    the sign of sum(+-1) of token-hash bit i across tokens.
-
-    Single-pass form: hash each token once, fold per-bit +-1 counts into
-    one array accumulator, then pack sign bits into a long. (The naive
-    form — one aggregate() per bit — re-tokenizes and re-hashes the text
-    64 times after projection collapse.)
-    """
-    tokens = f"array_distinct(split(trim({text_col}), '\\\\s+'))"
-    counts = (
-        f"aggregate(transform({tokens}, t -> xxhash64(t)),"
-        f" array_repeat(0L, {bits}),"
-        f" (acc, h) -> zip_with(acc, transform(sequence(0, {bits - 1}),"
-        f" i -> CASE WHEN shiftright(h, i) & 1 = 1 THEN 1L ELSE -1L END),"
-        f" (x, y) -> x + y))"
-    )
-    # Bind the counts array to a lambda variable (single-element
-    # transform) so it is evaluated once, not once per bit inside the
-    # packing aggregate. shiftleft(1L, 63) is Long.MIN_VALUE, so the
-    # packed sum is always a valid long (it reconstructs the exact bit
-    # pattern; no ANSI overflow).
-    return F.expr(
-        f"element_at(transform(array({counts}), cnt ->"
-        f" aggregate(sequence(0, {bits - 1}), 0L,"
-        f" (acc, i) -> acc + CASE WHEN element_at(cnt, i + 1) > 0"
-        f" THEN shiftleft(1L, i) ELSE 0L END)), 1)"
-    )
-
 
 def simhash_near_dups(
     docs: DataFrame,

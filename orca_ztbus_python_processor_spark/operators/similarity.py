@@ -115,29 +115,6 @@ def train_centroids(
     return centroids.tolist()
 
 
-def _cell_scores(emb: Column, centroids: list[list[float]]) -> Column:
-    """Array of struct(dot, cell_idx) for every centroid."""
-    return F.array(
-        *[
-            F.struct(
-                _dot_literal(emb, c).alias("dot"), F.lit(j).alias("cell")
-            )
-            for j, c in enumerate(centroids)
-        ]
-    )
-
-
-def assign_cell(emb: Column, centroids: list[list[float]]) -> Column:
-    """Nearest-centroid id (struct max orders by dot, then cell)."""
-    return F.array_max(_cell_scores(emb, centroids))["cell"]
-
-
-def probe_cells(emb: Column, centroids: list[list[float]], nprobe: int) -> Column:
-    """The nprobe nearest centroid ids, as an array."""
-    sorted_desc = F.reverse(F.array_sort(_cell_scores(emb, centroids)))
-    return F.transform(F.slice(sorted_desc, 1, nprobe), lambda s: s["cell"])
-
-
 def _cells_pandas(
     df: DataFrame,
     centroids: list[list[float]],

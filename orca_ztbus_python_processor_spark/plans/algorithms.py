@@ -20,7 +20,7 @@ Semantic parity notes (SURVEY.md §7 "semantic decisions"):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -89,7 +89,7 @@ def service_efficiency():
 # accel = speed.diff().fillna(0); jerk = accel.diff().fillna(0),
 # computed inside the window's frame (the reference re-reads each
 # window, so diffs reset at window boundaries).
-def _prepare_accel_jerk(df: DataFrame, time_col: str, keys: tuple[str, ...]) -> DataFrame:
+def _prepare_accel_jerk(time_col: str, keys: tuple[str, ...]) -> list[tuple[str, Column]]:
     # partition by the compiler's shared _time_from bucket so the lag
     # shuffle is reused by the final aggregation (one Exchange total)
     w = W.partitionBy("_time_from", *keys).orderBy(time_col)
@@ -97,9 +97,8 @@ def _prepare_accel_jerk(df: DataFrame, time_col: str, keys: tuple[str, ...]) -> 
         F.col("odometry_vehicle_speed") - F.lag("odometry_vehicle_speed").over(w),
         F.lit(0.0),
     )
-    df = df.withColumn("accel", accel)
     jerk = F.coalesce(F.col("accel") - F.lag("accel").over(w), F.lit(0.0))
-    return df.withColumn("jerk", jerk)
+    return [("accel", accel), ("jerk", jerk)]
 
 
 @proc.algorithm(

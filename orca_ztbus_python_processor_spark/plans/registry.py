@@ -11,14 +11,25 @@ derived windows cost a single pass over the data instead of N×M
 rescans.
 
 Execution model:
-  - an algorithm contributes (a) optional ``prepare`` — row-level /
-    window-function derived columns (e.g. the accel/jerk lag-diffs);
-    a prepare that needs the window bucket partitions by the
-    compiler-provided ``_time_from`` column so its shuffle is reused
-    by the final aggregation — and (b) a dict of named aggregate
-    Columns (StructResult) or a single Column (ValueResult).
-  - ``compile_window_type`` applies every prepare once, then fuses all
-    aggregates into one agg, output columns named
+  - an algorithm contributes (a) an optional ``prepare(time_col, keys)``
+    returning ordered ``(name, Column)`` stages — row-level /
+    window-function derived columns (e.g. the accel/jerk lag-diffs); a
+    stage that needs the window bucket partitions by the
+    compiler-provided ``_time_from`` column so its shuffle is reused by
+    the final aggregation — and (b) a dict of named aggregate Columns
+    (StructResult) or a single Column (ValueResult).
+  - build once, rebind per trigger: the first compile of a (window
+    type, ``time_col``, duration) builds every Column of the plan — the
+    ``_time_from`` bucket, the prepare stages, the aliased aggregates
+    and the output select — and the first melt of a window type builds
+    its ``window`` struct and per-algorithm array. Both are memoized on
+    the ``Processor``, so each later call only binds those Columns to
+    the new input frame (Structured Streaming's plan-once, rebind-the-
+    source-per-epoch shape). Each ``aggs``/``prepare`` fn runs once per
+    memo entry; registering an algorithm clears the memo, and a
+    relaunched JVM (new py4j gateway) rebuilds it.
+  - ``compile_window_type`` applies each distinct prepare's stages in
+    order, then fuses all aggregates into one agg, output columns named
     ``<algorithm>__<field>``.
   - ``melt_results`` reshapes the wide frame into the reference's
     result-row shape (FIXTURES.md A5: window struct, algorithm,
@@ -36,12 +47,13 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from orca_ztbus_python_processor_spark.plans.windows import WindowType
 
-PrepareFn = Callable[[DataFrame, str, tuple[str, ...]], DataFrame]
+PrepareFn = Callable[[str, tuple[str, ...]], "list[tuple[str, Column]]"]
 AggsFn = Callable[[], "dict[str, Column] | Column"]
 
 
@@ -53,9 +65,16 @@ class Algorithm:
     aggs: AggsFn
     prepare: PrepareFn | None = None
 
-    @property
-    def is_value_result(self) -> bool:
-        return not isinstance(self.aggs(), dict)
+
+@dataclass(frozen=True)
+class _CompiledColumns:
+    """Every Column of one fused plan, bound to no input frame."""
+
+    time_from: Column
+    stages: tuple[tuple[str, Column], ...]
+    group_by: tuple[Column, ...]
+    aggs: tuple[Column, ...]
+    select: tuple[Column, ...]
 
 
 class Processor:
@@ -65,6 +84,10 @@ class Processor:
     def __init__(self, name: str) -> None:
         self.name = name
         self._algorithms: list[Algorithm] = []
+        # Built Columns, keyed per window type (see the module docstring);
+        # valid for one py4j gateway.
+        self._memo: dict[tuple, object] = {}
+        self._memo_gateway: object = None
 
     # -- registration ------------------------------------------------------
     def algorithm(
@@ -83,12 +106,36 @@ class Processor:
 
         def deco(fn: AggsFn) -> AggsFn:
             self._algorithms.append(Algorithm(name, version, window_type, fn, prepare))
+            self._memo.clear()
             return fn
 
         return deco
 
     def algorithms_for(self, window_type: WindowType) -> list[Algorithm]:
         return [a for a in self._algorithms if a.window_type.name == window_type.name]
+
+    # -- memo --------------------------------------------------------------
+    def _memoized(self, key: tuple, build: Callable[[], object]) -> object:
+        gateway = SparkContext._gateway
+        if gateway is not self._memo_gateway:
+            self._memo.clear()
+            self._memo_gateway = gateway
+        if key not in self._memo:
+            self._memo[key] = build()
+        return self._memo[key]
+
+    def _specs(
+        self, window_type: WindowType
+    ) -> tuple[tuple[Algorithm, dict[str, Column] | Column], ...]:
+        """(algorithm, evaluated ``aggs()``) for every bound algorithm."""
+
+        def build():
+            algs = self.algorithms_for(window_type)
+            if not algs:
+                raise ValueError(f"no algorithms registered for {window_type.name}")
+            return tuple((a, a.aggs()) for a in algs)
+
+        return self._memoized(("specs", window_type), build)
 
     # -- compilation -------------------------------------------------------
     @staticmethod
@@ -103,6 +150,44 @@ class Processor:
             "hours": 3_600_000_000,
         }[unit]
         return int(qty) * scale
+
+    def _compiled(self, window_type: WindowType, time_col: str, duration: str) -> _CompiledColumns:
+        def build():
+            specs = self._specs(window_type)
+            keys = window_type.keys
+            dur_us = self._duration_us(duration)
+            stages: list[tuple[str, Column]] = []
+            seen: set[int] = set()
+            for a, _ in specs:
+                if a.prepare is not None and id(a.prepare) not in seen:
+                    stages.extend(a.prepare(time_col, keys))
+                    seen.add(id(a.prepare))
+            aggs: list[Column] = []
+            out: list[Column] = []
+            for a, spec in specs:
+                named = spec if isinstance(spec, dict) else {"value": spec}
+                for field_name, col in named.items():
+                    aggs.append(col.alias(f"{a.name}__{field_name}"))
+                    out.append(F.col(f"{a.name}__{field_name}"))
+            key_cols = tuple(F.col(k) for k in keys)
+            return _CompiledColumns(
+                time_from=F.expr(
+                    f"timestamp_micros((unix_micros({time_col}) div {dur_us}) * {dur_us})"
+                ),
+                stages=tuple(stages),
+                group_by=(F.col("_time_from"), *key_cols),
+                aggs=tuple(aggs),
+                select=(
+                    F.col("_time_from").alias("time_from"),
+                    (F.col("_time_from") + F.expr(f"INTERVAL {dur_us} MICROSECONDS")).alias(
+                        "time_to"
+                    ),
+                    *key_cols,
+                    *out,
+                ),
+            )
+
+        return self._memoized(("compile", window_type, time_col, duration), build)
 
     def compile_window_type(
         self,
@@ -125,91 +210,60 @@ class Processor:
         Exchange total instead of two, which at 100 TB halves the
         shuffled volume of the fact table.
         """
-        algs = self.algorithms_for(window_type)
-        if not algs:
-            raise ValueError(f"no algorithms registered for {window_type.name}")
+        plan = self._compiled(window_type, time_col, duration)
+        prepared = df.withColumn("_time_from", plan.time_from)
+        for name, col in plan.stages:
+            prepared = prepared.withColumn(name, col)
+        return prepared.groupBy(*plan.group_by).agg(*plan.aggs).select(*plan.select)
 
-        keys = list(window_type.keys)
-        dur_us = self._duration_us(duration)
-        prepared = df.withColumn(
-            "_time_from",
-            F.expr(f"timestamp_micros((unix_micros({time_col}) div {dur_us}) * {dur_us})"),
-        )
-        seen: set[int] = set()
-        for a in algs:
-            if a.prepare is not None and id(a.prepare) not in seen:
-                prepared = a.prepare(prepared, time_col, tuple(keys))
-                seen.add(id(a.prepare))
-
-        agg_cols: list[Column] = []
-        for a in algs:
-            spec = a.aggs()
-            if isinstance(spec, dict):
-                for field_name, col in spec.items():
-                    agg_cols.append(col.alias(f"{a.name}__{field_name}"))
-            else:
-                agg_cols.append(spec.alias(f"{a.name}__value"))
-
-        return (
-            prepared.groupBy("_time_from", *keys)
-            .agg(*agg_cols)
-            .select(
-                F.col("_time_from").alias("time_from"),
-                (F.col("_time_from") + F.expr(f"INTERVAL {dur_us} MICROSECONDS")).alias(
-                    "time_to"
-                ),
-                *keys,
-                *[c for a in algs for c in self._out_cols(a)],
+    def _melt_columns(
+        self, window_type: WindowType
+    ) -> tuple[tuple[Column, Column], tuple[Column, ...]]:
+        def build():
+            window_struct = F.struct(
+                F.col("time_from"),
+                F.col("time_to"),
+                F.lit(window_type.name).alias("name"),
+                F.lit(window_type.version).alias("version"),
+                F.lit(self.name).alias("origin"),
+                F.create_map(
+                    *[x for k in window_type.keys for x in (F.lit(k), F.col(k).cast("long"))]
+                ).alias("metadata"),
             )
-        )
+            per_alg = []
+            for a, spec in self._specs(window_type):
+                if isinstance(spec, dict):
+                    payload = F.create_map(
+                        *[
+                            x
+                            for k in spec
+                            for x in (F.lit(k), F.col(f"{a.name}__{k}").cast("double"))
+                        ]
+                    )
+                    value = F.lit(None).cast("double")
+                else:
+                    payload = F.lit(None).cast("map<string,double>")
+                    value = F.col(f"{a.name}__value").cast("double")
+                per_alg.append(
+                    F.struct(
+                        F.lit(a.name).alias("algorithm"),
+                        F.lit(a.version).alias("version"),
+                        value.alias("value"),
+                        payload.alias("payload"),
+                    )
+                )
+            exploded = (window_struct.alias("window"), F.explode(F.array(*per_alg)).alias("r"))
+            flat = ("window", "r.algorithm", "r.version", "r.value", "r.payload")
+            return exploded, tuple(F.col(c) for c in flat)
 
-    @staticmethod
-    def _out_cols(a: Algorithm) -> list[Column]:
-        spec = a.aggs()
-        if isinstance(spec, dict):
-            return [F.col(f"{a.name}__{k}") for k in spec]
-        return [F.col(f"{a.name}__value")]
+        return self._memoized(("melt", window_type), build)
 
     def melt_results(self, fused: DataFrame, window_type: WindowType) -> DataFrame:
         """Wide fused frame → reference result rows (FIXTURES.md A5):
-        ``window struct, algorithm, version, value, payload``."""
-        algs = self.algorithms_for(window_type)
-        keys = list(window_type.keys)
-        window_struct = F.struct(
-            F.col("time_from"),
-            F.col("time_to"),
-            F.lit(window_type.name).alias("name"),
-            F.lit(window_type.version).alias("version"),
-            F.lit(self.name).alias("origin"),
-            F.create_map(
-                *[x for k in keys for x in (F.lit(k), F.col(k).cast("long"))]
-            ).alias("metadata"),
-        )
+        ``window struct, algorithm, version, value, payload``.
 
-        per_alg = []
-        for a in algs:
-            spec = a.aggs()
-            if isinstance(spec, dict):
-                payload = F.create_map(
-                    *[
-                        x
-                        for k in spec
-                        for x in (F.lit(k), F.col(f"{a.name}__{k}").cast("double"))
-                    ]
-                )
-                value = F.lit(None).cast("double")
-            else:
-                payload = F.lit(None).cast("map<string,double>")
-                value = F.col(f"{a.name}__value").cast("double")
-            per_alg.append(
-                F.struct(
-                    F.lit(a.name).alias("algorithm"),
-                    F.lit(a.version).alias("version"),
-                    value.alias("value"),
-                    payload.alias("payload"),
-                )
-            )
-
-        return fused.select(
-            window_struct.alias("window"), F.explode(F.array(*per_alg)).alias("r")
-        ).select("window", "r.algorithm", "r.version", "r.value", "r.payload")
+        ``explode`` then a flattening select, not one ``inline`` select:
+        AQE prunes an empty window's plan through ``explode`` but not
+        through ``inline``, which costs an empty window 1–2 more jobs."""
+        exploded, flat = self._melt_columns(window_type)
+        return fused.select(*exploded).select(*flat)

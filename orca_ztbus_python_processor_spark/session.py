@@ -131,6 +131,10 @@ def get_spark(app_name: str = "orca-ztbus-spark", cpus: int | None = None) -> Sp
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        # No [Stage N:> progress bars on stderr: they drown the per-query
+        # lines bench.py prints. Fixed at JVM launch (a runtime set raises
+        # CANNOT_MODIFY_CONFIG).
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Local-scale splittability: the default 128 MB cap packs this
         # harness's single-digit-MB fixture tables into ONE scan task,

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -50,14 +50,12 @@ def error_rate():
     }
 
 
-def _prepare_value_diff(df: DataFrame, time_col: str, keys: tuple[str, ...]) -> DataFrame:
+def _prepare_value_diff(time_col: str, keys: tuple[str, ...]) -> list[tuple[str, Column]]:
     # diff resets at window boundaries, mirroring the reference's
     # per-window re-read semantics (processor/main.py:563-565); the
     # _time_from partition key shares the compiler's shuffle.
     w = W.partitionBy("_time_from", *keys).orderBy(time_col, "event_id")
-    return df.withColumn(
-        "d", F.coalesce(F.col("value") - F.lag("value").over(w), F.lit(0.0))
-    )
+    return [("d", F.coalesce(F.col("value") - F.lag("value").over(w), F.lit(0.0)))]
 
 
 @events_proc.algorithm(

@@ -876,7 +876,7 @@ def zipf_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 CROSS_SOURCE_SPAN_K = 13
 
 _CSD_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
-# Let-bind the token array (operators.dedup._bind): referencing
+# Let-bind the token array (a single-element transform): referencing
 # _CSD_TOKENS directly inside the gram lambda lets CollapseProject
 # inline it, re-running the regex tokenizer once PER GRAM (~spans/doc
 # times) instead of once per doc — measured 4.4 s -> ~1 s at sf0.1.

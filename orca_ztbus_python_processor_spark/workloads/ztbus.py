@@ -26,7 +26,10 @@ summation-order-proof.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import lru_cache
+
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orca_ztbus_python_processor_spark.operators.sessionize import (
@@ -66,11 +69,12 @@ _TELEMETRY_CTE = """
 """
 
 
-def telemetry_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ZTBus-shaped telemetry frame (trip/bus/route keys, sensor +
-    status channels, 1 row per (trip, time))."""
-    ev = read_table(spark, sf_dir, "events")
-    return ev.select(
+# The telemetry projection's Columns, built once per py4j gateway (a
+# relaunched JVM rebuilds them) and rebound by every later call instead
+# of rebuilding ~100 Column expressions per trigger.
+@lru_cache(maxsize=1)
+def _telemetry_projection(gateway: object) -> tuple[Column, ...]:
+    return (
         F.col("ts").alias("time"),
         F.col("user_id").alias("trip_id"),
         (F.col("user_id") % 2).alias("bus_id"),
@@ -89,6 +93,14 @@ def telemetry_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         (F.abs(F.col("value")) * 0.8).alias("traction_brake_pressure"),
         (F.col("event_type") == "error").alias("status_halt_brake_is_active"),
+    )
+
+
+def telemetry_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ZTBus-shaped telemetry frame (trip/bus/route keys, sensor +
+    status channels, 1 row per (trip, time))."""
+    return read_table(spark, sf_dir, "events").select(
+        *_telemetry_projection(SparkContext._gateway)
     )
 
 

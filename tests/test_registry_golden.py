@@ -154,3 +154,112 @@ def test_melt_results_shape(spark, telemetry_fixture):
     assert row["window"]["name"] == "EveryMinutePerTripPerBus"
     assert set(row["window"]["metadata"].keys()) == {"trip_id", "bus_id", "route_id"}
     assert pd.isna(row["value"]) and "50p" in row["payload"]
+
+
+# --------------------------------------------------------------------------
+# Build-once memo: Columns built by the first compile/melt of a window type
+# are rebound to every later input frame.
+# --------------------------------------------------------------------------
+
+
+def _fresh_copy(counts=None):
+    """A new Processor with ``proc``'s per-trip algorithms; with
+    ``counts``, every aggs/prepare call is tallied there by name."""
+    from orca_ztbus_python_processor_spark.plans.registry import Processor
+
+    fresh = Processor(proc.name)
+    for a in proc.algorithms_for(EVERY_MINUTE_PER_TRIP_PER_BUS):
+        aggs, prepare = a.aggs, a.prepare
+        if counts is not None:
+
+            def aggs(fn=a.aggs, key=f"aggs:{a.name}"):
+                counts[key] = counts.get(key, 0) + 1
+                return fn()
+
+            if a.prepare is not None:
+
+                def prepare(time_col, keys, fn=a.prepare, key=f"prepare:{a.name}"):
+                    counts[key] = counts.get(key, 0) + 1
+                    return fn(time_col, keys)
+
+        fresh.algorithm(a.name, a.version, a.window_type, prepare)(aggs)
+    return fresh
+
+
+def _sorted_pdf(df):
+    cols = ["time_from", "trip_id"]
+    return df.toPandas().sort_values(cols).reset_index(drop=True)
+
+
+def test_memo_rebinds_per_duration_and_time_col(spark, telemetry_fixture):
+    sdf = spark.createDataFrame(telemetry_fixture)
+    renamed = sdf.withColumnRenamed("time", "t")
+    wt = EVERY_MINUTE_PER_TRIP_PER_BUS
+    for frame, time_col, duration in [
+        (sdf, "time", "60 seconds"),
+        (sdf, "time", "120 seconds"),
+        (renamed, "t", "60 seconds"),
+    ]:
+        got = _sorted_pdf(proc.compile_window_type(frame, wt, time_col, duration))
+        want = _sorted_pdf(_fresh_copy().compile_window_type(frame, wt, time_col, duration))
+        pd.testing.assert_frame_equal(got, want)
+        if duration == "120 seconds":
+            assert len(got) == 2 * 3  # 300 s per trip: buckets at 0, 120, 240 s
+
+
+def test_algorithm_registered_after_compile_is_compiled(spark, telemetry_fixture):
+    from pyspark.sql import functions as F
+
+    from orca_ztbus_python_processor_spark.plans.registry import Processor
+
+    sdf = spark.createDataFrame(telemetry_fixture)
+    p = Processor("late")
+    p.algorithm("Rows", "1.0.0", EVERY_MINUTE)(lambda: F.count("*"))
+    assert "Rows__value" in p.compile_window_type(sdf, EVERY_MINUTE).columns
+    p.algorithm("MaxSpeed", "1.0.0", EVERY_MINUTE)(lambda: F.max("odometry_vehicle_speed"))
+    fused = p.compile_window_type(sdf, EVERY_MINUTE)
+    assert fused.columns[-2:] == ["Rows__value", "MaxSpeed__value"]
+    melted = p.melt_results(fused, EVERY_MINUTE).collect()
+    assert {r["algorithm"] for r in melted} == {"MaxSpeed", "Rows"}
+
+
+def test_memoized_compiles_union_to_one_compile(spark, telemetry_fixture):
+    """Disjoint inputs compiled through the same memo entry, unioned,
+    equal one compile over the union: the shared aliases and window specs
+    do not collide when two bindings meet in one plan."""
+    from pyspark.sql import functions as F
+
+    sdf = spark.createDataFrame(telemetry_fixture)
+    cut = T0 + dt.timedelta(seconds=120)  # a window boundary
+    wt = EVERY_MINUTE_PER_TRIP_PER_BUS
+
+    def compiled(frame):
+        return proc.melt_results(proc.compile_window_type(frame, wt, "time"), wt)
+
+    both = compiled(sdf.where(F.col("time") < F.lit(cut))).union(
+        compiled(sdf.where(F.col("time") >= F.lit(cut)))
+    )
+    whole = compiled(sdf)
+    def rows(df):  # map columns rule out exceptAll
+        return sorted(repr(r.asDict(recursive=True)) for r in df.collect())
+
+    got, want = rows(both), rows(whole)
+    assert len(want) == 5 * 10
+    assert got == want
+
+
+def test_aggs_and_prepare_built_once(spark, telemetry_fixture):
+    sdf = spark.createDataFrame(telemetry_fixture)
+    counts: dict[str, int] = {}
+    p = _fresh_copy(counts=counts)
+    wt = EVERY_MINUTE_PER_TRIP_PER_BUS
+    for _ in range(3):
+        p.melt_results(p.compile_window_type(sdf, wt, "time", "60 seconds"), wt)
+    assert counts == {
+        "aggs:AmbientTemperature": 1,
+        "aggs:EnergyEfficiencyPerMinute": 1,
+        "aggs:ServiceEfficiencyPerMinute": 1,
+        "prepare:ComfortAndSafetyPerMinute": 1,
+        "aggs:ComfortAndSafetyPerMinute": 1,
+        "aggs:AssetStressPerMinute": 1,
+    }
