@@ -7,6 +7,17 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Implementation lives in ``orca_ztbus_python_processor_spark/``; this
 module is a thin adapter.
+
+The driver samples the first 50 entries of ``queries()``. They are the
+queries no driver round has verified in their current form: a query
+whose fingerprint (``workloads.base.fingerprints``: its code, the
+package code it reaches, its oracle SQL) differs from the one recorded
+in ``workloads/verified.json``, or that has none. After each round,
+record what it verified with
+
+    python scripts/record_verified.py CORRECTNESS_rNN.json REV
+
+where REV is the git revision the round ran.
 """
 
 from __future__ import annotations
@@ -21,7 +32,10 @@ _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
-from orca_ztbus_python_processor_spark.workloads.base import merged_catalog  # noqa: E402
+from orca_ztbus_python_processor_spark.workloads.base import (  # noqa: E402
+    merged_catalog,
+    sample_order,
+)
 
 _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -41,8 +55,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return dict(merged_catalog().queries)
+    """One entry per implemented operator from SURVEY.md §2, unverified
+    queries first (see the module docstring)."""
+    cat = merged_catalog()
+    return {name: cat.queries[name] for name in sample_order()}
 
 
 def oracle_sql() -> dict[str, str]:

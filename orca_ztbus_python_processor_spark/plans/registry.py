@@ -226,9 +226,13 @@ class Processor:
                 F.lit(window_type.name).alias("name"),
                 F.lit(window_type.version).alias("version"),
                 F.lit(self.name).alias("origin"),
+                # cast: a keyless window type's empty map would be
+                # map<void,void>, which Arrow cannot convert (FIXTURES.md A4)
                 F.create_map(
                     *[x for k in window_type.keys for x in (F.lit(k), F.col(k).cast("long"))]
-                ).alias("metadata"),
+                )
+                .cast("map<string,bigint>")
+                .alias("metadata"),
             )
             per_alg = []
             for a, spec in self._specs(window_type):

@@ -1,10 +1,27 @@
+"""Query catalog, and the order the verification driver samples it in.
+
+The driver verifies the first 50 entries of ``__spark_entry__.queries()``
+each round. ``sample_order()`` puts first every query whose fingerprint
+differs from the one recorded when a driver round last verified it, or
+that no round has verified; ``verified.json`` holds the recorded
+fingerprints and ``scripts/record_verified.py`` adds a round to it.
+"""
+
 from __future__ import annotations
 
+import functools
+import hashlib
+import importlib
+import json
+import os
+import re
 from collections.abc import Callable
+from types import CodeType, FunctionType, ModuleType
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+VERIFIED_JSON = os.path.join(os.path.dirname(os.path.abspath(__file__)), "verified.json")
 
 
 class Catalog:
@@ -26,567 +43,71 @@ class Catalog:
         return deco
 
 
-# Queries with a green row in CORRECTNESS_r01.json. The verification
-# driver samples the FIRST 50 catalog entries in insertion order, so
-# merged_catalog() sorts not-yet-driver-verified queries ahead of the
-# already-verified union of ``_R1_DRIVER_VERIFIED`` and ``_R2_SAMPLE``:
-# each round's sample then covers exactly the queries no prior round
-# reached. Oracle-paired entries sort before rows-only ones within each
-# group (a hash-match row is stronger evidence than a rows-only row).
-_R1_DRIVER_VERIFIED = frozenset({
-    "q1_pricing_summary", "top1_latest_order", "point_lookup_customer",
-    "q3_top_orders", "q5_region_revenue", "customers_with_orders_by_nation",
-    "customers_without_orders", "rollup_revenue", "pivot_linestatus",
-    "topk_orders_per_segment", "union_price_slices",
-    "nations_with_customers_and_suppliers", "nations_without_suppliers",
-    "part_type_stats", "priority_value_share", "parts_intersect_rf",
-    "custs_without_urgent", "cube_revenue", "running_order_total",
-    "unpivot_returnflag_measures", "q6_forecast_revenue",
-    "exists_urgent_returns", "in_subquery_region_customers",
-    "above_avg_orders", "q17_small_quantity_revenue", "q18_large_orders",
-    "q10_returned_items", "promo_revenue_share", "priority_counts_by_flag",
-    "rank_suite_customers", "rolling_frames_events",
-    "regression_stats_by_flag", "date_string_profile", "q7_nation_trade_flows",
-    "approx_value_quantiles", "q19_disjunctive_revenue", "q15_top_supplier",
-    "q2_min_cost_supplier", "q8_market_share", "q9_nation_profit",
-    "q11_brand_value_share", "q13_custdist", "q16_supplier_cnt",
-    "q20_heavy_suppliers", "q21_sole_returner", "q22_idle_balances",
-    "distinct_active_triples", "active_users_per_minute",
-    "fused_per_user_minute", "value_describe",
-})
+def fingerprints(catalog: Catalog) -> dict[str, str]:
+    """Hash of each query's code (line numbers excluded), of the package
+    functions, classes and instances it reaches, and of its oracle SQL.
 
-
-# The 50 queries the driver verified in round 2 (CORRECTNESS_r02.json:
-# 40 hash-match + 10 contractual rows-only, zero failures). Together
-# with _R1_DRIVER_VERIFIED these form the "already verified" back group;
-# round 3's sample window goes to the 14 queries added late in round 2
-# plus this round's new entries.
-_R2_SAMPLE = frozenset({
-    "minute_window_events", "value_lag_diff", "user_sessions_gap",
-    "event_type_runs", "error_event_runs", "events_asof_orders",
-    "events_in_error_runs", "resample_forward_fill", "json_props_by_type",
-    "dedup_exact", "dedup_sha256", "token_stats", "doc_quality",
-    "lang_id_heuristic", "vocab_top_tokens", "bpe_pretokenize_stats",
-    "cosine_topk_bruteforce",
-    "embedding_dup_components", "registry_fused_minute",
-    "stream_error_runs", "stream_click_error_join",
-    "approx_distinct_users_daily", "minhash_near_dup_pairs",
-    "ngram_jaccard_pairs", "simhash_near_dup_pairs", "ann_cosine_topk",
-    "embedding_near_dup_blocked", "embedding_dup_components_blocked",
-    "doc_fingerprints", "multimodal_features", "multimodal_frame_sample",
-    "ztbus_fused_minute", "ztbus_active_busses_minute",
-    "ztbus_brake_run_windows", "stream_windows_table_roundtrip",
-    "repetition_signals", "ngram_topk_bigrams",
-    "embedding_near_dup_exact", "embedding_norms",
-    "embedding_quantize_profile", "event_funnel_stages",
-    "hour_rollup_from_minute", "label_centroids", "lang_source_profile",
-    "pii_scrub_events", "salted_mktsegment_rollup",
-    "stratified_sample_profile", "stream_dedup_replay",
-    "stream_minute_user_agg", "train_test_split_profile",
-})
-
-# The 50 queries the driver verified in round 3 (CORRECTNESS_r03.json:
-# 49 hash-match + 1 contractual rows-only, zero failures). 34 of these
-# were round-1 re-verifications; the 16 genuinely new names below join
-# the back group so round 4's sample window is filled by round-4
-# additions only.
-_R3_SAMPLE = frozenset({
-    "nation_supplier_roster", "priority_day_grid_fill",
-    "sliding_window_rates", "session_window_native",
-    "mode_event_type_per_user", "sequence_packing_profile",
-    "contamination_share", "tfidf_top_terms", "zipf_token_profile",
-    "cross_source_dup_matrix", "rare_token_density",
-    "pipeline_retention_funnel", "ztbus_brake_straddle_windows",
-    "stream_sliding_rates", "stream_session_native",
-    "text_dedup_retention",
-})
-
-# The 50 queries the driver verified in round 4 (CORRECTNESS_r04.json:
-# 49 hash-match + 1 contractual rows-only, zero failures). 44 were
-# re-verifications of earlier rounds; the 6 genuinely new names below
-# join the back group so round 5's sample window is filled by round-5
-# additions only.
-_R4_SAMPLE = frozenset({
-    "doc_chunk_windows", "data_mix_rebalance_profile",
-    "events_bucketed_fused_minute", "stream_minute_user_append",
-    "stream_sliding_append", "multimodal_real_decode",
-})
-
-# The 50 queries the driver verified in round 5 (CORRECTNESS_r05.json:
-# 48 hash-match + 2 contractual rows-only, zero failures). All 50 were
-# round-5 additions — the ordering mechanism delivered a perfect
-# never-before-sampled window — so the whole set joins the back group
-# and round 6's sample window is filled by round-6 additions only.
-_R5_SAMPLE = frozenset({
-    "bigram_lm_quality_score", "bm25_keyword_topk",
-    "concurrent_active_intervals", "cosine_topk_sharded",
-    "customer_value_deciles", "embedding_dim_variance",
-    "event_debounce_profile", "event_transition_matrix",
-    "events_asof_next_order", "ewma_value_smoothing",
-    "fulfillment_lag_profile", "grouping_sets_revenue",
-    "hll_weekly_rollup", "hourly_burst_flags", "iqr_outlier_profile",
-    "key_skew_profile", "kmeans_embedding_profile",
-    "latest_event_snapshot", "lineitem_column_census",
-    "mad_outlier_profile", "minute_value_ohlc",
-    "nation_balance_full_outer", "ngram_novelty_score",
-    "orders_monthly_mom_growth", "prefix_blocked_edit_distance",
-    "q4_late_shipment_priority", "referential_integrity_audit",
-    "region_nation_revenue_share", "scd2_user_state",
-    "seasonal_hour_profile", "source_lorenz_profile",
-    "stream_click_error_left_join", "stream_concurrent_intervals",
-    "stream_static_enrich", "stream_time_weighted_value",
-    "stream_upsert_snapshot", "temperature_mix_weights",
-    "term_postings_index", "time_decayed_user_score",
-    "time_weighted_value", "token_cooccurrence_pmi",
-    "token_entropy_profile", "unicode_class_profile",
-    "user_gap_quantiles", "user_rfm_segments",
-    "value_histogram_equiwidth", "value_quantiles_distributed",
-    "wau_rolling_exact", "weekly_cohort_retention",
-    "zorder_layout_profile",
-})
-
-# The 50 queries the driver verified in round 6 (CORRECTNESS_r06.json:
-# 47 hash-match + 3 contractual rows-only, zero failures). 39 were
-# round-6 additions plus 11 re-verifications; all join the back group so
-# round 7's sample window is filled by round-7 additions first.
-_R6_SAMPLE = frozenset({
-    "benford_leading_digit", "bloom_prefiltered_join",
-    "copurchase_pagerank_topk", "copurchase_triangle_count",
-    "customer_revenue_percentile", "customers_with_orders_by_nation",
-    "customers_without_orders", "doc_length_log2_histogram",
-    "embedding_cosine_histogram", "exact_dup_cross_source_keep",
-    "funnel_time_constrained", "hapax_legomena_share",
-    "heavy_hitters_topk_tokens", "knn_label_accuracy",
-    "lang_id_confusion_matrix", "merge_upsert_actions",
-    "nearest_event_order_asof", "neyman_sample_allocation",
-    "order_penny_allocation", "orders_skyline_paretofront",
-    "pca_top_component", "pivot_linestatus", "point_lookup_customer",
-    "q12_ship_mode_priority", "q1_pricing_summary", "q3_top_orders",
-    "q5_region_revenue", "relational_division_suppliers",
-    "resample_linear_interpolate", "rolling_median_value",
-    "rollup_revenue", "session_path_topk", "sessionized_bounce_rate",
-    "shipments_point_in_time_tier", "source_vocab_overlap_matrix",
-    "stream_error_rate_alert", "stream_minute_type_pivot",
-    "token_length_histogram", "top1_latest_order",
-    "topk_orders_per_segment", "training_shard_layout",
-    "union_price_slices", "user_interval_coverage",
-    "value_autocorr_by_user", "value_cusum_changepoint",
-    "value_histogram_equidepth", "value_psi_drift",
-    "weighted_order_sample", "weighted_price_quantiles",
-    "winnow_containment_pairs",
-})
-
-# The 50 queries the driver verified in round 7 (CORRECTNESS_r07.json:
-# 48 hash-match + 2 contractual rows-only, zero failures). 27 were
-# round-7 additions, 2 were the forced re-verifications of the
-# semantics-changed pair (knn_label_accuracy sampled probe,
-# embedding_cosine_histogram zero-norm exclusion — both green, so the
-# round-7 _RESAMPLE_R7 forcing set is retired), the rest round-1/-6
-# re-verifications. All join the back group so round 8's window is
-# filled by round-8 additions only.
-_R7_SAMPLE = frozenset({
-    "activity_bitmap_profile", "basket_affinity_lift",
-    "boilerplate_shingle_share", "chi_square_nation_segment",
-    "copurchase_bfs_distance", "copurchase_degree_histogram",
-    "cube_revenue", "customers_with_orders_by_nation",
-    "customers_without_orders", "custs_without_urgent",
-    "daily_mix_kl_anomaly", "doc_quality_filter_funnel",
-    "embedding_cosine_histogram", "knn_label_accuracy",
-    "knn_label_accuracy_allpairs", "ks_binned_drift",
-    "label_separation_matrix", "last_touch_attribution",
-    "mannwhitney_value_shift", "minute_latency_bands",
-    "nations_with_customers_and_suppliers", "nations_without_suppliers",
-    "ols_trend_by_user", "order_total_reconciliation",
-    "orderkey_sequence_audit", "part_type_stats", "parts_intersect_rf",
-    "pivot_linestatus", "point_lookup_customer", "priority_value_share",
-    "q1_pricing_summary", "q3_top_orders", "q5_region_revenue",
-    "quantile_sketch_profile", "robust_means_profile",
-    "rolling_corr_minute", "rollup_revenue", "running_order_total",
-    "salted_mktsegment_rollup", "seasonal_decompose_profile",
-    "source_qq_drift", "stream_minute_ohlc", "table_checksum_audit",
-    "text_neardup_canonical_keep", "text_zlib_compress_ratio",
-    "top1_latest_order", "topk_orders_per_segment",
-    "uniform_group_sample", "union_price_slices",
-    "unpivot_returnflag_measures",
-})
-
-# Round-8 driver sample (CORRECTNESS_r08.json): 47 hash-match + 3
-# contractual rows-only (copurchase_kcore_summary,
-# copurchase_label_propagation, stream_distinct_users_hll_minute),
-# zero failures. 29 were round-8 additions, the rest round-1/-7
-# re-verifications. All join the back group so round 9's window is
-# filled by round-9 additions only; no forced-resample set pending.
-_R8_SAMPLE = frozenset({
-    "benchmark_decontam_13gram", "char_bigram_entropy_by_source",
-    "chunk_dedup_profile", "context_window_fit_profile",
-    "copurchase_degree_assortativity", "copurchase_jaccard_similar_parts",
-    "copurchase_kcore_summary", "copurchase_label_propagation",
-    "cube_revenue", "customer_decile_migration",
-    "customers_with_orders_by_nation", "customers_without_orders",
-    "custs_without_urgent", "dedup_quality_bias_audit",
-    "doc_prefix_template_profile", "embedding_batch_centroid_drift",
-    "embedding_effective_rank", "embedding_outlier_mahalanobis",
-    "epoch_shuffle_balance", "exact_dup_cluster_histogram",
-    "incremental_dedup_delta_audit", "nations_with_customers_and_suppliers",
-    "nations_without_suppliers", "order_fanout_histogram",
-    "orders_backlog_over_time", "part_type_stats", "parts_intersect_rf",
-    "pivot_linestatus", "point_lookup_customer", "priority_value_share",
-    "q1_pricing_summary", "q3_top_orders", "q5_region_revenue",
-    "rollup_revenue", "running_order_total", "salted_mktsegment_rollup",
-    "semantic_decontam_embedding", "split_leakage_audit",
-    "stream_distinct_users_hll_minute", "stream_minute_latency_bands",
-    "supplier_lead_time_profile", "top1_latest_order",
-    "topk_orders_per_segment", "type_dow_mutual_information",
-    "union_price_slices", "unpivot_returnflag_measures",
-    "user_burstiness_fano", "user_diurnal_harmonic",
-    "value_tail_hill_index", "vocab_pareto_coverage",
-})
-
-# Round-9 driver sample (CORRECTNESS_r09.json): 46 hash-match + 4
-# contractual rows-only (image_phash_dedup, image_phash_bit_balance,
-# image_decontam_phash, minhash_jaccard_calibration — each pinned
-# against an independent pure-Python reference in
-# tests/test_round9_ops.py), zero failures. Includes the forced
-# q4_late_shipment_priority re-verification (live 1996 window, 5 real
-# rows — the round-8 _RESAMPLE_R9 forcing set is therefore retired).
-# All join the back group so round 10's window is filled by round-10
-# additions only.
-_R9_SAMPLE = frozenset({
-    "benford_leading_digit", "bloom_prefiltered_join",
-    "copurchase_local_clustering_histogram",
-    "copurchase_triangle_count", "cube_revenue",
-    "customer_revenue_percentile", "customer_value_deciles",
-    "customers_with_orders_by_nation", "customers_without_orders",
-    "custs_without_urgent", "decontam_chunk_localization",
-    "fulfillment_lag_profile", "grouping_sets_revenue",
-    "image_decontam_phash", "image_phash_bit_balance",
-    "image_phash_dedup", "kmv_distinct_user_overlap",
-    "lineitem_column_census", "median_ci_by_priority",
-    "merge_upsert_actions", "minhash_jaccard_calibration",
-    "nation_balance_full_outer", "nation_supplier_roster",
-    "nations_with_customers_and_suppliers", "nations_without_suppliers",
-    "part_type_stats", "parts_intersect_rf", "pivot_linestatus",
-    "point_lookup_customer", "priority_day_grid_fill",
-    "priority_value_share", "q1_pricing_summary", "q3_top_orders",
-    "q4_late_shipment_priority", "q5_region_revenue",
-    "rare_token_position_profile", "referential_integrity_audit",
-    "region_nation_revenue_share", "relational_division_suppliers",
-    "rollup_revenue", "running_order_total", "salted_mktsegment_rollup",
-    "shipments_point_in_time_tier", "top1_latest_order",
-    "topk_orders_per_segment", "type_lag_cross_correlation",
-    "union_price_slices", "unpivot_returnflag_measures",
-    "user_rfm_segments", "zipf_rank_slope",
-})
-
-# Round-10 forced re-verifications (the q4 treatment): the
-# degenerate-evidence audit reworked the semantics of four twins whose
-# greens were vacuous at the driver's sf0.01 (cross_source_dup_matrix
-# matched an empty join, dedup_quality_bias_audit and
-# rare_token_position_profile matched all-NULL measure columns — see
-# .benchmarks/degenerate_evidence.json), and the winnowing promotion
-# changed doc_fingerprints / winnow_containment_pairs from the byte-
-# grain rolling hash to md5-derived token 3-grams (now oracle-paired).
-# Old driver evidence no longer covers any of them; push all five back
-# into the sample window. (events_asof_next_error, which replaced the
-# retired events_asof_next_order, is a NEW name and enters the window
-# automatically.)
-_RESAMPLE_R10 = frozenset({
-    "cross_source_dup_matrix", "dedup_quality_bias_audit",
-    "rare_token_position_profile", "doc_fingerprints",
-    "winnow_containment_pairs",
-    # The minhash family promotion (rows-only -> hash-matched via the
-    # full DuckDB banding replay, _minhash_lsh_sql): old rows-only
-    # greens no longer cover the new oracle comparison.
-    "minhash_near_dup_pairs", "ngram_jaccard_pairs",
-    "minhash_jaccard_calibration", "text_dedup_retention",
-    "simhash_near_dup_pairs",
-    # LPA promotion (rows-only -> hash-matched via the unrolled
-    # 4-round integer-vote replay, _lpa_oracle_sql): its r<=5 greens
-    # were rows-only and no longer cover the oracle comparison.
-    "copurchase_label_propagation",
-})
-
-# Round-10 driver sample (CORRECTNESS_r10.json): 45 hash-match + 5
-# contractual rows-only (bpe_learn_merges, audio_fp_dedup,
-# audio_fp_bit_balance, audio_decontam_fp, media_decode_health — each
-# pinned against an independent pure-Python reference in tests), zero
-# failures. Covers every _RESAMPLE_R10 forcing entry green, so that
-# set folds back into the verified base (same hygiene as the r9 fold).
-_R10_SAMPLE = frozenset({
-    "anova_price_by_brand", "audio_decontam_fp", "audio_fp_bit_balance",
-    "audio_fp_dedup", "bipartite_hits_parts",
-    "bootstrap_ci_price_by_priority", "bpe_learn_merges",
-    "cm_sketch_heavy_hitters", "conformal_threshold_by_type",
-    "containment_dedup_retention", "copurchase_label_propagation",
-    "cross_source_dup_matrix", "cuped_adjusted_experiment_lift",
-    "dedup_quality_bias_audit", "doc_fingerprints",
-    "doc_unigram_kl_quality", "dp_noisy_type_histogram",
-    "edit_distance_neardup_pairs", "effect_size_price_r_vs_n",
-    "event_chain_entropy_rate", "events_asof_next_error",
-    "events_asof_prev_error_tolerance", "fdr_bh_type_hour_enrichment",
-    "heaps_vocab_growth", "join_size_sample_estimate",
-    "k_anonymity_audit", "kmv_overlap_calibration",
-    "kruskal_wallis_qty_by_priority", "lang_separability_auc",
-    "levene_qty_by_returnflag", "media_decode_health",
-    "minhash_jaccard_calibration", "minhash_near_dup_pairs",
-    "ngram_jaccard_pairs", "orders_reorder_interval_profile",
-    "priority_sample_weight_estimate", "rare_token_position_profile",
-    "return_model_calibration_bins", "session_gap_survival",
-    "simhash_near_dup_pairs", "source_char_trigram_jsd",
-    "source_cross_perplexity", "spearman_qty_discount_by_flag",
-    "sprt_error_rate_monitor", "text_dedup_retention",
-    "token_pmi_collocations", "trend_mk_theilsen_by_segment",
-    "user_trailing_hour_value", "winnow_containment_pairs",
-    "winsorized_price_means",
-})
-
-# Round-11 forced re-verifications: two ADVICE-driven numeric-contract
-# reworks changed result-affecting expressions, so their r10 greens no
-# longer cover the code:
-# - dp_noisy_type_histogram: the seeded uniform moved from 60-bit
-#   md5/2^60 to (52-bit md5 + 0.5)/2^52, clamping u away from the
-#   inverse-CDF singular points (u=0 overflow, u=0.5 NaN) — different
-#   noise values, new oracle replay.
-# - return_model_calibration_bins: the decile GROUP BY key now bins
-#   the f32-quantized score on both engines, so a boundary-straddling
-#   ulp divergence between JVM and libm exp() cannot flip a bin.
-_RESAMPLE_R11 = frozenset({
-    "dp_noisy_type_histogram", "return_model_calibration_bins",
-    # k-core promotion (rows-only -> hash-matched via the recursive-CTE
-    # peel replay): its r8/r10 greens were rows-only and no longer
-    # cover the oracle comparison.
-    "copurchase_kcore_summary",
-    # PageRank promotion (rows-only -> hash-matched via per-round f32
-    # rank quantization + the unrolled 5-round CTE replay): its r<=9
-    # greens were rows-only AND the quantization slightly perturbs the
-    # rank values, so old evidence is doubly void.
-    "copurchase_pagerank_topk",
-    # k-means promotion (rows-only -> hash-matched via f32-quantized
-    # distances/centers + the unrolled 5-round Lloyd CTE replay): same
-    # double voiding as pagerank.
-    "kmeans_embedding_profile",
-    # PCA promotion (rows-only -> hash-matched via f32-quantized
-    # mu/y/v + the unrolled 8-round power-iteration CTE replay).
-    "pca_top_component",
-    # BPE promotion (rows-only -> hash-matched via the 10-round
-    # pair-count/argmax/greedy-fold recursive-CTE replay): the Spark
-    # side is unchanged, but its r10 green was rows-only and no longer
-    # covers the oracle comparison.
-    "bpe_learn_merges",
-    # IVF-stack promotions (rows-only -> hash-matched via the
-    # quantize_f32 spherical-k-means training replay — deterministic
-    # first-nlist init replaces the numpy-RNG choice, so the quantizer
-    # RESULTS changed too; recall gate re-measured,
-    # .benchmarks/ann_recall.json).
-    "ann_cosine_topk", "embedding_near_dup_blocked",
-    "embedding_dup_components_blocked",
-})
-
-# Round-11 driver sample (CORRECTNESS_r11.json): 50/50 hash-match,
-# zero rows-only even sampled, zero failures. Covers every
-# _RESAMPLE_R11 forcing entry green, so that set folds back into the
-# verified base (same hygiene as the r9/r10 folds).
-_R11_SAMPLE = frozenset({
-    "ann_cosine_topk", "benford_leading_digit", "bpe_learn_merges",
-    "copurchase_kcore_summary", "copurchase_pagerank_topk",
-    "cube_revenue", "customer_revenue_percentile",
-    "customer_value_deciles", "customers_with_orders_by_nation",
-    "customers_without_orders", "custs_without_urgent",
-    "dp_noisy_type_histogram", "embedding_dup_components_blocked",
-    "embedding_near_dup_blocked", "fulfillment_lag_profile",
-    "gini_stump_split_gain", "grouping_sets_revenue",
-    "kmeans_embedding_profile", "lineitem_column_census",
-    "markov_stationary_behavior", "merge_upsert_actions",
-    "nation_balance_full_outer", "nation_supplier_roster",
-    "nations_with_customers_and_suppliers", "nations_without_suppliers",
-    "part_type_stats", "parts_intersect_rf", "pca_top_component",
-    "pinball_loss_p90_eval", "pivot_linestatus", "point_lookup_customer",
-    "priority_day_grid_fill", "priority_value_share",
-    "q1_pricing_summary", "q3_top_orders", "q4_late_shipment_priority",
-    "q5_region_revenue", "referential_integrity_audit",
-    "region_nation_revenue_share", "relational_division_suppliers",
-    "return_model_calibration_bins", "rollup_revenue",
-    "running_order_total", "salted_mktsegment_rollup",
-    "shipments_point_in_time_tier", "top1_latest_order",
-    "topk_orders_per_segment", "union_price_slices",
-    "unpivot_returnflag_measures", "user_rfm_segments",
-})
-
-# Round-12 forced re-verifications: the VERDICT r11 #1/#2 scale-shape
-# rewrites changed the Spark-side plans of four queries (the results
-# are contract-identical — exact order statistics / integer prefix
-# sums — but old driver evidence covers the old code), and three
-# ADVICE-driven oracle-robustness fixes changed oracle text
-# (value-neutral on the fixtures; resampled for hygiene):
-# - pinball_loss_p90_eval: train-half P90 moved from the 5-value-key
-#   window sort onto exact_group_rank_value; midpoint anchored to
-#   whole days on BOTH engines (ADVICE r11).
-# - median_ci_by_priority / conformal_threshold_by_type: order
-#   statistics moved onto exact_group_rank_values (was: corpus-grain
-#   windows over 5-value keys).
-# - sequence_packing_profile: cumulative offsets moved onto
-#   group_prefix_sum (was: Window.partitionBy(lang) corpus cumsum).
-# - markov_stationary_behavior: oracle pi rounds now LEFT-join the
-#   state list (zero-incoming states get 0.0, matching Spark).
-# - pca_top_component: oracle init weight derived from the data's
-#   dimension count instead of a literal 64.0.
-# - bpe_learn_merges: oracle greedy-fold CROSS JOIN -> LEFT JOIN so an
-#   exhausted-vocabulary round no-ops instead of corrupting v{i}.
-_RESAMPLE_R12 = frozenset({
-    "pinball_loss_p90_eval", "median_ci_by_priority",
-    "conformal_threshold_by_type", "sequence_packing_profile",
-    "markov_stationary_behavior", "pca_top_component",
-    "bpe_learn_merges",
-    # Round-12 OPTIMIZATION restructures (results verified identical
-    # against the DuckDB oracle locally; forced so fresh driver
-    # evidence covers the new plans):
-    # - referential_integrity_audit: total+anti-join per constraint
-    #   fused into one left join vs distinct parent keys.
-    # - tree_depth2_returnflag / km_repurchase_survival: totals now
-    #   derive from the pinned cell rollup instead of a second pass.
-    # - source_qq_drift: per-source + global deciles in ONE
-    #   exact_group_quantiles call via a sentinel global group.
-    # - customer_value_deciles / weighted_price_quantiles /
-    #   heaps_vocab_growth: representative users of the range-partition
-    #   machinery's new pinned-input single-evaluation path.
-    # - benchmark_decontam_13gram / decontam_chunk_localization: the
-    #   count fence's bench-gram set is pinned and reused by the probe
-    #   join (was evaluated twice).
-    # - copurchase_pagerank_topk: transition table pinned
-    #   repartition(dst)+persist, zero-exchange iterations.
-    # - kmeans_embedding_profile: Lloyd input persisted for the
-    #   trajectory, released via the eager-checkpointed profile.
-    # - the six media-fingerprint queries (rows-only): fused
-    #   single-Arrow-stage synth+fingerprint (payload never crosses
-    #   the JVM); exact-signature parity pinned in
-    #   tests/test_round12_fused_media.py.
-    "referential_integrity_audit", "tree_depth2_returnflag",
-    "km_repurchase_survival", "source_qq_drift",
-    "customer_value_deciles", "weighted_price_quantiles",
-    "heaps_vocab_growth", "benchmark_decontam_13gram",
-    "decontam_chunk_localization", "copurchase_pagerank_topk",
-    "kmeans_embedding_profile",
-    "audio_fp_dedup", "audio_decontam_fp", "audio_fp_bit_balance",
-    "image_phash_dedup", "image_decontam_phash",
-    "image_phash_bit_balance",
-})
-
-# Round-12 driver sample (CORRECTNESS_r12.json): 44/44 oracle-checkable
-# hash-match + 6 contractual rows-only (media fingerprints), zero
-# failures. Covers every _RESAMPLE_R12 forcing entry green, so that set
-# folds back into the verified base (same hygiene as the r9-r11 folds).
-_R12_SAMPLE = frozenset({
-    "ab_power_mde_by_priority", "anova2_qty_flag_status",
-    "audio_decontam_fp", "audio_fp_bit_balance", "audio_fp_dedup",
-    "benchmark_decontam_13gram", "bpe_learn_merges",
-    "conformal_threshold_by_type", "copurchase_pagerank_topk",
-    "customer_value_deciles", "customers_with_orders_by_nation",
-    "customers_without_orders", "decontam_chunk_localization",
-    "did_promo_revenue_effect", "feature_hash_collision_profile",
-    "gains_lift_deciles", "heaps_vocab_growth", "image_decontam_phash",
-    "image_phash_bit_balance", "image_phash_dedup",
-    "ips_offpolicy_priority_eval", "jl_projection_distortion",
-    "km_repurchase_survival", "kmeans_embedding_profile",
-    "logreg_newton_returnflag", "markov_stationary_behavior",
-    "median_ci_by_priority", "naive_bayes_returnflag",
-    "nations_with_customers_and_suppliers", "nations_without_suppliers",
-    "paired_classifier_agreement", "part_type_stats",
-    "parts_intersect_rf", "pca_top_component", "pinball_loss_p90_eval",
-    "pivot_linestatus", "point_lookup_customer", "priority_value_share",
-    "q1_pricing_summary", "q3_top_orders", "q5_region_revenue",
-    "referential_integrity_audit", "rollup_revenue",
-    "sequence_packing_profile", "source_qq_drift", "top1_latest_order",
-    "topk_orders_per_segment", "tree_depth2_returnflag",
-    "union_price_slices", "weighted_price_quantiles",
-})
-
-# Round-13 forced re-verifications (VERDICT r12 #3 + this round's
-# optimization restructures). Results verified identical against the
-# DuckDB oracle locally at sf0.001/sf0.01/sf0.1; forced into the
-# driver's 50-entry sample window so fresh driver evidence covers the
-# new plans.
-#
-# (a) VERDICT r12 #3 — round-12 plan-changed queries that shipped with
-# local verification only:
-#   embedding_effective_rank, funnel_time_constrained,
-#   kmv_overlap_calibration, embedding_batch_centroid_drift,
-#   cross_source_dup_matrix, token_cooccurrence_pmi,
-#   mad_outlier_profile, text_dedup_retention,
-#   customer_revenue_percentile, winsorized_price_means,
-#   running_order_total (customer_decile_migration / user_rfm_segments
-#   are also in that list and re-enter under (b)).
-# (b) Round-13 order-statistic machinery: every exact_group_quantiles /
-#   exact_group_rank_value(s) / exact_weighted_quantiles caller moved
-#   from range-shuffle selection onto iterative histogram selection
-#   (functions/quantiles.py module docstring): median_ci_by_priority,
-#   conformal_threshold_by_type (also de-pinned), pinball_loss_p90_eval,
-#   weighted_price_quantiles, quantile_sketch_profile, source_qq_drift
-#   (also NULL-safe sentinel filter), value_quantiles_distributed,
-#   iqr_outlier_profile.
-# (c) Round-13 boundary-broadcast NTILE (functions/ranks.py
-#   with_global_ntiles_cuts): customer_value_deciles,
-#   user_rfm_segments, customer_decile_migration, gains_lift_deciles
-#   (also input pin), value_histogram_equidepth.
-# (d) ADVICE r12 empty-input coalesce fixes: tree_depth2_returnflag,
-#   km_repurchase_survival.
-# (e) Full-width fused media stages (_spread_full; rows-only):
-#   audio_fp_dedup, audio_decontam_fp, audio_fp_bit_balance,
-#   image_phash_dedup, image_decontam_phash, image_phash_bit_balance.
-_RESAMPLE_R13 = frozenset({
-    # (a)
-    "embedding_effective_rank", "funnel_time_constrained",
-    "kmv_overlap_calibration", "embedding_batch_centroid_drift",
-    "cross_source_dup_matrix", "token_cooccurrence_pmi",
-    "mad_outlier_profile", "text_dedup_retention",
-    "customer_revenue_percentile", "winsorized_price_means",
-    "running_order_total",
-    # (b)
-    "median_ci_by_priority", "conformal_threshold_by_type",
-    "pinball_loss_p90_eval", "weighted_price_quantiles",
-    "quantile_sketch_profile", "source_qq_drift",
-    "value_quantiles_distributed", "iqr_outlier_profile",
-    # (c)
-    "customer_value_deciles", "user_rfm_segments",
-    "customer_decile_migration", "gains_lift_deciles",
-    "value_histogram_equidepth",
-    # (d)
-    "tree_depth2_returnflag", "km_repurchase_survival",
-    # (e)
-    "audio_fp_dedup", "audio_decontam_fp", "audio_fp_bit_balance",
-    "image_phash_dedup", "image_decontam_phash",
-    "image_phash_bit_balance",
-    # (f) batch-2: fused minhash signatures+sets pipeline
-    # (text_dedup_retention, also affected, is already in (a))
-    "ngram_jaccard_pairs", "minhash_jaccard_calibration",
-    "minhash_near_dup_pairs",
-    # (g) batch-2: cut-key checkpoints / shared-trigram self-join /
-    # stream state shards 8 -> 4 (the named pair; the shard knob is
-    # plan-neutral and every streaming query was re-verified locally)
-    "heaps_vocab_growth", "source_char_trigram_jsd",
-    "stream_click_error_join", "stream_click_error_left_join",
-})
-
-_DRIVER_VERIFIED = (
-    _R1_DRIVER_VERIFIED | _R2_SAMPLE | _R3_SAMPLE | _R4_SAMPLE
-    | _R5_SAMPLE | _R6_SAMPLE | _R7_SAMPLE | _R8_SAMPLE | _R9_SAMPLE
-    | _R10_SAMPLE | _R11_SAMPLE | _R12_SAMPLE
-) - _RESAMPLE_R13
-
-_MERGED: Catalog | None = None
-
-
-def merged_catalog() -> Catalog:
-    """Merge every workload module's catalog into one, ordered for
-    driver-sample coverage (see ``_R1_DRIVER_VERIFIED``).
-
-    Memoized per process: the module catalogs are populated once at
-    import, so rebuilding 120+ closures on every ``queries()`` /
-    ``oracle_sql()`` call is pure waste. Callers treat the result as
-    read-only (the entrypoint copies the dicts it hands out).
+    Frozensets are hashed sorted, so the hash does not depend on
+    ``PYTHONHASHSEED``; module dunders (``__file__``) are skipped, so it
+    does not depend on the checkout's path either. Mutable values (a
+    dict, list or set, an instance's attributes) add the code they
+    reach but not their data, which may be a run-time cache
+    (``parquet._TABLE_MEMO``, a ``Processor``'s Column memo).
     """
-    global _MERGED
-    if _MERGED is not None:
-        return _MERGED
+    pkg = type(catalog).__module__.partition(".")[0]
+    nodes: dict[int, tuple[str, list]] = {}
+
+    def enc(v: object, refs: list) -> str:  # package objects go to refs, stand here by name
+        if isinstance(v, (dict, list, set)):  # mutable, so maybe a run-time cache: refs only
+            enc(tuple(v.items() if isinstance(v, dict) else v), refs)
+            return type(v).__name__
+        if isinstance(v, CodeType):
+            v = (v.co_code, v.co_names, v.co_consts)
+        elif isinstance(v, property):
+            v = (v.fget, v.fset, v.fdel)
+        if isinstance(v, (frozenset, tuple)):
+            items = [enc(x, refs) for x in v]
+            return repr(sorted(items) if isinstance(v, frozenset) else items)
+        if isinstance(v, (str, bytes, int, float, complex, type(None), re.Pattern)):
+            return repr(v)
+        if str(getattr(v, "__module__", "")).partition(".")[0] == pkg:
+            refs.append(v)  # staticmethods too: they carry their function's __module__
+        return (v if isinstance(v, (type, FunctionType)) else type(v)).__qualname__
+
+    def node(obj: object) -> tuple[str, list]:
+        refs: list = []
+        if isinstance(obj, type):
+            return enc((obj.__bases__, tuple(sorted(vars(obj).items()))), refs), refs
+        if not isinstance(obj, FunctionType):  # an instance: no text, it may be run-time state
+            enc((type(obj), getattr(obj, "__dict__", {})), refs)
+            return "", refs
+        codes = [obj.__code__]
+        for code in codes:
+            codes += [c for c in code.co_consts if isinstance(c, CodeType)]
+        names = sorted({n for code in codes for n in code.co_names})
+        found = [obj.__globals__[n] for n in names if n in obj.__globals__ and n[:2] != "__"]
+        found += [importlib.import_module(n) for n in names if n.partition(".")[0] == pkg]
+        mods = [m for m in found if isinstance(m, ModuleType) and m.__name__.partition(".")[0] == pkg]
+        found += [vars(m)[n] for m in mods for n in names if n in vars(m)]
+        head = (obj.__module__, obj.__qualname__, obj.__defaults__, obj.__kwdefaults__)
+        return enc((head, obj.__code__, tuple(found)), refs), refs
+
+    out = {}
+    for name, fn in catalog.queries.items():
+        todo, seen = [fn], {}
+        for obj in todo:  # grows as the walk goes
+            if id(obj) not in seen:
+                seen[id(obj)] = nodes[id(obj)] = nodes.get(id(obj)) or node(obj)
+                todo += seen[id(obj)][1]
+        parts = sorted({text for text, _ in seen.values() if text} | {repr(catalog.oracles.get(name))})
+        out[name] = hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
+    return out
+
+
+@functools.cache
+def merged_catalog() -> Catalog:
+    """Every workload module's queries, in module order. Callers treat
+    the result as read-only (the entrypoint copies what it hands out)."""
     from orca_ztbus_python_processor_spark.workloads import (  # noqa: PLC0415
         pipelineops,
         registrations,
@@ -613,24 +134,23 @@ def merged_catalog() -> Catalog:
         streamqueries,
         pipelineops,
     ):
-        cat = mod.CATALOG
-        for name, fn in cat.queries.items():
-            if name in merged.queries:
-                raise ValueError(f"duplicate query name across modules: {name}")
-            merged.queries[name] = fn
-        merged.oracles.update(cat.oracles)
+        for name, fn in mod.CATALOG.queries.items():
+            merged.query(name, mod.CATALOG.oracles.get(name))(fn)
+    return merged
 
-    def _rank(name: str) -> tuple[int, int]:
-        # Never-driver-sampled queries (anything added this round) fill
-        # the front of the catalog; everything the driver already
-        # verified in rounds 1-3 sorts behind them.
-        group = 0 if name not in _DRIVER_VERIFIED else 1
-        return (group, name not in merged.oracles)
 
-    ordered = Catalog()
-    for name in sorted(merged.queries, key=_rank):  # stable: insertion order within rank
-        ordered.queries[name] = merged.queries[name]
-        if name in merged.oracles:
-            ordered.oracles[name] = merged.oracles[name]
-    _MERGED = ordered
-    return ordered
+@functools.cache
+def sample_order() -> tuple[str, ...]:
+    """Query names, unverified first: a query whose fingerprint differs
+    from its recorded one, or has none, sorts before every other.
+    Within each group oracle-paired queries come first (a hash-match row
+    is stronger evidence than a rows-only one), then module order."""
+    cat = merged_catalog()
+    with open(VERIFIED_JSON) as f:
+        recorded = json.load(f)["fingerprints"]
+    current = fingerprints(cat)
+
+    def rank(name: str) -> tuple[bool, bool]:
+        return recorded.get(name) == current[name], name not in cat.oracles
+
+    return tuple(sorted(cat.queries, key=rank))

@@ -1,153 +1,182 @@
-"""Pin the driver-sample ordering of merged_catalog().
+"""Pin the driver-sample order of ``__spark_entry__.queries()``.
 
-The verification driver samples the FIRST 50 catalog entries each round.
-Rounds 1-7 verified all 238 catalog names in _R1_DRIVER_VERIFIED |
-_R2_SAMPLE | ... | _R7_SAMPLE (zero failures), so round 8's sample
-window must be filled by the queries that have never had a driver
-CORRECTNESS row: exactly the entries added this round. A regression
-here (VERDICT.md round 2, "What's wrong" #2; rounds 3-7 likewise)
-would silently re-verify old queries and starve new ones of driver
-evidence.
+The verification driver samples the first 50 catalog entries each round.
+``sample_order()`` puts first every query whose fingerprint differs from
+the one recorded in ``workloads/verified.json`` when a round verified it
+(or that no round verified). A regression here would silently re-verify
+old queries and starve changed ones of driver evidence.
 """
 
+from __future__ import annotations
+
+import glob
+import json
+import os
+import re
+import subprocess
+import sys
+
+from orca_ztbus_python_processor_spark.functions import ranks
+from orca_ztbus_python_processor_spark.workloads import base
 from orca_ztbus_python_processor_spark.workloads.base import (
-    _R5_SAMPLE,
-    _R6_SAMPLE,
-    _R7_SAMPLE,
-    _R8_SAMPLE,
-    _R9_SAMPLE,
-    _R10_SAMPLE,
-    _R11_SAMPLE,
-    _R12_SAMPLE,
-    _RESAMPLE_R13,
-    _DRIVER_VERIFIED,
+    VERIFIED_JSON,
+    fingerprints,
     merged_catalog,
+    sample_order,
 )
+from scripts.record_verified import sampled
+from tests.conftest import REPO_ROOT, SMOKE_SF_DIR
 
-# Historically-sampled names plus the round-13 forced
-# re-verifications: the round-13 machinery/NTILE restructures, the
-# round-12 locally-verified plan changes (VERDICT r12 #3) and the
-# ADVICE empty-input fixes changed plans for 32 twins (see
-# _RESAMPLE_R13 in base.py), so their old driver evidence is void and
-# they re-enter the sample window.
-_VERIFIED_OR_RESAMPLING = _DRIVER_VERIFIED | _RESAMPLE_R13
+RECORD_COMMAND = "python scripts/record_verified.py CORRECTNESS_rNN.json REV"
 
 
-def test_r5_sample_folded_into_back_group():
-    # CORRECTNESS_r05.json held exactly these 50 names; all must now be
-    # in the verified back group so round-6 additions fill the window.
-    assert len(_R5_SAMPLE) == 50
-    assert _R5_SAMPLE <= _VERIFIED_OR_RESAMPLING
+def _recorded() -> dict:
+    with open(VERIFIED_JSON) as f:
+        return json.load(f)
 
 
-def test_r6_sample_folded_into_back_group():
-    assert len(_R6_SAMPLE) == 50
-    assert _R6_SAMPLE <= _VERIFIED_OR_RESAMPLING
-
-
-def test_r7_sample_folded_into_back_group():
-    # CORRECTNESS_r07.json held exactly these 50 names (48 hash-match +
-    # 2 contractual rows-only, zero failures); all must now be in the
-    # verified back group so round-8 additions fill the window. The two
-    # round-7 forced re-verifications (knn_label_accuracy,
-    # embedding_cosine_histogram) came back green under their new
-    # semantics, so the _RESAMPLE_R7 forcing set is retired.
-    assert len(_R7_SAMPLE) == 50
-    assert _R7_SAMPLE <= _VERIFIED_OR_RESAMPLING
-    assert {"knn_label_accuracy", "embedding_cosine_histogram"} <= _R7_SAMPLE
-
-
-def test_r8_sample_folded_into_back_group():
-    # CORRECTNESS_r08.json held exactly these 50 names (47 hash-match +
-    # 3 contractual rows-only, zero failures); all must now be in the
-    # verified back group so round-9 additions fill the window.
-    assert len(_R8_SAMPLE) == 50
-    assert _R8_SAMPLE <= _VERIFIED_OR_RESAMPLING
-
-
-def test_r9_sample_folded_into_back_group():
-    # CORRECTNESS_r09.json held exactly these 50 names (46 hash-match +
-    # 4 contractual rows-only, zero failures); all must now be in the
-    # verified back group so round-10 additions fill the window. The
-    # round-9 forced re-verification (q4_late_shipment_priority, live
-    # 1996 window) came back green with 5 real rows, so the
-    # _RESAMPLE_R9 forcing set is retired.
-    assert len(_R9_SAMPLE) == 50
-    assert _R9_SAMPLE <= _VERIFIED_OR_RESAMPLING
-    assert "q4_late_shipment_priority" in _R9_SAMPLE
-
-
-def test_r10_sample_folded_into_back_group():
-    # CORRECTNESS_r10.json held exactly these 50 names (45 hash-match +
-    # 5 contractual rows-only, zero failures); all must now be in the
-    # verified back group so round-11 additions fill the window. All
-    # eleven _RESAMPLE_R10 forcing entries came back green under their
-    # reworked semantics, so that set is retired (kept in base.py for
-    # the historical record only).
-    assert len(_R10_SAMPLE) == 50
-    assert _R10_SAMPLE <= _VERIFIED_OR_RESAMPLING
-    assert "cross_source_dup_matrix" in _R10_SAMPLE
-
-
-def test_r11_sample_folded_into_back_group():
-    # CORRECTNESS_r11.json held exactly these 50 names (50 hash-match,
-    # zero rows-only even sampled, zero failures); all must now be in
-    # the verified back group so round-12 additions fill the window.
-    # All ten _RESAMPLE_R11 forcing entries came back green under their
-    # promoted oracles, so that set is retired (kept in base.py for the
-    # historical record only).
-    assert len(_R11_SAMPLE) == 50
-    assert _R11_SAMPLE <= _VERIFIED_OR_RESAMPLING
-    assert {"copurchase_pagerank_topk", "ann_cosine_topk"} <= _R11_SAMPLE
-
-
-def test_r12_sample_folded_into_back_group():
-    # CORRECTNESS_r12.json held exactly these 50 names (44 hash-match +
-    # 6 contractual rows-only, zero failures); all must now be in the
-    # verified back group. All seventeen _RESAMPLE_R12 forcing entries
-    # came back green under their restructured plans, so that set is
-    # retired (kept in base.py for the historical record only); the
-    # _RESAMPLE_R13 forcing set re-voids evidence for the plans this
-    # round restructures.
-    assert len(_R12_SAMPLE) == 50
-    assert _R12_SAMPLE <= _VERIFIED_OR_RESAMPLING
-    assert {"median_ci_by_priority", "audio_fp_dedup"} <= _R12_SAMPLE
+def _front(order: tuple[str, ...]) -> list[str]:
+    """The queries whose current fingerprint is not the recorded one."""
+    recorded, current = _recorded()["fingerprints"], fingerprints(merged_catalog())
+    return [n for n in order if recorded.get(n) != current[n]]
 
 
 def test_unverified_queries_fill_the_sample_window():
-    cat = merged_catalog()
-    names = list(cat.queries)
-    unverified = [n for n in names if n not in _DRIVER_VERIFIED]
-    # Every never-verified query sorts ahead of every verified one.
-    assert names[: len(unverified)] == unverified
+    order = sample_order()
+    front = _front(order)
+    # Every changed or never-verified query sorts ahead of every other.
+    assert list(order[: len(front)]) == front
     # The driver samples 50: nothing unverified may be pushed past the
-    # window. If this trips, a round has to pass before adding more.
-    assert len(unverified) <= 50, (
-        f"{len(unverified)} unverified queries exceed the 50-entry "
-        "driver sample window; some would never get driver evidence"
+    # window. If this trips, a round has to pass before changing more.
+    assert len(front) <= 50, (
+        f"{len(front)} unverified queries exceed the 50-entry driver "
+        "sample window; some would never get driver evidence"
     )
 
 
 def test_oracle_paired_sort_before_rows_only_within_groups():
-    cat = merged_catalog()
-    names = list(cat.queries)
-    unverified = [n for n in names if n not in _DRIVER_VERIFIED]
-    seen_rows_only = False
-    for n in unverified:
-        if n not in cat.oracles:
-            seen_rows_only = True
-        else:
-            assert not seen_rows_only, f"oracle-paired {n} after rows-only"
+    order, oracles = sample_order(), merged_catalog().oracles
+    front = _front(order)
+    for group in (front, order[len(front):]):
+        paired = [n in oracles for n in group]
+        assert paired == sorted(paired, reverse=True), "rows-only query before an oracle-paired one"
 
 
 def test_every_catalog_query_is_documented_in_coverage():
     """COVERAGE.md is the judge-facing operator map: every catalog
     query name must appear in it (backticked), so additions cannot
     silently skip documentation."""
-    import re
-    from pathlib import Path
-
-    cov = Path(__file__).resolve().parents[1].joinpath("COVERAGE.md").read_text()
-    documented = set(re.findall(r"`([a-z0-9_]+)`", cov))
+    with open(os.path.join(REPO_ROOT, "COVERAGE.md")) as f:
+        documented = set(re.findall(r"`([a-z0-9_]+)`", f.read()))
     missing = [n for n in merged_catalog().queries if n not in documented]
     assert not missing, f"undocumented catalog queries: {missing}"
+
+
+def test_every_correctness_round_is_recorded():
+    rounds = sorted(
+        int(m.group(1))
+        for path in glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json"))
+        if (m := re.search(r"_r(\d+)\.json$", path))
+    )
+    missing = sorted(set(rounds) - set(_recorded()["rounds"]))
+    assert not missing, (
+        f"rounds {missing} are not in workloads/verified.json; record each, "
+        f"in order, with `{RECORD_COMMAND}` (REV: the revision the round ran)"
+    )
+
+
+def test_helper_edit_moves_query_to_front(monkeypatch, tmp_path):
+    # Record every query as verified in its current form, then edit a
+    # helper customer_value_deciles reaches only through
+    # with_global_ntile_cuts -> with_global_ntiles_cuts, never by name.
+    verified = tmp_path / "verified.json"
+    verified.write_text(json.dumps({"rounds": [], "fingerprints": fingerprints(merged_catalog())}))
+    monkeypatch.setattr(base, "VERIFIED_JSON", str(verified))
+    order = sample_order.__wrapped__()
+    assert order.index("q1_pricing_summary") < order.index("customer_value_deciles")
+    code = ranks._rank_proxy.__code__
+    monkeypatch.setattr(ranks._rank_proxy, "__code__", code.replace(co_consts=code.co_consts + ("edit",)))
+    order = sample_order.__wrapped__()
+    assert order.index("customer_value_deciles") < order.index("q1_pricing_summary")
+
+
+_PRINT_FINGERPRINTS = """
+import json, sys
+sys.path.insert(0, {repo!r})
+from orca_ztbus_python_processor_spark.workloads.base import fingerprints, merged_catalog
+print(json.dumps(fingerprints(merged_catalog())))
+"""
+
+
+def test_fingerprint_does_not_depend_on_hash_seed():
+    runs = []
+    for seed in ("1", "2"):
+        env = {**os.environ, "PYTHONHASHSEED": seed}
+        proc = subprocess.run(
+            [sys.executable, "-c", _PRINT_FINGERPRINTS.format(repo=REPO_ROOT)],
+            cwd="/tmp",
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        runs.append(json.loads(proc.stdout.splitlines()[-1]))
+    # The pytest process has run other tests' queries by now, so this
+    # also checks that run-time caches stay out of the hash.
+    assert runs[0] == runs[1] == fingerprints(merged_catalog())
+
+
+def test_fingerprint_ignores_run_time_state(spark):
+    # Running queries fills module caches (parquet._TABLE_MEMO) and a
+    # Processor's Column memo; neither is code.
+    cat = merged_catalog()
+    before = fingerprints(cat)
+    for name in ("q1_pricing_summary", "registry_fused_minute", "ztbus_fused_minute"):
+        cat.queries[name](spark, SMOKE_SF_DIR).collect()
+    assert fingerprints(cat) == before
+
+
+def _round_folded(round_no: int) -> None:
+    """Every query round ``round_no`` verified has a recorded
+    fingerprint, so it sorts behind the front group unless its code
+    changed since."""
+    with open(os.path.join(REPO_ROOT, f"CORRECTNESS_r{round_no:02d}.json")) as f:
+        rows = json.load(f)
+    cat, recorded = merged_catalog(), _recorded()
+    assert round_no in recorded["rounds"]
+    names = {n for n, row in rows.items() if sampled(row) and n in cat.queries}
+    assert names
+    assert names <= set(recorded["fingerprints"])
+
+
+def test_r5_sample_folded_into_back_group():
+    _round_folded(5)
+
+
+def test_r6_sample_folded_into_back_group():
+    _round_folded(6)
+
+
+def test_r7_sample_folded_into_back_group():
+    _round_folded(7)
+
+
+def test_r8_sample_folded_into_back_group():
+    _round_folded(8)
+
+
+def test_r9_sample_folded_into_back_group():
+    _round_folded(9)
+
+
+def test_r10_sample_folded_into_back_group():
+    _round_folded(10)
+
+
+def test_r11_sample_folded_into_back_group():
+    _round_folded(11)
+
+
+def test_r12_sample_folded_into_back_group():
+    _round_folded(12)

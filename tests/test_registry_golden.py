@@ -8,6 +8,7 @@ the independent oracle — SURVEY.md §5 strategy #2/#4).
 from __future__ import annotations
 
 import datetime as dt
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -154,6 +155,27 @@ def test_melt_results_shape(spark, telemetry_fixture):
     assert row["window"]["name"] == "EveryMinutePerTripPerBus"
     assert set(row["window"]["metadata"].keys()) == {"trip_id", "bus_id", "route_id"}
     assert pd.isna(row["value"]) and "50p" in row["payload"]
+
+
+def test_every_minute_melt_schema_matches_per_trip(spark, telemetry_fixture):
+    # FIXTURES.md A4: metadata is map<string,long> for every window type,
+    # empty for EveryMinute. An untyped empty map would be map<void,void>,
+    # which makes toPandas abandon Arrow for the slow path.
+    sdf = spark.createDataFrame(telemetry_fixture)
+
+    def melt(wt):
+        return proc.melt_results(proc.compile_window_type(sdf, wt, "time"), wt)
+
+    # Types only: a value result's payload is NULL, so its nullability
+    # differs from a struct result's by design (FIXTURES.md A5).
+    every_minute = melt(EVERY_MINUTE)
+    per_trip = melt(EVERY_MINUTE_PER_TRIP_PER_BUS)
+    assert every_minute.schema.simpleString() == per_trip.schema.simpleString()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        pdf = every_minute.toPandas()
+    assert not [w for w in caught if "arrow" in str(w.message).lower()]
+    assert len(pdf) == 5 and all(r["metadata"] == {} for r in pdf["window"])
 
 
 # --------------------------------------------------------------------------
