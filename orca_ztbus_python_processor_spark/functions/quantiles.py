@@ -8,47 +8,45 @@ per-key grain (groups of ~60 rows), a scale wall at corpus grain
 sf1 fixture). ``approx_percentile`` is the sketch path when error is
 acceptable; this module is the EXACT corpus-grain path.
 
-Round-13 engine (guide §1.2/§2.4): ITERATIVE HISTOGRAM SELECTION — the
-classic distributed selection algorithm (bisection on value range with
-per-bucket counts), replacing round 11/12's range-repartition +
-per-partition-window addressing:
+One selection routine, ``_hist_rank_select``, serves every operator
+here and ``ranks.with_global_ntiles_cuts``: ITERATIVE HISTOGRAM
+SELECTION — the classic distributed selection algorithm (bisection on
+value range with per-bucket masses). Each row carries a mass, 1 for
+the rank operators and its weight for ``exact_weighted_quantiles``;
+the answer for target t is the smallest value whose cumulative mass
+reaches t (with unit masses: the value at 1-indexed rank t).
 
-  1. one map-combinable pass per group: count, min, max — n_groups
-     scalars to the driver (guarded, see ``_MAX_GROUPS``);
+  1. one map-combinable pass per group: the mass at -Inf, of the
+     finite values, at +Inf and at NaN (Spark's total order), plus the
+     finite values' count, min and max — n_groups rows to the driver
+     (guarded, see ``_MAX_GROUPS``). A target that lands in a
+     non-finite mass is resolved right there; the others, shifted by
+     the -Inf mass, select among the finite values;
   2. per refinement pass, ONE map-combinable aggregation computes, for
      every unresolved (group, value-interval), a B-bucket histogram of
-     (count, exact min, exact max) — n_intervals x B scalars to the
-     driver, never rows. The driver walks each histogram's cumulative
-     counts to locate the bucket holding each target rank;
+     (count, mass, exact min, exact max) — n_intervals x B scalars to
+     the driver, never rows. The driver walks each histogram's
+     cumulative masses to locate the bucket holding each target;
   3. a bucket whose min == max IS the answer (ties collapse); a bucket
      with <= ``_COLLECT_LIMIT`` rows is fetched and finished exactly on
      the driver; anything larger refines over [bucket_min, bucket_max]
      (each pass cuts the candidate value range by ~B, so doubles
      converge in <= ~6 passes; 1 pass + 1 bounded fetch is typical).
 
-Versus the range-shuffle form this removes, per invocation: the
-RangePartitioner sampling job, a full shuffle of every row, two
-``localCheckpoint`` pins (the executor-loss fragility VERDICT r12 #4
-flagged), and a per-partition window sort. What remains is 2-4 scans
-of the narrow input with tiny aggregation traffic — at 100 TB the
-bytes that cross the network drop from "the whole column, once" to
-"n_intervals x B scalars per pass". Results are EXACTLY the values at
-the requested ranks of the sorted multiset — bit-identical to the old
-form (same doubles picked, same interpolation arithmetic), verified
-caller-by-caller against the DuckDB oracle.
-
-Inputs containing NaN/±Inf values (which break value-range bisection)
-fall back to the proven range-shuffle forms kept below — a
-deterministic, data-dependent routing, decided by the same pass-1
-aggregate either path needs.
+Per invocation that is 2-4 scans of the narrow input with tiny
+aggregation traffic and no shuffle of rows: at 100 TB the bytes that
+cross the network are "n_intervals x B scalars per pass", never the
+column. Results are EXACTLY the values at the requested ranks of the
+sorted multiset in Spark's order, NaN/±Inf included — the values
+``F.percentile`` and a sort pick.
 """
 
 from __future__ import annotations
 
-import bisect
 import math
 from collections import defaultdict
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -57,8 +55,8 @@ from orca_ztbus_python_processor_spark.functions.stats import f32
 
 # Histogram buckets per (group, interval) per refinement pass. Partial
 # aggregation state per map task is bounded by n_intervals x B cells of
-# (count, min, max); driver traffic per pass is the same. 4096 splits a
-# 10^11-row group under _COLLECT_LIMIT in two passes.
+# (count, mass, min, max); driver traffic per pass is the same. 4096
+# splits a 10^11-row group under _COLLECT_LIMIT in two passes.
 _HIST_BUCKETS = 4096
 # A candidate interval at or under this row count is fetched to the
 # driver (Arrow toPandas — a few MB) and finished exactly (sorted
@@ -73,10 +71,13 @@ _FETCH_BUDGET = 4_000_000
 # (priorities, event types, sources); anything past this bound is a
 # misuse of corpus-grain machinery, not a workload.
 _MAX_GROUPS = 100_000
-# Bisection on IEEE doubles cuts the representable range by ~B per
-# pass; 20 passes is unreachable without NaN/Inf (routed out in pass
-# 1) — a hard stop against an undiscovered degeneracy, not a tunable.
+# Bisection on finite IEEE doubles cuts the representable range by ~B
+# per pass, so 20 passes is unreachable — a hard stop against an
+# undiscovered degeneracy, not a tunable.
 _MAX_HIST_PASSES = 20
+# Pass-1 mass segments in Spark's total order; None stands for the
+# finite values, which the histogram passes select among.
+_SEGMENTS = (-math.inf, None, math.inf, math.nan)
 
 
 def _check_group_guard(n_groups: int, where: str) -> None:
@@ -89,20 +90,70 @@ def _check_group_guard(n_groups: int, where: str) -> None:
         )
 
 
+def _pass1_aggs(mass: str | None = None) -> list:
+    """Pass-1 aggregates over ``v`` (module docstring, step 1): the
+    finite values' ``n_fin``, ``mn`` and ``mx``, and ``m0``..``m3``,
+    the mass of each of ``_SEGMENTS``. A row's mass is 1, or its
+    ``mass`` column."""
+    v = F.col("v")
+    fin = ~F.isnan(v) & (F.abs(v) != math.inf)
+    segs = (v == -math.inf, fin, v == math.inf, F.isnan(v))
+    return [
+        F.count(F.when(fin, 1)).alias("n_fin"),
+        F.min(F.when(fin, v)).alias("mn"),
+        F.max(F.when(fin, v)).alias("mx"),
+        *(
+            (
+                F.count(F.when(c, 1)) if mass is None else F.sum(F.when(c, F.col(mass)))
+            ).alias(f"m{i}")
+            for i, c in enumerate(segs)
+        ),
+    ]
+
+
+def _segments(row) -> tuple:
+    """A pass-1 row as ``_hist_rank_select``'s per-group statistics:
+    ``(n_fin, mn, mx, (m0, m1, m2, m3))``."""
+    return row["n_fin"], row["mn"], row["mx"], tuple(row[f"m{i}"] or 0 for i in range(4))
+
+
+def _walk(masses: list, targets: list):
+    """Assign each of ``targets`` — (target, key) pairs sorted by
+    target — to the first cell whose cumulative mass reaches it. The
+    last cell also takes a target past the total (float rounding of
+    fractional masses), so no target is dropped. Yields
+    ``(cell_index, mass_below_cell, [(target - mass_below_cell, key)])``.
+    """
+    cum, ti, last = 0, 0, len(masses) - 1
+    for i, m in enumerate(masses):
+        picked = []
+        while ti < len(targets) and (targets[ti][0] <= cum + m or i == last):
+            picked.append((targets[ti][0] - cum, targets[ti][1]))
+            ti += 1
+        if picked:
+            yield i, cum, picked
+        cum += m
+
+
 def _interval_case(intervals: dict, value_expr) -> object:
     """WHEN-chain mapping each row to ``iid * B + bucket`` (long) for
     the interval containing it, NULL outside every interval — a pure
     codegen expression, so the histogram/fetch passes carry no join,
     no broadcast and no driver-built DataFrame (each of those costs a
-    visible fraction of a small job's wall)."""
+    visible fraction of a small job's wall). Intervals are finite, so
+    ``between`` leaves NaN/±Inf rows outside every one. The bucket
+    offset is computed on halved values: ``hi - lo`` overflows to +Inf
+    for a range past the largest double, and halving is exact for
+    normal doubles, so it does not move any other row's bucket."""
     B = _HIST_BUCKETS
     expr = None
     for iid, (g, lo, hi, _ab, _t) in intervals.items():
         cond = F.col("g").eqNullSafe(F.lit(g)) & F.col("v").between(
             F.lit(lo), F.lit(hi)
         )
+        half_lo = F.lit(lo / 2)
         cell = F.lit(iid * B) + F.least(
-            F.floor((F.col("v") - F.lit(lo)) / (F.lit(hi) - F.lit(lo)) * B),
+            F.floor((F.col("v") / 2 - half_lo) / (F.lit(hi / 2) - half_lo) * B),
             F.lit(B - 1),
         ).cast("long") if value_expr else F.lit(iid).cast("long")
         expr = F.when(cond, cell) if expr is None else expr.when(cond, cell)
@@ -112,52 +163,63 @@ def _interval_case(intervals: dict, value_expr) -> object:
 def _hist_rank_select(
     src: DataFrame,
     rank_sets: dict,
+    mass: str | None = None,
 ) -> dict:
-    """Exact values at requested ranks per group via iterative histogram
-    selection (module docstring).
+    """Exact values at cumulative-mass targets per group via iterative
+    histogram selection (module docstring).
 
-    ``src``: columns ``g`` (any atomic type, no NULL-group targets
-    needed — NULL groups simply get no entry) and ``v`` (double,
-    non-NULL, finite — caller verifies via its pass-1 stats).
-    ``rank_sets``: {g: (n, min, max, {rank, ...})} with 1-indexed ranks
-    in [1, n_g].
+    ``src``: columns ``g`` (any atomic type; a NULL group needs no
+    targets) and ``v`` (double, non-NULL, NaN/±Inf allowed), plus the
+    ``mass`` column (positive, finite) when given; otherwise every row
+    has mass 1. ``rank_sets``: {g: (stats, targets)} with ``stats`` the
+    group's pass-1 statistics as ``_segments`` returns them, and
+    ``targets`` the cumulative masses to select — 1-indexed ranks in
+    [1, n_g] for unit masses.
 
-    Returns {(g, rank): (value, n_below, n_eq)} where ``value`` is the
-    exact double at that rank of the group's ascending sorted multiset,
-    ``n_below`` the count of group rows strictly below it and ``n_eq``
-    the count equal to it (every row of one value lands in one bucket,
-    so both counts are exact whichever path resolves the target).
+    Returns {(g, target): (value, below, eq)} where ``value`` is the
+    smallest value of the group whose cumulative mass (ties summed)
+    reaches the target, ``below`` the group's mass strictly below it
+    and ``eq`` the mass equal to it (every row of one value lands in
+    one bucket, so both are exact whichever path resolves the target;
+    with unit masses they are row counts).
     """
     B = _HIST_BUCKETS
+    extra = [] if mass is None else [mass]
 
-    # interval state: iid -> [g, lo, hi, abs_below, targets]
-    # targets: list of (local_rank 1-indexed within interval, group rank)
+    # interval state: iid -> [g, lo, hi, mass_below, targets]
+    # targets: list of (target local to the interval, group target)
     pending: dict[int, list] = {}
     resolved: dict = {}
     to_fetch: dict[int, list] = {}
     fetch_rows = 0
     next_iid = 0
 
-    def _settle(g, lo, hi, count, abs_below, targets) -> None:
-        """Route an interval: resolved / fetch / refine."""
+    def _settle(g, lo, hi, count, m, below, targets) -> None:
+        """Route an interval of ``count`` rows and mass ``m``:
+        resolved / fetch / refine."""
         nonlocal next_iid, fetch_rows
         if lo == hi:
-            # single-value interval: all `count` rows equal `lo`
-            for _lr, gr in targets:
-                resolved[(g, gr)] = (lo, abs_below, count)
+            # single-value interval: every row equals `lo`
+            for _t, t in targets:
+                resolved[(g, t)] = (lo, below, m)
             return
         if count <= _COLLECT_LIMIT and fetch_rows + count <= _FETCH_BUDGET:
             fetch_rows += count
-            to_fetch[next_iid] = [g, lo, hi, abs_below, targets]
+            to_fetch[next_iid] = [g, lo, hi, below, targets]
         else:
-            pending[next_iid] = [g, lo, hi, abs_below, targets]
+            pending[next_iid] = [g, lo, hi, below, targets]
         next_iid += 1
 
-    for g, info in rank_sets.items():
-        n, mn, mx, ranks = info
-        if not ranks:
-            continue
-        _settle(g, mn, mx, n, 0, sorted((r, r) for r in ranks))
+    for g, ((n_fin, mn, mx, masses), targets) in rank_sets.items():
+        segs = [(val, m) for val, m in zip(_SEGMENTS, masses) if m]
+        tgts = sorted((t, t) for t in targets)
+        for i, below, picked in _walk([m for _v, m in segs], tgts):
+            val, m = segs[i]
+            if val is None:
+                _settle(g, mn, mx, n_fin, m, below, picked)
+            else:  # a non-finite value: its mass is one tie
+                for _t, t in picked:
+                    resolved[(g, t)] = (val, below, m)
 
     passes = 0
     while pending:
@@ -165,78 +227,65 @@ def _hist_rank_select(
         if passes > _MAX_HIST_PASSES:
             raise RuntimeError(
                 "histogram selection failed to converge "
-                f"({_MAX_HIST_PASSES} passes) — NaN/Inf should have been "
-                "routed to the shuffle fallback"
+                f"({_MAX_HIST_PASSES} passes over finite values)"
             )
         current, pending = pending, {}
+        aggs = [
+            F.count("*").alias("_c"),
+            F.min("v").alias("_mn"),
+            F.max("v").alias("_mx"),
+            *(F.sum(c).alias("_m") for c in extra),
+        ]
         cells = (
-            src.select(_interval_case(current, True).alias("_cell"), "v")
+            src.select(_interval_case(current, True).alias("_cell"), "v", *extra)
             .where(F.col("_cell").isNotNull())
             .groupBy("_cell")
-            .agg(
-                F.count("*").alias("_c"),
-                F.min("v").alias("_mn"),
-                F.max("v").alias("_mx"),
-            )
+            .agg(*aggs)
             .toPandas()
         )
         per_iv: dict[int, list] = defaultdict(list)
-        for cell, c, mnb, mxb in zip(
-            cells["_cell"], cells["_c"], cells["_mn"], cells["_mx"]
+        for cell, c, m, mnb, mxb in zip(
+            cells["_cell"].tolist(),
+            cells["_c"].tolist(),
+            cells["_m" if mass else "_c"].tolist(),
+            cells["_mn"].tolist(),
+            cells["_mx"].tolist(),
         ):
-            per_iv[int(cell) // B].append(
-                (int(cell) % B, int(c), float(mnb), float(mxb))
-            )
-        for iid, (g, lo, hi, abs_below, targets) in current.items():
+            per_iv[cell // B].append((cell % B, c, m, mnb, mxb))
+        for iid, (g, _lo, _hi, below, targets) in current.items():
             buckets = sorted(per_iv[iid])
-            cum = 0
-            ti = 0  # targets sorted by local rank
-            for _b, c, mnb, mxb in buckets:
-                picked = []
-                while ti < len(targets) and targets[ti][0] <= cum + c:
-                    lr, gr = targets[ti]
-                    picked.append((lr - cum, gr))
-                    ti += 1
-                if picked:
-                    _settle(g, mnb, mxb, c, abs_below + cum, picked)
-                cum += c
+            for i, cum, picked in _walk([b[2] for b in buckets], targets):
+                _b, c, m, mnb, mxb = buckets[i]
+                _settle(g, mnb, mxb, c, m, below + cum, picked)
 
     if to_fetch:
         pdf = (
-            src.select(_interval_case(to_fetch, False).alias("_iid"), "v")
+            src.select(_interval_case(to_fetch, False).alias("_iid"), "v", *extra)
             .where(F.col("_iid").isNotNull())
             .toPandas()
         )
-        for iid, (g, lo, hi, abs_below, targets) in to_fetch.items():
-            vs = pdf.loc[pdf["_iid"] == iid, "v"].to_numpy()
-            vs.sort()
-            for lr, gr in targets:
-                v = float(vs[lr - 1])
-                # n strictly below = first index holding v (ties collapse)
-                left = int(bisect.bisect_left(vs, v))
-                resolved[(g, gr)] = (
-                    v,
-                    abs_below + left,
-                    int(bisect.bisect_right(vs, v)) - left,
+        for iid, (g, _lo, _hi, below, targets) in to_fetch.items():
+            sub = pdf[pdf["_iid"] == iid].sort_values("v", kind="stable")
+            vs = sub["v"].to_numpy()
+            cum = sub[mass].cumsum().to_numpy() if mass else np.arange(1, len(vs) + 1)
+            for t_local, t in targets:
+                # first row whose running mass reaches the target; its
+                # value's ties share it (smaller values all end below)
+                v = vs[min(int(np.searchsorted(cum, t_local)), len(vs) - 1)]
+                left = int(np.searchsorted(vs, v, "left"))
+                right = int(np.searchsorted(vs, v, "right"))
+                m_below = cum[left - 1].item() if left else 0
+                resolved[(g, t)] = (
+                    float(v), below + m_below, cum[right - 1].item() - m_below
                 )
     return resolved
 
 
 def _group_value_stats(src: DataFrame) -> list:
-    """Pass 1: per-group (n, min, max, n_nonfinite) — the only
-    unconditional driver traffic, one map-combinable aggregation."""
-    return (
-        src.groupBy("g")
-        .agg(
-            F.count("v").alias("n"),
-            F.min("v").alias("mn"),
-            F.max("v").alias("mx"),
-            F.sum(
-                (F.isnan("v") | (F.abs(F.col("v")) == float("inf"))).cast("long")
-            ).alias("bad"),
-        )
-        .collect()
-    )
+    """Pass 1: per group, ``n`` (non-NULL values) and the
+    ``_pass1_aggs`` statistics — the only unconditional driver traffic,
+    one map-combinable aggregation."""
+    return src.groupBy("g").agg(F.count("v").alias("n"), *_pass1_aggs()).collect()
 
 
 def exact_group_quantiles(
@@ -250,10 +299,12 @@ def exact_group_quantiles(
     Output: one row per group — ``<group_col>, n, p<q*100>...`` with
     float32-cast quantile values (hash-stable across engines). NULL
     values are excluded, matching SQL ``quantile_cont`` /
-    ``F.percentile``; a NULL group yields no output row (join
-    semantics of the original form). Group column may be any atomic
-    type. Linear interpolation at rank q*(n-1), exactly
-    pandas/DuckDB ``quantile_cont``: (1-frac)*v_lo + frac*v_hi.
+    ``F.percentile``; NaN/±Inf take their place in Spark's order
+    (-Inf < finite < +Inf < NaN), as in ``F.percentile``; a NULL group
+    yields no output row (join semantics of the original form). Group
+    column may be any atomic type. Linear interpolation at rank
+    q*(n-1), exactly pandas/DuckDB ``quantile_cont``:
+    (1-frac)*v_lo + frac*v_hi.
     """
     spark = df.sparkSession
     g_type = df.schema[group_col].dataType.simpleString()
@@ -263,8 +314,6 @@ def exact_group_quantiles(
     )
     stats = _group_value_stats(src)
     _check_group_guard(len(stats), "exact_group_quantiles")
-    if any(r["bad"] for r in stats):
-        return _exact_group_quantiles_shuffle(df, group_col, value_col, qs)
 
     rank_sets: dict = {}
     picks: dict = {}  # g -> list of (q, lo_rank, hi_rank, frac)
@@ -281,7 +330,7 @@ def exact_group_quantiles(
             ranks.add(lo + 1)
             ranks.add(hi + 1)
             gp.append((q, lo + 1, hi + 1, frac))
-        rank_sets[g] = (n, r["mn"], r["mx"], ranks)
+        rank_sets[g] = (_segments(r), ranks)
         picks[g] = (n, gp)
 
     sel = _hist_rank_select(src, rank_sets)
@@ -294,7 +343,7 @@ def exact_group_quantiles(
                 out.append(1.0 * v_lo)
             else:
                 v_hi = sel[(g, hi)][0]
-                # same two-term IEEE sum as the old agg form
+                # the two-term IEEE sum of quantile_cont
                 out.append((1.0 - frac) * v_lo + frac * v_hi)
         rows.append(tuple(out))
     p_names = [f"p{int(round(q * 100))}" for q in qs]
@@ -314,7 +363,8 @@ def exact_group_rank_values(
     explicit-rank sibling of ``exact_group_quantiles`` (no
     interpolation): ``ranks_of_n(n)`` maps a group's non-NULL count to
     ``{label: 1-indexed rank}``; the output carries, per group, the
-    value at each labeled rank under the ascending value order. The
+    value at each labeled rank under the ascending value order
+    (Spark's: NaN sorts last). The
     value at a rank of a sorted multiset is deterministic regardless of
     tie order, so no tiebreak column is needed even when values repeat.
     A rank outside [1, n] (or None) yields NULL for that label — the
@@ -336,8 +386,6 @@ def exact_group_rank_values(
     )
     stats = _group_value_stats(src)
     _check_group_guard(len(stats), "exact_group_rank_values")
-    if any(r["bad"] for r in stats):
-        return _exact_group_rank_values_shuffle(df, group_col, value_col, ranks_of_n)
 
     labels = None
     rank_sets: dict = {}
@@ -357,7 +405,7 @@ def exact_group_rank_values(
             for rank in rmap.values()
             if rank is not None and 1 <= int(rank) <= n
         }
-        rank_sets[g] = (n, r["mn"], r["mx"], ranks)
+        rank_sets[g] = (_segments(r), ranks)
 
     sel = _hist_rank_select(src, rank_sets)
     rows = []
@@ -399,262 +447,69 @@ def exact_weighted_quantiles(
     """Exact WEIGHTED quantiles, distributed — quantile q is the
     smallest value whose cumulative weight reaches ``q * total_weight``
     (the lower weighted quantile — the definition both engines can
-    state identically, so results hash-match; with integer-valued
-    weights every cumulative sum is exact in doubles regardless of
-    summation order).
+    state identically, so results hash-match). Ties share their
+    cumulative weight (RANGE-frame semantics); NaN/±Inf values take
+    their place in Spark's order. Rows with a NULL value or weight, or
+    a weight <= 0, are dropped; a kept weight that is NaN or +Inf
+    raises ``ValueError``.
 
-    Histogram-selection path (module docstring) for integer-valued
-    weights: per-bucket weight sums locate the crossing bucket, the
-    bounded fetch finishes exactly (ties share their cumulative weight
-    — RANGE-frame semantics — because equal values are summed before
-    comparison). Fractional weights fall back to the range-shuffle
-    form, whose epsilon analysis covers their summation-order error.
+    The shared histogram selection (module docstring) with each row's
+    weight as its mass. With integer-valued weights every cumulative
+    sum is exact in doubles whatever the summation order, so selection
+    is exact with no tolerance; fractional weights select within the
+    tolerance below.
 
     Output: ``q (double), wq (float32 value), total_weight (double)``.
     """
     spark = df.sparkSession
     src = (
         df.select(
+            F.lit(0).alias("g"),
             F.col(value_col).cast("double").alias("v"),
             F.col(weight_col).cast("double").alias("w"),
         )
         .where(F.col("v").isNotNull() & F.col("w").isNotNull() & (F.col("w") > 0))
     )
+    w = F.col("w")
     st = src.agg(
         F.count("*").alias("n"),
-        F.sum("w").alias("tw"),
-        F.min("v").alias("mn"),
-        F.max("v").alias("mx"),
-        F.max(F.abs(F.col("w") - F.round(F.col("w")))).alias("frac"),
-        F.sum(
-            (
-                F.isnan("v")
-                | (F.abs(F.col("v")) == float("inf"))
-                | F.isnan("w")
-                | (F.abs(F.col("w")) == float("inf"))
-            ).cast("long")
-        ).alias("bad"),
+        *_pass1_aggs("w"),
+        F.max(F.abs(w - F.round(w))).alias("frac"),
+        # NaN > 0 in Spark, so the filter above keeps NaN weights
+        F.sum((F.isnan(w) | (F.abs(w) == math.inf)).cast("long")).alias("bad_w"),
     ).first()
     out_schema = "q double, wq float, total_weight double"
     if not st["n"]:
         return spark.createDataFrame([], out_schema)
-    if st["bad"] or float(st["frac"] or 0.0) != 0.0:
-        return _exact_weighted_quantiles_shuffle(df, value_col, weight_col, qs)
-
-    total_w = float(st["tw"])
-    # integral weights: cumulative sums exact in doubles (n * w <= 2^53
-    # for any realistic corpus), so selection is exact with eps = 0.
-    targets = sorted((float(q) * total_w, float(q)) for q in qs)
-
-    B = _HIST_BUCKETS
-    # interval state: (lo, hi, base_cum_w, targets=[(local_target_w, q)])
-    pending = [(float(st["mn"]), float(st["mx"]), [(t, q) for t, q in targets])]
-    answers: dict[float, float] = {}
-    passes = 0
-    while pending:
-        lo, hi, tgts = pending.pop()
-        if lo == hi:
-            for _t, q in tgts:
-                answers[q] = lo
-            continue
-        passes += 1
-        if passes > _MAX_HIST_PASSES:
-            raise RuntimeError("weighted histogram selection failed to converge")
-        b = F.least(
-            F.floor((F.col("v") - F.lit(lo)) / (F.lit(hi) - F.lit(lo)) * B),
-            F.lit(B - 1),
-        ).cast("int")
-        cells = sorted(
-            (r["_b"], r["_c"], r["_sw"], r["_mn"], r["_mx"])
-            for r in src.where(F.col("v").between(F.lit(lo), F.lit(hi)))
-            .groupBy(b.alias("_b"))
-            .agg(
-                F.count("*").alias("_c"),
-                F.sum("w").alias("_sw"),
-                F.min("v").alias("_mn"),
-                F.max("v").alias("_mx"),
-            )
-            .collect()
+    if st["bad_w"]:
+        raise ValueError(
+            f"exact_weighted_quantiles: {st['bad_w']} kept weights of "
+            f"{weight_col!r} are NaN or infinite; weights must be finite"
         )
-        cum = 0.0
-        ti = 0
-        for _b, c, sw, mnb, mxb in cells:
-            picked = []
-            while ti < len(tgts) and tgts[ti][0] <= cum + sw:
-                picked.append((tgts[ti][0] - cum, tgts[ti][1]))
-                ti += 1
-            if picked:
-                if mnb == mxb:
-                    for _t, q in picked:
-                        answers[q] = mnb
-                elif c <= _COLLECT_LIMIT:
-                    pdf = (
-                        src.where(F.col("v").between(F.lit(mnb), F.lit(mxb)))
-                        .select("v", "w")
-                        .toPandas()
-                    )
-                    by_v: dict[float, float] = defaultdict(float)
-                    for vv, ww in zip(pdf["v"], pdf["w"]):
-                        by_v[float(vv)] += float(ww)
-                    cw = 0.0
-                    vi = 0
-                    vs = sorted(by_v.items())
-                    for t_local, q in picked:
-                        while vi < len(vs) and cw + vs[vi][1] < t_local:
-                            cw += vs[vi][1]
-                            vi += 1
-                        answers[q] = vs[vi][0]
-                else:
-                    pending.append((mnb, mxb, picked))
-            cum += sw
-        # float-rounding tail: a target can be left unpicked only if it
-        # exceeds the interval's total cumulative weight; integral
-        # weights make cum exact, so any leftover target belongs to the
-        # last non-empty bucket (defensive; unreachable on this path).
-        while ti < len(tgts):
-            lastb = cells[-1]
-            pending.append((lastb[3], lastb[4], [(lastb[2], tgts[ti][1])]))
-            ti += 1
 
-    rows = [(q, answers[q], total_w) for q in [float(q) for q in qs]]
+    stats = _segments(st)
+    total_w = float(sum(stats[3]))
+    # Selection tolerance (ADVICE r6, second half): with fractional
+    # weights the accumulated cumulative weight can round a few ulps
+    # below a target computed from differently-ordered sums, and an
+    # exact `cw >= target` would then select the next value (or none).
+    # ADVICE r7 refinement: a FLAT 1e-9 fraction of total weight can
+    # exceed a legitimate weight gap once total_w is large, selecting
+    # the preceding value. So: integer-valued weights (cumulative sums
+    # exact in doubles up to 2^53) get eps = 0 — exact selection; and
+    # fractional weights get an epsilon scaled to the worst-case
+    # ACCUMULATED summation error, n_rows additions each off by at
+    # most one ulp of the running total (<= ulp(total_w)). ADVICE r8:
+    # the target side (q * total_w, where total_w comes from partial
+    # sums added in a different order) carries its own comparable
+    # accumulation error, so cover BOTH sides of the comparison with
+    # 2x — still orders of magnitude below any legitimate weight gap.
+    eps = 0.0 if float(st["frac"]) == 0.0 else 2.0 * st["n"] * math.ulp(max(total_w, 1.0))
+    targets = [(float(q), float(q) * total_w - eps) for q in qs]
+    sel = _hist_rank_select(src, {0: (stats, {t for _q, t in targets})}, mass="w")
+    rows = [(q, sel[(0, t)][0], total_w) for q, t in targets]
     return spark.createDataFrame(rows, out_schema).select(
         "q", f32(F.col("wq")).alias("wq"), "total_weight"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Range-shuffle forms (rounds 11-12) — kept as the NaN/Inf and
-# fractional-weight fallbacks. Two-pass partition-offset addressing:
-# range-repartition, per-(partition, group) counts to the driver, one
-# window bounded by PARTITION size, broadcast target join. See git
-# history for the full derivation; the lazy localCheckpoints pin the
-# narrow projection so the RangePartitioner's sampling job and the
-# shuffle don't each re-run the caller's upstream.
-# ---------------------------------------------------------------------------
-
-
-def _exact_group_quantiles_shuffle(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    qs: tuple[float, ...] = (0.25, 0.5, 0.75),
-) -> DataFrame:
-    spark = df.sparkSession
-    g_type = df.schema[group_col].dataType.simpleString()
-    src = (
-        df.select(F.col(group_col).alias("g"), F.col(value_col).cast("double").alias("v"))
-        .where(F.col("v").isNotNull())
-        .localCheckpoint(eager=False)
-    )
-    nparts = max(spark.sparkContext.defaultParallelism, 2)
-    s = src.repartitionByRange(nparts, "g", "v").localCheckpoint(eager=False)
-    s = s.withColumn("pid", F.spark_partition_id())
-
-    cells = s.groupBy("pid", "g").count().collect()
-    per_g: dict = defaultdict(list)
-    for r in cells:
-        per_g[r["g"]].append((r["pid"], r["count"]))
-
-    targets, totals = [], []
-    for g, gcells in per_g.items():
-        gcells.sort()  # pid order == ascending (g, v) range order
-        n = sum(c for _, c in gcells)
-        totals.append((g, n))
-        offs, off = [], 0
-        for pid, c in gcells:
-            offs.append((pid, off, c))
-            off += c
-        for q in qs:
-            r = q * (n - 1)
-            lo, hi = math.floor(r), math.ceil(r)
-            frac = r - lo
-            picks = [(lo, 1.0 - frac)] + ([(hi, frac)] if hi != lo else [])
-            for rank, wgt in picks:
-                for pid, start, c in offs:
-                    if start <= rank < start + c:
-                        targets.append((pid, g, rank - start, float(q), wgt))
-                        break
-
-    tdf = F.broadcast(
-        spark.createDataFrame(
-            targets, f"pid int, g {g_type}, lr long, q double, w double"
-        )
-    )
-    ndf = F.broadcast(spark.createDataFrame(totals, f"g {g_type}, n long"))
-
-    lr = F.row_number().over(W.partitionBy("pid", "g").orderBy("v")) - 1
-    picked = s.withColumn("lr", lr.cast("long")).join(tdf, ["pid", "g", "lr"])
-    agg = [
-        f32(F.sum(F.when(F.col("q") == qv, F.col("w") * F.col("v")))).alias(
-            f"p{int(round(qv * 100))}"
-        )
-        for qv in qs
-    ]
-    return (
-        picked.groupBy("g")
-        .agg(*agg)
-        .join(ndf, "g")
-        .select(F.col("g").alias(group_col), "n", *[f"p{int(round(q * 100))}" for q in qs])
-    )
-
-
-def _exact_group_rank_values_shuffle(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    ranks_of_n,
-) -> DataFrame:
-    spark = df.sparkSession
-    g_type = df.schema[group_col].dataType.simpleString()
-    src = (
-        df.select(F.col(group_col).alias("g"), F.col(value_col).cast("double").alias("v"))
-        .where(F.col("v").isNotNull())
-        .localCheckpoint(eager=False)
-    )
-    nparts = max(spark.sparkContext.defaultParallelism, 2)
-    s = src.repartitionByRange(nparts, "g", "v").localCheckpoint(eager=False)
-    s = s.withColumn("pid", F.spark_partition_id())
-
-    cells = s.groupBy("pid", "g").count().collect()
-    per_g: dict = defaultdict(list)
-    for r in cells:
-        per_g[r["g"]].append((r["pid"], r["count"]))
-
-    targets, totals, labels = [], [], None
-    for g, gcells in per_g.items():
-        gcells.sort()
-        n = sum(c for _, c in gcells)
-        totals.append((g, n))
-        rmap = ranks_of_n(n)
-        if labels is None:
-            labels = list(rmap)
-        elif list(rmap) != labels:
-            raise ValueError(f"inconsistent rank labels: {list(rmap)} vs {labels}")
-        for label, rank in rmap.items():
-            if rank is None or not (1 <= int(rank) <= n):
-                continue
-            rank0 = int(rank) - 1
-            start = 0
-            for pid, c in gcells:
-                if start <= rank0 < start + c:
-                    targets.append((pid, g, rank0 - start, label))
-                    break
-                start += c
-
-    tdf = F.broadcast(
-        spark.createDataFrame(targets, f"pid int, g {g_type}, lr long, lbl string")
-    )
-    ndf = spark.createDataFrame(totals, f"g {g_type}, n long")
-
-    lr = F.row_number().over(W.partitionBy("pid", "g").orderBy("v")) - 1
-    picked = s.withColumn("lr", lr.cast("long")).join(tdf, ["pid", "g", "lr"])
-    agg = [
-        F.min(F.when(F.col("lbl") == label, F.col("v"))).alias(label)
-        for label in (labels or [])
-    ]
-    return (
-        ndf.join(F.broadcast(picked.groupBy("g").agg(*agg)), "g", "left")
-        .select(F.col("g").alias(group_col), "n", *(labels or []))
     )
 
 
@@ -686,8 +541,8 @@ def group_prefix_sum(
     nparts = max(spark.sparkContext.defaultParallelism, 2)
     s = (
         # pin the input so the range sampler and the shuffle don't each
-        # re-run the caller's upstream (module docstring); lazy: the
-        # sampling job itself materializes the blocks
+        # re-run the caller's upstream; lazy: the sampling job itself
+        # materializes the blocks
         df.localCheckpoint(eager=False)
         .repartitionByRange(nparts, group_col, order_col)
         .localCheckpoint(eager=False)
@@ -724,90 +579,3 @@ def group_prefix_sum(
         .drop("_pid", "_off")
     )
 
-
-def _exact_weighted_quantiles_shuffle(
-    df: DataFrame,
-    value_col: str,
-    weight_col: str,
-    qs: tuple[float, ...] = (0.25, 0.5, 0.75, 0.9, 0.99),
-) -> DataFrame:
-    spark = df.sparkSession
-    src = (
-        df.select(
-            F.col(value_col).cast("double").alias("v"),
-            F.col(weight_col).cast("double").alias("w"),
-        )
-        .where(F.col("v").isNotNull() & F.col("w").isNotNull() & (F.col("w") > 0))
-        .localCheckpoint(eager=False)
-    )
-    nparts = max(spark.sparkContext.defaultParallelism, 2)
-    s = src.repartitionByRange(nparts, "v").localCheckpoint(eager=False)
-    s = s.withColumn("pid", F.spark_partition_id())
-
-    part_stats = s.groupBy("pid").agg(
-        F.sum("w").alias("sw"),
-        F.count("*").alias("n"),
-        F.max(F.abs(F.col("w") - F.round(F.col("w")))).alias("frac"),
-    ).collect()
-    cells = sorted((r["pid"], r["sw"]) for r in part_stats)
-    n_rows = int(sum(r["n"] for r in part_stats))
-    integral_w = all(float(r["frac"] or 0.0) == 0.0 for r in part_stats)
-    total_w = float(sum(c for _, c in cells))
-    offs, off = [], 0.0
-    for pid, c in cells:
-        offs.append((pid, off))
-        off += float(c)
-    odf = F.broadcast(
-        spark.createDataFrame(offs or [(0, 0.0)], "pid int, off double")
-    )
-    # Address each target to the FIRST partition whose cumulative
-    # weight reaches it (the driver already holds the prefix sums):
-    # the min-v row for a target always lives in that partition, so the
-    # selection join probes ~|qs| partitions instead of cross-joining
-    # every row against every target.
-    targets = []
-    w_of = dict(cells)
-    for q in qs:
-        t = float(q) * total_w
-        # Fall back to the LAST partition when float rounding with
-        # non-integer weights leaves every prefix sum just short of
-        # the target (ADVICE r6): the max-cumulative-weight partition
-        # still holds the answer row, so the quantile cannot silently
-        # vanish from the output.
-        holder = offs[-1][0] if offs else 0
-        for pid, start in offs:
-            if start + float(w_of.get(pid, 0.0)) >= t:
-                holder = pid
-                break
-        targets.append((holder, float(q), t))
-    tdf = F.broadcast(
-        spark.createDataFrame(targets or [(0, 0.0, 0.0)], "pid int, q double, target double")
-    )
-    cw_local = F.sum("w").over(W.partitionBy("pid").orderBy("v"))
-    cw = s.join(odf, "pid").withColumn("cw", F.col("off") + cw_local)
-    # Selection tolerance (ADVICE r6, second half): with fractional
-    # weights the window-accumulated cw can round a few ulps below a
-    # target computed from differently-ordered driver sums, and an
-    # exact `cw >= target` would then drop the quantile row entirely.
-    # ADVICE r7 refinement: a FLAT 1e-9 fraction of total weight can
-    # exceed a legitimate weight gap once total_w is large, selecting
-    # the preceding value. So: integer-valued weights (cumulative sums
-    # exact in doubles up to 2^53) get eps = 0 — exact selection; and
-    # fractional weights get an epsilon scaled to the worst-case
-    # ACCUMULATED summation error, n_rows additions each off by at
-    # most one ulp of the running total (<= ulp(total_w)). ADVICE r8:
-    # the target side (q * total_w, where total_w comes from driver
-    # partial sums added in a different order) carries its own
-    # comparable accumulation error, so cover BOTH sides of the
-    # comparison with 2x — still orders of magnitude below any
-    # legitimate weight gap.
-    eps = 0.0 if integral_w else 2.0 * n_rows * math.ulp(max(total_w, 1.0))
-    return (
-        cw.join(tdf, "pid")
-        .where(F.col("cw") >= F.col("target") - F.lit(eps))
-        .groupBy("q")
-        .agg(
-            f32(F.min("v")).alias("wq"),
-            F.first(F.lit(total_w)).alias("total_weight"),
-        )
-    )

@@ -5,7 +5,7 @@ correct but moves EVERY row to one task (Spark warns
 ``WindowExec: No Partition Defined``) — a scale wall for entity-grain
 frames (every customer / user at 100 TB). This module is the
 distributed twin, built on the same partition-offset addressing as
-``functions.quantiles.exact_group_quantiles``:
+``functions.quantiles.group_prefix_sum``:
 
   1. range-repartition on the sort key and pin the layout (lazy
      ``localCheckpoint``) so partition ids are stable across passes —
@@ -54,7 +54,7 @@ def with_global_rank(
     # sampling job) before range partitioning: the RangePartitioner's
     # sampling job and the shuffle each evaluate their child in full,
     # so without the pin the caller's upstream (scan + joins) runs
-    # twice per call (functions/quantiles.py module docstring).
+    # twice per call.
     s = (
         df.localCheckpoint(eager=False)
         .repartitionByRange(nparts, *order_by)
@@ -122,16 +122,21 @@ def with_global_ntile(
 # ---------------------------------------------------------------------------
 
 
-def _rank_proxy(df: DataFrame, name: str, desc: bool) -> Column | None:
-    """Order-preserving, injective DOUBLE proxy for a sort-key column
-    (descending keys negate — exact for every supported type).
+# Integral-grain proxies with a magnitude at or past 2^53 can map
+# distinct keys to one double, so such keys take the shuffle form.
+_EXACT_PROXY = 2.0**53
 
-    Exactness precondition (holds for every caller's domain, documented
-    here rather than runtime-checked): the column's values, scaled to
-    their integer grain (micros for timestamps, days for dates, cents
-    for decimal(p<=15,2)), stay below 2^53 so the double is exact and
-    distinct values stay distinct. Unsupported types return None and
-    route the caller to the shuffle form.
+
+def _rank_proxy(df: DataFrame, name: str, desc: bool) -> Column | None:
+    """Order-preserving DOUBLE proxy for a sort-key column (descending
+    keys negate — exact for every supported type).
+
+    The proxy is injective while the column's values, scaled to their
+    integer grain (micros for timestamps, days for dates, cents for
+    decimal(p<=15,2)), stay below 2^53 in magnitude. A decimal wider
+    than 15 digits is unsupported; for integral-grain keys the caller
+    checks the proxy's min and max (``_EXACT_PROXY``). Unsupported
+    types return None and route the caller to the shuffle form.
     """
     dt = df.schema[name].dataType
     c = F.col(name)
@@ -141,11 +146,8 @@ def _rank_proxy(df: DataFrame, name: str, desc: bool) -> Column | None:
         p = F.unix_date(c).cast("double")
     elif isinstance(
         dt,
-        (
-            T.LongType, T.IntegerType, T.ShortType, T.ByteType,
-            T.DoubleType, T.FloatType, T.DecimalType,
-        ),
-    ):
+        (T.LongType, T.IntegerType, T.ShortType, T.ByteType, T.DoubleType, T.FloatType),
+    ) or (isinstance(dt, T.DecimalType) and dt.precision <= 15):
         p = c.cast("double")
     else:
         return None
@@ -166,7 +168,6 @@ def _ntile_boundaries(n: int, k: int) -> list[int]:
     return bounds
 
 
-
 def with_global_ntiles_cuts(
     df: DataFrame,
     specs: list[tuple[int, list[tuple[str, bool]], str]],
@@ -176,9 +177,10 @@ def with_global_ntiles_cuts(
 
     ``specs``: list of ``(n_buckets, keys, out_col)`` where ``keys`` is
     ``[(column_name, descending), ...]`` and must be a total order
-    (unique final tiebreak) over non-NULL, finite values — the same
-    contract as ``with_global_ntile``. Violations (NULL/NaN keys,
-    unsupported key types) fall back to the shuffle form per spec,
+    (unique final tiebreak) — the same contract as
+    ``with_global_ntile``. Keys the proxies cannot carry exactly
+    (NULL/NaN/±Inf values, integral-grain values at or past 2^53 in
+    magnitude, unsupported types) fall back to the shuffle form,
     decided by the same one-job stats pass the fast path needs anyway.
 
     All specs share one stats job and one level-0 selection pipeline
@@ -227,6 +229,13 @@ def with_global_ntiles_cuts(
     n = int(st["_n"])
     if n and any(int(st[f"_bad{i}"] or 0) for i in range(len(key_cols))):
         return _fallback()
+    if n and any(
+        max(abs(st[f"_mn{si}_{lvl}"]), abs(st[f"_mx{si}_{lvl}"])) >= _EXACT_PROXY
+        for si, (_k, keys, _o) in enumerate(specs)
+        for lvl, (name, _d) in enumerate(keys)
+        if not isinstance(df.schema[name].dataType, (T.DoubleType, T.FloatType))
+    ):
+        return _fallback()
 
     # Cut state per unique (spec, boundary rank): the resolved proxy
     # prefix [(level, value)], the rank within the current tie subset,
@@ -272,10 +281,9 @@ def with_global_ntiles_cuts(
                     F.lit(gids[gk]).alias("g"), v.cast("double").alias("v")
                 )
             )
+            mn, mx = float(st[f"_mn{si}_{level}"]), float(st[f"_mx{si}_{level}"])
             rank_sets[gids[gk]] = (
-                info["cnt"],
-                float(st[f"_mn{si}_{level}"]),
-                float(st[f"_mx{si}_{level}"]),
+                (info["cnt"], mn, mx, (0, info["cnt"], 0, 0)),
                 info["ranks"],
             )
         if len(entries) == 1:

@@ -46,11 +46,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, payload binary, "
-    "width int, height int, format string, n_frames int"
-)
-
 FEATURE_SCHEMA = (
     "media_id long, width int, height int, format string, "
     "payload_bytes long, checksum long, brightness double"

@@ -5,8 +5,8 @@ SQL column lists (reference ``processor/main.py:53-87`` vs ``:99-130``,
 ``:185-205`` vs ``:210-229``); here they are Spark StructTypes.
 
 Two groups:
-  1. The reference's ZTBus data model (telemetry / trips / windows /
-     results) — used by the algorithm registry and golden tests.
+  1. The reference's ZTBus window and result rows — used by the
+     algorithm registry and golden tests.
   2. The driver corpus tables under /root/testdata/sf*/ — used by the
      correctness-gated query catalog.
 """
@@ -21,70 +21,9 @@ def _f(name: str, dtype: T.DataType, nullable: bool = False) -> T.StructField:
 
 
 # --------------------------------------------------------------------------
-# 1. ZTBus model (reference processor/main.py:59-87 for telemetry,
-#    :189-205 for trips; simulator/main.py:23-33 for sim_logs;
-#    windows.py:7-37 + processor/main.py:326-337 for window events).
+# 1. ZTBus model (reference windows.py:7-37 + processor/main.py:326-337
+#    for window events).
 # --------------------------------------------------------------------------
-
-TELEMETRY = T.StructType(
-    [
-        _f("id", T.LongType()),
-        _f("trip_id", T.LongType()),
-        _f("time", T.TimestampType()),
-        _f("electric_power_demand", T.DoubleType()),
-        _f("temperature_ambient", T.DoubleType()),
-        _f("traction_brake_pressure", T.DoubleType()),
-        _f("traction_traction_force", T.DoubleType()),
-        _f("gnss_altitude", T.DoubleType(), True),
-        _f("gnss_course", T.DoubleType(), True),
-        _f("gnss_latitude", T.DoubleType(), True),
-        _f("gnss_longitude", T.DoubleType(), True),
-        _f("itcs_bus_route_id", T.LongType()),
-        _f("itcs_number_of_passengers", T.LongType()),
-        _f("itcs_stop_name", T.StringType()),
-        _f("odometry_articulation_angle", T.DoubleType()),
-        _f("odometry_steering_angle", T.DoubleType()),
-        _f("odometry_vehicle_speed", T.DoubleType()),
-        _f("odometry_wheel_speed_fl", T.DoubleType()),
-        _f("odometry_wheel_speed_fr", T.DoubleType()),
-        _f("odometry_wheel_speed_ml", T.DoubleType()),
-        _f("odometry_wheel_speed_mr", T.DoubleType()),
-        _f("odometry_wheel_speed_rl", T.DoubleType()),
-        _f("odometry_wheel_speed_rr", T.DoubleType()),
-        _f("status_door_is_open", T.BooleanType()),
-        _f("status_grid_is_available", T.BooleanType()),
-        _f("status_halt_brake_is_active", T.BooleanType()),
-        _f("status_park_brake_is_active", T.BooleanType()),
-    ]
-)
-
-TRIPS = T.StructType(
-    [
-        _f("id", T.LongType()),
-        _f("name", T.StringType()),
-        _f("bus_id", T.LongType()),
-        _f("route_id", T.LongType()),
-        _f("start_time", T.TimestampType()),
-        _f("end_time", T.TimestampType()),
-        _f("driven_distance_km", T.DoubleType()),
-        _f("energy_consumption_kwh", T.DoubleType()),
-        _f("itcs_passengers_mean", T.DoubleType()),
-        _f("itcs_passengers_min", T.LongType()),
-        _f("itcs_passengers_max", T.LongType()),
-        _f("grid_available_mean", T.DoubleType()),
-        _f("amb_temperature_mean", T.DoubleType()),
-        _f("amb_temperature_min", T.DoubleType()),
-        _f("amb_temperature_max", T.DoubleType()),
-    ]
-)
-
-SIM_LOGS = T.StructType(
-    [
-        _f("id", T.LongType()),
-        _f("start_time", T.TimestampType()),
-        _f("end_time", T.TimestampType()),
-    ]
-)
 
 # Window event stream element (reference simulator/main.py:104-112,
 # processor/main.py:326-337,356-369; FIXTURES.md A4).

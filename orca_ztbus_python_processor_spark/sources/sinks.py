@@ -25,8 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-RESULTS_COLUMNS = ("window_start", "window_end", "algorithm", "version", "payload")
-
 
 def write_time_partitioned(
     df: DataFrame,

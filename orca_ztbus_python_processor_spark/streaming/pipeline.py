@@ -17,7 +17,6 @@ kept exactly until event time passes its end + 400 s.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -209,6 +208,3 @@ def session_runs_stream(
             "n_samples",
         )
     )
-
-
-StateFactory = Callable[[], object]

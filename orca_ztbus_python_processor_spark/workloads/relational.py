@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from orca_ztbus_python_processor_spark.functions.ranks import (
-    with_global_ntile,
     with_global_ntile_cuts,
     with_global_ntiles_cuts,
 )
@@ -791,10 +790,10 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # customer count, revenue mass, share, and cumulative share ("top 10%
 # of customers hold X% of revenue"). The fact-table aggregation is
 # fully distributed (one shuffle on o_custkey); the decile assignment
-# uses functions.ranks.with_global_ntile (range-repartition →
-# partition-offset rank → bucket arithmetic), so NO stage sorts the
-# customer dimension on one task — identical NTILE semantics to the
-# oracle, billion-customer safe. The share/cum-share pass runs on the
+# uses functions.ranks.with_global_ntile_cuts (histogram-selected cut
+# keys → per-row comparison), so NO stage sorts or shuffles the
+# customer dimension — identical NTILE semantics to the oracle,
+# billion-customer safe. The share/cum-share pass runs on the
 # 10-row decile frame via broadcast self-join (bounded cardinality), so
 # the whole plan carries zero unpartitioned WindowExec nodes (pinned:
 # test_deciles_no_unpartitioned_window).
@@ -1200,10 +1199,10 @@ def fulfillment_lag_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quartiled with NTILE(4) (deterministic user_id tie-breaks),
 # composed into a 3-digit
 # segment code, then segment-level population counts. The per-user
-# aggregate is the only fact-scale pass; each quartile dimension is one
-# functions.ranks.with_global_ntile pass (range shuffle + partitioned
-# local rank + broadcast offsets) over the checkpointed user frame —
-# three distributed passes, zero single-partition sorts, identical
+# aggregate is the only fact-scale pass; the three quartile dimensions
+# share one functions.ranks.with_global_ntiles_cuts pipeline
+# (histogram-selected cut keys + per-row comparison) over the
+# checkpointed user frame — zero single-partition sorts, identical
 # NTILE semantics to the oracle (pinned:
 # test_rfm_no_unpartitioned_window). Billion-user safe.
 # --------------------------------------------------------------------------
@@ -2192,10 +2191,10 @@ def order_penny_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # median SHIPPED UNIT pay" (not the median line item) — the
 # inventory-weighted statistic pricing and data-mix decisions actually
 # need. Rides functions/quantiles.exact_weighted_quantiles: the same
-# range-repartition + scalar-offsets + bounded-window addressing as the
-# unweighted exact path, with WEIGHT prefix sums instead of row counts
-# (quantity weights are integer-valued, so every cumulative double is
-# exact and the cross-engine hash matches bit-for-bit). Quantile q =
+# histogram selection as the unweighted exact path, with per-bucket
+# WEIGHT sums instead of row counts (quantity weights are
+# integer-valued, so every cumulative double is exact and the
+# cross-engine hash matches bit-for-bit). Quantile q =
 # smallest price whose cumulative quantity reaches q * total quantity.
 # --------------------------------------------------------------------------
 WQ_QS = (0.25, 0.5, 0.75, 0.9, 0.99)
@@ -3365,8 +3364,8 @@ def copurchase_kcore_summary(
 # half and again in the second, and the (decile_h1, decile_h2)
 # transition cells (plus entering/leaving flows as decile 0) form the
 # churn/upsell picture. Both decile passes ride the distributed-rank
-# machinery (functions/ranks.with_global_ntile — range repartition +
-# scalar offsets; NO unpartitioned window at customer grain, per the
+# machinery (functions/ranks.with_global_ntile_cuts — histogram-selected
+# cut keys; NO unpartitioned window at customer grain, per the
 # catalog-wide lint policy), joined FULL OUTER on the customer. The
 # midpoint split is derived from the data (min/max order date), so the
 # query is self-contained; ntile ordering is (revenue DESC, custkey)
@@ -3406,10 +3405,6 @@ MIGRATION_DECILES = 10
     """,
 )
 def customer_decile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from orca_ztbus_python_processor_spark.functions.ranks import (  # noqa: PLC0415
-        with_global_ntile,
-    )
-
     orders = _t(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
@@ -3757,8 +3752,8 @@ def copurchase_local_clustering_histogram(
 #
 # Scale shape (VERDICT r11 #2 lint rewrite): the four order statistics
 # per priority come from functions.quantiles.exact_group_rank_values —
-# range-partitioned (priority, price) cells, per-cell counts to the
-# driver, one window bounded by PARTITION size, broadcast label pick.
+# histogram selection over (priority, price): per-bucket counts to the
+# driver, no sort or shuffle of the orders.
 # The previous form ranked the whole corpus through a 5-value-key
 # window (each reducer sorting ~20% of orders at 100x). The rank
 # formulas are pure floor/ceil/sqrt double arithmetic, bit-identical
@@ -5163,10 +5158,10 @@ def gini_stump_split_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines, at the f32 boundary.
 #
 # Scale shape (VERDICT r11 #1 rewrite): the train-half P90 runs on
-# functions.quantiles.exact_group_rank_value — range-partitioned
-# (priority, price) cells, per-cell counts to the driver, one window
-# bounded by PARTITION size, broadcast target pick. The previous form
-# sorted each priority's whole train half through a single task
+# functions.quantiles.exact_group_rank_value — histogram selection
+# over (priority, price): per-bucket counts to the driver, no sort or
+# shuffle of the train half. The previous form sorted each
+# priority's whole train half through a single task
 # (Window.partitionBy on a 5-value key — five reducers at 100x). The
 # test half stays a map-combinable rollup joined against the 5-row q
 # table (broadcast).
@@ -5220,7 +5215,7 @@ def pinball_loss_p90_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = orders.agg(F.min("o_orderdate"), F.max("o_orderdate")).first()
     mid = lo + timedelta(days=(hi - lo).days // 2)
     train = orders.where(F.col("o_orderdate") <= F.lit(mid))
-    # ceil-rank P90 via the range-partitioned order statistic — both
+    # ceil-rank P90 via the histogram-selected order statistic — both
     # engines compute ceil(0.9 * n) in IEEE doubles, identical result.
     q = exact_group_rank_value(
         train,
@@ -5726,8 +5721,8 @@ def tree_depth2_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: model = one map-combinable ~12-row cell rollup,
 # broadcast back into the test scan; deciles via
-# functions.ranks.with_global_ntile (range-partitioned rank, no
-# single-task sort); the cumulative window runs on the 10-row
+# functions.ranks.with_global_ntile_cuts (histogram-selected cut keys,
+# no single-task sort); the cumulative window runs on the 10-row
 # decile-grain aggregate (whitelisted bounded frame).
 # --------------------------------------------------------------------------
 @CATALOG.query(

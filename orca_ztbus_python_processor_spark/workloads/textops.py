@@ -2750,11 +2750,10 @@ def boilerplate_shingle_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # n_chars per source against the corpus decile grid, with per-decile
 # ratios. The "is this source's length profile shifted" curation
 # diagnostic, the tabular form of a QQ plot. Both sides ride
-# functions.quantiles.exact_group_quantiles — range-repartition +
-# scalar counts matrix + partition-bounded local-rank windows, NO
-# per-group value buffer (F.percentile's buffer is the documented
-# scale wall at corpus grain) — so the plan survives sources of any
-# size. Interpolation is quantile_cont semantics on both engines;
+# functions.quantiles.exact_group_quantiles — histogram selection with
+# per-bucket counts to the driver, NO per-group value buffer
+# (F.percentile's buffer is the documented scale wall at corpus
+# grain) — so the plan survives sources of any size. Interpolation is quantile_cont semantics on both engines;
 # the decile melt and ratio arithmetic run on |sources| x 9 rows.
 # --------------------------------------------------------------------------
 QQ_DECILES = (0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)

@@ -172,10 +172,10 @@ def value_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # values into ONE aggregation buffer (right at per-key grain, a wall at
 # corpus grain — measured 15x wall at 10x data), and approx_percentile
 # trades error for scale. This entry computes the SAME exact
-# interpolated quantiles with the two-pass distributed order-statistic
-# in functions/quantiles.py: range partition + scalar counts matrix +
-# window rank-pick; every stage bounded by partition size, never group
-# size. Oracle: DuckDB quantile_cont — identical semantics.
+# interpolated quantiles with the distributed order statistic in
+# functions/quantiles.py: histogram selection, per-bucket counts to
+# the driver and a bounded fetch; no stage holds a whole group.
+# Oracle: DuckDB quantile_cont — identical semantics.
 # --------------------------------------------------------------------------
 @CATALOG.query(
     "value_quantiles_distributed",
@@ -2911,8 +2911,8 @@ def value_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The dual of value_histogram_equiwidth, and the profiling primitive
 # behind range-partition boundary planning. Bucket assignment is exact
 # SQL NTILE over the TOTAL order (value, event_id) — computed with the
-# distributed-rank machinery (functions.ranks.with_global_ntile: range
-# shuffle + partitioned local row_number + broadcast offsets), never an
+# distributed-rank machinery (functions.ranks.with_global_ntile_cuts:
+# histogram-selected cut keys + per-row comparison), never an
 # unpartitioned window sort (docs/SCALE.md global-window policy; the
 # catalog-wide lint applies).
 # --------------------------------------------------------------------------
@@ -4762,11 +4762,10 @@ def fdr_bh_type_hour_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape (VERDICT r11 #2 lint rewrite): both order statistics
 # (center rank ceil(n/2), threshold rank ceil((n+1)*0.9)) come from
-# functions.quantiles.exact_group_rank_value — range-partitioned
-# (type, value) cells, per-cell counts to the driver, windows bounded
-# by PARTITION size. The previous form ran FOUR |types|-key window
-# passes over the corpus (each reducer sorting ~1/|types| of events at
-# 100x). The k > n corner (threshold rank beyond the group) yields
+# functions.quantiles.exact_group_rank_value — histogram selection
+# over (type, value): per-bucket counts to the driver, no window. The
+# previous form ran FOUR |types|-key window passes over the corpus
+# (each reducer sorting ~1/|types| of events at 100x). The k > n corner (threshold rank beyond the group) yields
 # NULL on both engines — the operator skips out-of-range targets, the
 # oracle's CASE never fires. Coverage stays a map-combinable rollup
 # against the |types|-row broadcast.

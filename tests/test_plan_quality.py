@@ -819,10 +819,8 @@ def test_catalog_wide_low_cardinality_window_lint(spark, catalog):
 
 def test_pinball_p90_no_low_cardinality_window(spark, catalog):
     """pinball_loss_p90_eval (VERDICT r11 #1): the train-half P90 must
-    run on the range-partitioned order statistic — zero unpartitioned
-    windows, zero priority-keyed corpus-grain windows; the only window
-    is the machinery's (pid, g) cell-rank pass, bounded by partition
-    size."""
+    run on the histogram-selected order statistic — zero unpartitioned
+    windows, zero priority-keyed corpus-grain windows."""
     df = catalog.queries["pinball_loss_p90_eval"](spark, SMOKE_SF_DIR)
     assert _unpartitioned_windows(df) == 0
     assert _low_card_windows(spark, df) == []
@@ -1178,9 +1176,8 @@ def test_penny_allocation_one_key_exchange(spark, catalog):
 
 
 def test_weighted_quantiles_no_global_window(spark, catalog):
-    """Weighted quantiles ride the range-repartition + pid-window
-    addressing: zero unpartitioned windows (each window cell is bounded
-    by partition size), targets enter via broadcast."""
+    """Weighted quantiles ride histogram selection: zero unpartitioned
+    windows (no window at all), no row-at-a-time Python."""
     df = catalog.queries["weighted_price_quantiles"](spark, SMOKE_SF_DIR)
     assert _unpartitioned_windows(df) == 0
     plan = _plan(spark, df)

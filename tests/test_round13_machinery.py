@@ -6,7 +6,7 @@ Each optimized operator is differentially pinned against an
 independent reference — pandas/numpy order statistics for the
 selection core, the proven range-shuffle ``with_global_ntile`` for the
 cut form — on adversarial shapes: heavy ties, n < k, single row,
-descending keys, multi-spec batching, NaN fallback routing, and the
+descending keys, multi-spec batching, NaN values, and the
 driver-collect cardinality guard.
 """
 
@@ -109,11 +109,24 @@ def test_exact_weighted_quantiles_integral_weights(spark):
 
 
 def test_nan_values_route_to_shuffle_fallback(spark):
+    """NaN values take their place in Spark's order (greatest) inside
+    histogram selection, matching F.percentile. The id predates the
+    one selection path, when NaN routed to a range-shuffle form."""
     rows = [("a", 1.0), ("a", float("nan")), ("a", 3.0), ("b", 2.0)]
     df = spark.createDataFrame(rows, "g string, v double")
-    out = exact_group_quantiles(df, "g", "v", qs=(0.5,)).toPandas()
-    # the shuffle form computes; NaN sorts greatest in Spark
-    assert set(out["g"]) == {"a", "b"}
+    out = exact_group_quantiles(df, "g", "v", qs=(0.5, 1.0)).toPandas().set_index("g")
+    assert set(out.index) == {"a", "b"}
+    # a sorts as 1, 3, NaN: the median is 3 and the max NaN
+    assert out.loc["a", "n"] == 3 and out.loc["a", "p50"] == 3.0
+    assert math.isnan(out.loc["a", "p100"])
+    assert out.loc["b", "p50"] == out.loc["b", "p100"] == 2.0
+    ref = {
+        r["g"]: r["p50"]
+        for r in df.groupBy("g")
+        .agg(F.percentile("v", F.lit(0.5)).cast("float").alias("p50"))
+        .collect()
+    }
+    assert ref == out["p50"].to_dict()
 
 
 def test_group_guard_message():
