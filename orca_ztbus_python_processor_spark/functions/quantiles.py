@@ -39,6 +39,10 @@ cross the network are "n_intervals x B scalars per pass", never the
 column. Results are EXACTLY the values at the requested ranks of the
 sorted multiset in Spark's order, NaN/±Inf included — the values
 ``F.percentile`` and a sort pick.
+
+``range_prefix_sum`` is the module's one range-shuffle routine: exact
+running sums (``group_prefix_sum``, and ``ranks.with_global_rank`` as
+its unit-value case) that need every row, not a selected value.
 """
 
 from __future__ import annotations
@@ -47,7 +51,7 @@ import math
 from collections import defaultdict
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -513,6 +517,68 @@ def exact_weighted_quantiles(
     )
 
 
+def range_prefix_sum(
+    df: DataFrame,
+    groups: list[str],
+    order_by: list[Column],
+    value: Column,
+    out_col: str,
+) -> tuple[DataFrame, int]:
+    """EXCLUSIVE running sum of the integer ``value`` per ``groups``
+    key in ``order_by`` order, distributed, and the total of ``value``.
+
+    A ``Window.partitionBy(groups)`` cumsum funnels each group through
+    one task; this range-partitions (groups, order), sends
+    per-(partition, group) SUMS to the driver (n_partitions x n_groups
+    integers — exact, order-independent), broadcasts the prefix offsets
+    back, and finishes with one window bounded by PARTITION size.
+    Integer sums make every partial exact, so the result is
+    bit-identical to the single-task form. ``order_by`` must be a total
+    order within each group. Output: the input columns plus
+    ``<out_col>`` (long).
+    """
+    spark = df.sparkSession
+    nparts = max(spark.sparkContext.defaultParallelism, 2)
+    s = (
+        # pin the input so the range sampler and the shuffle don't each
+        # re-run the caller's upstream; lazy: the sampling job itself
+        # materializes the blocks
+        df.localCheckpoint(eager=False)
+        .repartitionByRange(nparts, *groups, *order_by)
+        .localCheckpoint(eager=False)
+        .withColumn("_pid", F.spark_partition_id())
+    )
+    v = value.cast("long")
+
+    # Pass 1: per-(partition, group) sums — the only driver traffic.
+    per_g: dict = defaultdict(list)
+    for r in s.groupBy("_pid", *groups).agg(F.sum(v).alias("_sw")).collect():
+        per_g[tuple(r[g] for g in groups)].append((r["_pid"], int(r["_sw"] or 0)))
+    offs, total = [], 0
+    for g, gcells in per_g.items():
+        off = 0
+        for pid, sw in sorted(gcells):  # pid order == ascending range order
+            offs.append((pid, *g, off))
+            off += sw
+        total += off
+    g_types = [f"{g} {df.schema[g].dataType.simpleString()}" for g in groups]
+    odf = F.broadcast(
+        spark.createDataFrame(offs, ", ".join(["_pid int", *g_types, "_off long"]))
+    )
+
+    # Pass 2: local exclusive cumsum within each (partition, group)
+    # cell — bounded by partition size — plus the broadcast offset.
+    w = W.partitionBy("_pid", *groups).orderBy(*order_by).rowsBetween(
+        W.unboundedPreceding, 0
+    )
+    out = (
+        s.join(odf, ["_pid", *groups])
+        .withColumn(out_col, F.col("_off") + F.sum(v).over(w) - v)
+        .drop("_pid", "_off")
+    )
+    return out, total
+
+
 def group_prefix_sum(
     df: DataFrame,
     group_col: str,
@@ -521,61 +587,12 @@ def group_prefix_sum(
     out_col: str = "prefix_sum",
 ) -> DataFrame:
     """EXCLUSIVE per-group running sum of an INTEGER-valued column in
-    ``order_col`` order, distributed — the prefix-sum sibling of
-    ``exact_group_rank_values`` for corpus-grain cumulative layouts
-    (sequence packing, offset assignment) keyed by a low-cardinality
-    group: a ``Window.partitionBy(group)`` cumsum funnels each group
-    through one task; this range-partitions (group, order), sends
-    per-(partition, group) SUMS to the driver (n_partitions x n_groups
-    integers — exact, order-independent), broadcasts the prefix
-    offsets back, and finishes with one window bounded by PARTITION
-    size. Integer sums make every partial exact, so the result is
-    bit-identical to the single-task form.
-
-    Output: the input columns plus ``<out_col>`` (long). ``order_col``
-    must be unique within each group (a doc/event id), so the layout
-    is total and engine-portable.
-    """
-    spark = df.sparkSession
-    g_type = df.schema[group_col].dataType.simpleString()
-    nparts = max(spark.sparkContext.defaultParallelism, 2)
-    s = (
-        # pin the input so the range sampler and the shuffle don't each
-        # re-run the caller's upstream; lazy: the sampling job itself
-        # materializes the blocks
-        df.localCheckpoint(eager=False)
-        .repartitionByRange(nparts, group_col, order_col)
-        .localCheckpoint(eager=False)
-        .withColumn("_pid", F.spark_partition_id())
+    ``order_col`` order (``range_prefix_sum``), for corpus-grain
+    cumulative layouts (sequence packing, offset assignment) keyed by a
+    low-cardinality group. ``order_col`` must be unique within each
+    group (a doc/event id), so the layout is total and
+    engine-portable."""
+    cum, _total = range_prefix_sum(
+        df, [group_col], [F.col(order_col)], F.col(value_col), out_col
     )
-
-    # Pass 1: per-(partition, group) sums — the only driver traffic.
-    cells = s.groupBy("_pid", group_col).agg(
-        F.sum(F.col(value_col).cast("long")).alias("_sw")
-    ).collect()
-    per_g: dict = defaultdict(list)
-    for r in cells:
-        per_g[r[group_col]].append((r["_pid"], int(r["_sw"] or 0)))
-    offs = []
-    for g, gcells in per_g.items():
-        gcells.sort()  # pid order == ascending (g, order) range order
-        off = 0
-        for pid, sw in gcells:
-            offs.append((pid, g, off))
-            off += sw
-    odf = F.broadcast(
-        spark.createDataFrame(offs, f"_pid int, {group_col} {g_type}, _off long")
-    )
-
-    # Pass 2: local exclusive cumsum within each (partition, group)
-    # cell — bounded by partition size — plus the broadcast offset.
-    w = W.partitionBy("_pid", group_col).orderBy(order_col).rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    local = F.sum(F.col(value_col).cast("long")).over(w) - F.col(value_col)
-    return (
-        s.join(odf, ["_pid", group_col])
-        .withColumn(out_col, F.col("_off") + local)
-        .drop("_pid", "_off")
-    )
-
+    return cum

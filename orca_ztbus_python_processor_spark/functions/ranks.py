@@ -1,39 +1,58 @@
-"""Distributed global rank / ntile without a single-partition sort.
+"""Exact global NTILE and rank without a single-partition sort.
 
 ``F.ntile(k).over(Window.orderBy(...))`` with no ``partitionBy`` is
 correct but moves EVERY row to one task (Spark warns
 ``WindowExec: No Partition Defined``) — a scale wall for entity-grain
-frames (every customer / user at 100 TB). This module is the
-distributed twin, built on the same partition-offset addressing as
-``functions.quantiles.group_prefix_sum``:
+frames (every customer / user at 100 TB).
 
-  1. range-repartition on the sort key and pin the layout (lazy
-     ``localCheckpoint``) so partition ids are stable across passes —
-     range partitioning means pid order == global sort order;
-  2. count rows per partition (n_partitions scalars, the only driver
-     traffic), prefix-sum them into per-partition rank offsets;
-  3. one PARTITIONED window (``partitionBy(pid)``) assigns local row
-     numbers — each window cell is bounded by partition size — and a
-     broadcast offset join yields the exact global 0-based rank;
-  4. ntile bucket = integer arithmetic on the rank: with n rows and k
-     buckets, the first ``n % k`` buckets hold ``n // k + 1`` rows, the
-     rest ``n // k`` — exactly SQL NTILE (DuckDB/Spark agree).
+NTILE (``with_global_ntiles_cuts``) has one path. The k-1 CUT KEYS —
+the sort keys of the rows at the NTILE boundary ranks — come from
+histogram rank selection (``functions.quantiles._hist_rank_select``:
+aggregation passes, no shuffle), and a row's bucket is 1 plus the
+number of cut keys it sorts after, by codegen comparison against the
+cut-key literals. The frame itself is never shuffled. Every sort key
+maps to exact DOUBLE proxy levels, compared lexicographically:
 
-The caller MUST pass a total order (include a unique tie-break column),
-both for deterministic output and because rows with equal sort keys
-must not straddle a range-partition boundary with different ranks.
+  * the value level: the value for floating and decimal(p<=15) keys,
+    the integer grain (micros, days) for timestamps, dates and
+    integers;
+  * a leading CLASS level when the key holds NULL, NaN or ±Inf —
+    NULL 0, -Inf 1, finite 2, +Inf 3, NaN 4, Spark's ``asc()`` order
+    (NULLS FIRST) — with the value level 0 for the non-finite rows;
+  * an integral value at or past 2^53 in magnitude, which one double
+    cannot carry, splits into ``(x >> 32, x & 0xFFFFFFFF)``.
 
-SURVEY.md §2 O3/W-family at entity grain; replaces the round-5
-unpartitioned-ntile plans flagged in VERDICT.md round 5 ("What's
-wrong" #1/#2).
+A descending key negates every level, which gives Spark's ``desc()``
+order (NULLS LAST, NaN greatest). The one stats job the selection needs
+anyway decides which levels each key gets, so a clean key is a single
+level. SQL NTILE semantics: with n rows and k buckets the first
+``n % k`` buckets hold ``n // k + 1`` rows, the rest ``n // k``.
+
+The exact global rank (``with_global_rank``) is the unit-value,
+single-group case of ``functions.quantiles.range_prefix_sum``.
+
+The caller MUST pass a total order (include a unique tie-break
+column), so the output is deterministic.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window as W
+
+from orca_ztbus_python_processor_spark.functions.quantiles import (
+    _hist_rank_select,
+    range_prefix_sum,
+)
+
+# Integral-grain values at or past 2^53 in magnitude can map distinct
+# keys to one double, so such keys split into two exact 32-bit levels.
+_EXACT_PROXY = 2**53
+_FLOATING = (T.DoubleType, T.FloatType)
+_INTEGRAL = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
 
 
 def with_global_rank(
@@ -41,117 +60,74 @@ def with_global_rank(
     order_by: list[Column],
     out_col: str = "rank0",
 ) -> tuple[DataFrame, int]:
-    """Add an exact global 0-based rank column under ``order_by``.
-
-    Returns ``(df_with_rank, n_rows)`` — ``n_rows`` is known for free
-    from the per-partition counts pass, and every ntile/decile caller
-    needs it. All input columns are preserved; no stage holds more
-    than one range partition.
-    """
-    spark = df.sparkSession
-    nparts = max(spark.sparkContext.defaultParallelism, 2)
-    # Pin the input once (lazy localCheckpoint, materialized by the
-    # sampling job) before range partitioning: the RangePartitioner's
-    # sampling job and the shuffle each evaluate their child in full,
-    # so without the pin the caller's upstream (scan + joins) runs
-    # twice per call.
-    s = (
-        df.localCheckpoint(eager=False)
-        .repartitionByRange(nparts, *order_by)
-        .localCheckpoint(eager=False)
-    )
-    s = s.withColumn("_pid", F.spark_partition_id())
-
-    # Per-partition counts: n_partitions scalars — the only driver
-    # traffic. pid order == ascending order_by range order.
-    cells = sorted(
-        ((r["_pid"], r["count"]) for r in s.groupBy("_pid").count().collect())
-    )
-    n = sum(c for _, c in cells)
-    offs, off = [], 0
-    for pid, c in cells:
-        offs.append((pid, off))
-        off += c
-    odf = F.broadcast(spark.createDataFrame(offs or [(0, 0)], "_pid int, _off long"))
-
-    local = F.row_number().over(W.partitionBy("_pid").orderBy(*order_by))
-    ranked = (
-        s.withColumn("_lr", local.cast("long") - 1)
-        .join(odf, "_pid")
-        .withColumn(out_col, F.col("_lr") + F.col("_off"))
-        .drop("_pid", "_lr", "_off")
-    )
-    return ranked, n
+    """Add an exact global 0-based rank column under ``order_by`` (a
+    total order). Returns ``(df_with_rank, n_rows)``; all input
+    columns are preserved and no stage holds more than one range
+    partition."""
+    return range_prefix_sum(df, [], order_by, F.lit(1), out_col)
 
 
-def with_global_ntile(
-    df: DataFrame,
-    n_buckets: int,
-    order_by: list[Column],
-    out_col: str,
-) -> DataFrame:
-    """Add an exact NTILE(n_buckets) column under ``order_by`` — SQL
-    semantics (first ``n % k`` buckets one row larger), no
-    single-partition sort. ``order_by`` must be a total order.
-    """
-    ranked, n = with_global_rank(df, order_by, "_r0")
-    q, rem = divmod(n, n_buckets)
-    r0 = F.col("_r0")
-    if q == 0:
-        # Fewer rows than buckets: bucket i gets row i.
-        bucket = r0 + 1
-    else:
-        head = rem * (q + 1)  # rows covered by the (q+1)-sized buckets
-        bucket = (
-            F.when(r0 < head, F.floor(r0 / (q + 1)))
-            .otherwise(rem + F.floor((r0 - head) / q))
-            + 1
-        )
-    return ranked.withColumn(out_col, bucket.cast("int")).drop("_r0")
-
-
-# ---------------------------------------------------------------------------
-# Boundary-broadcast NTILE (round 13, VERDICT r12 #6): compute the k-1
-# CUT KEYS via histogram rank selection (functions/quantiles.py — pure
-# aggregation passes, no shuffle), then assign each row's bucket by pure
-# codegen comparison against the cut-key literals. The entity-grain
-# frame is never shuffled at all: the range shuffle + window + offset
-# join of ``with_global_ntile`` collapse into 2-4 scalar-aggregation
-# jobs shared by EVERY ntile dimension of the query, plus one
-# comparison projection.
-# ---------------------------------------------------------------------------
-
-
-# Integral-grain proxies with a magnitude at or past 2^53 can map
-# distinct keys to one double, so such keys take the shuffle form.
-_EXACT_PROXY = 2.0**53
-
-
-def _rank_proxy(df: DataFrame, name: str, desc: bool) -> Column | None:
-    """Order-preserving DOUBLE proxy for a sort-key column (descending
-    keys negate — exact for every supported type).
-
-    The proxy is injective while the column's values, scaled to their
-    integer grain (micros for timestamps, days for dates, cents for
-    decimal(p<=15,2)), stay below 2^53 in magnitude. A decimal wider
-    than 15 digits is unsupported; for integral-grain keys the caller
-    checks the proxy's min and max (``_EXACT_PROXY``). Unsupported
-    types return None and route the caller to the shuffle form.
-    """
+def _key_base(df: DataFrame, name: str) -> Column:
+    """Order-preserving exact base expression of a sort key: the
+    integer grain for timestamps (micros), dates (days) and integers,
+    the double value for floating keys and decimals of at most 15
+    digits (which doubles carry exactly). Other types raise
+    ``TypeError``."""
     dt = df.schema[name].dataType
     c = F.col(name)
     if isinstance(dt, T.TimestampType):
-        p = F.unix_micros(c).cast("double")
-    elif isinstance(dt, T.DateType):
-        p = F.unix_date(c).cast("double")
-    elif isinstance(
-        dt,
-        (T.LongType, T.IntegerType, T.ShortType, T.ByteType, T.DoubleType, T.FloatType),
-    ) or (isinstance(dt, T.DecimalType) and dt.precision <= 15):
-        p = c.cast("double")
+        return F.unix_micros(c)
+    if isinstance(dt, T.DateType):
+        return F.unix_date(c)
+    if isinstance(dt, _INTEGRAL):
+        return c
+    if isinstance(dt, _FLOATING) or (isinstance(dt, T.DecimalType) and dt.precision <= 15):
+        return c.cast("double")
+    raise TypeError(
+        f"with_global_ntiles_cuts: key {name!r} has type {dt.simpleString()}; "
+        "supported key types are timestamp, date, long, int, short, byte, "
+        "double, float and decimal with precision <= 15"
+    )
+
+
+def _finite(df: DataFrame, name: str) -> Column:
+    """True for the rows whose key is neither NULL nor NaN/±Inf."""
+    c = F.col(name)
+    if isinstance(df.schema[name].dataType, _FLOATING):
+        return c.isNotNull() & ~F.isnan(c) & (F.abs(c) != math.inf)
+    return c.isNotNull()
+
+
+def _key_levels(df: DataFrame, name: str, st, i: int) -> list:
+    """Ascending proxy levels ``[(expr, lo, hi)]`` of key ``name``
+    (module docstring) from its stats-job cells: ``_bad{i}`` counts its
+    NULL/NaN/±Inf rows, ``_mn{i}``/``_mx{i}`` span its finite base
+    values. ``[lo, hi]`` spans every row's level value."""
+    c = F.col(name)
+    base, fin = _key_base(df, name), _finite(df, name)
+    # no finite value (empty, or every row NULL/NaN/±Inf): span [0, 0]
+    mn, mx = (0, 0) if st[f"_mn{i}"] is None else (st[f"_mn{i}"], st[f"_mx{i}"])
+    integral = not isinstance(df.schema[name].dataType, (*_FLOATING, T.DecimalType))
+    if integral and max(-mn, mx) >= _EXACT_PROXY:
+        x = base.cast("long")
+        vals = [
+            (F.shiftright(x, 32), mn >> 32, mx >> 32),
+            (x.bitwiseAND(F.lit(0xFFFFFFFF)), 0, 0xFFFFFFFF),
+        ]
     else:
-        return None
-    return (-p) if desc else p
+        vals = [(base, mn, mx)]
+    if not st[f"_bad{i}"]:
+        return [(e.cast("double"), float(lo), float(hi)) for e, lo, hi in vals]
+    cls = F.when(c.isNull(), 0)
+    if isinstance(df.schema[name].dataType, _FLOATING):
+        cls = cls.when(F.isnan(c), 4).when(c == -math.inf, 1).when(c == math.inf, 3)
+    levels = [(cls.otherwise(2).cast("double"), 0.0, 4.0)]
+    for e, lo, hi in vals:
+        # non-finite rows hold 0, so the span takes 0 in
+        levels.append(
+            (F.when(fin, e.cast("double")).otherwise(0.0), float(min(lo, 0)), float(max(hi, 0)))
+        )
+    return levels
 
 
 def _ntile_boundaries(n: int, k: int) -> list[int]:
@@ -172,87 +148,61 @@ def with_global_ntiles_cuts(
     df: DataFrame,
     specs: list[tuple[int, list[tuple[str, bool]], str]],
 ) -> DataFrame:
-    """Add one exact NTILE column per spec — SQL semantics, no shuffle
-    of ``df`` anywhere (header comment).
+    """Add one exact NTILE column per spec — SQL semantics, Spark's
+    ``asc()``/``desc()`` order, no shuffle of ``df`` (module docstring).
 
     ``specs``: list of ``(n_buckets, keys, out_col)`` where ``keys`` is
     ``[(column_name, descending), ...]`` and must be a total order
-    (unique final tiebreak) — the same contract as
-    ``with_global_ntile``. Keys the proxies cannot carry exactly
-    (NULL/NaN/±Inf values, integral-grain values at or past 2^53 in
-    magnitude, unsupported types) fall back to the shuffle form,
-    decided by the same one-job stats pass the fast path needs anyway.
+    (unique final tiebreak). A key of an unsupported type (string,
+    boolean, decimal wider than 15 digits) raises ``TypeError``.
 
     All specs share one stats job and one level-0 selection pipeline
     (stacked by dimension), so a 3-dimension RFM scoring costs the same
     scans as a single ntile; deeper levels only run for cut keys whose
-    earlier columns tie at the boundary, over tie-sized subsets.
+    earlier levels tie at the boundary, over tie-sized subsets.
     """
-    from orca_ztbus_python_processor_spark.functions.quantiles import (  # noqa: PLC0415
-        _hist_rank_select,
-    )
-
-    def _fallback() -> DataFrame:
-        out = df
-        for n_buckets, keys, out_col in specs:
-            order = [
-                (F.col(nm).desc() if d else F.col(nm).asc()) for nm, d in keys
-            ]
-            out = with_global_ntile(out, n_buckets, order, out_col)
-        return out
-
-    # Proxy columns per spec per level; unsupported type -> fallback.
-    proxies: list[list[Column]] = []
-    for _k, keys, _out in specs:
-        ps = [_rank_proxy(df, name, desc) for name, desc in keys]
-        if any(p is None for p in ps):
-            return _fallback()
-        proxies.append(ps)
-
-    # ONE stats job: row count, per-key NULL/NaN/Inf detection, and
-    # global (min, max) of EVERY level's proxy — so no later level
+    # ONE stats job: row count, and per key column its NULL/NaN/±Inf
+    # count and the (min, max) of its finite base values — so no level
     # needs its own stats pass (a subset interval only has to SPAN the
     # subset; the selection counts actual rows).
     aggs = [F.count(F.lit(1)).alias("_n")]
     key_cols = sorted({name for _k, keys, _o in specs for name, _d in keys})
     for i, name in enumerate(key_cols):
-        c = F.col(name)
-        bad = c.isNull()
-        if isinstance(df.schema[name].dataType, (T.DoubleType, T.FloatType)):
-            bad = bad | F.isnan(c) | (F.abs(c) == float("inf"))
-        aggs.append(F.sum(bad.cast("long")).alias(f"_bad{i}"))
-    for si, ps in enumerate(proxies):
-        for lvl, p in enumerate(ps):
-            aggs.append(F.min(p).alias(f"_mn{si}_{lvl}"))
-            aggs.append(F.max(p).alias(f"_mx{si}_{lvl}"))
+        base, fin = _key_base(df, name), _finite(df, name)
+        aggs.append(F.count(F.when(~fin, 1)).alias(f"_bad{i}"))
+        aggs.append(F.min(F.when(fin, base)).alias(f"_mn{i}"))
+        aggs.append(F.max(F.when(fin, base)).alias(f"_mx{i}"))
     st = df.agg(*aggs).first()
     n = int(st["_n"])
-    if n and any(int(st[f"_bad{i}"] or 0) for i in range(len(key_cols))):
-        return _fallback()
-    if n and any(
-        max(abs(st[f"_mn{si}_{lvl}"]), abs(st[f"_mx{si}_{lvl}"])) >= _EXACT_PROXY
-        for si, (_k, keys, _o) in enumerate(specs)
-        for lvl, (name, _d) in enumerate(keys)
-        if not isinstance(df.schema[name].dataType, (T.DoubleType, T.FloatType))
-    ):
-        return _fallback()
+    key_levels = {name: _key_levels(df, name, st, i) for i, name in enumerate(key_cols)}
+
+    # Per spec, its keys' levels in order; a descending key negates.
+    proxies: list[list[Column]] = []
+    spans: list[list[tuple[float, float]]] = []
+    for _k, keys, _out in specs:
+        lv = [
+            (-e, -hi, -lo) if desc else (e, lo, hi)
+            for name, desc in keys
+            for e, lo, hi in key_levels[name]
+        ]
+        proxies.append([e for e, _lo, _hi in lv])
+        spans.append([(lo, hi) for _e, lo, hi in lv])
 
     # Cut state per unique (spec, boundary rank): the resolved proxy
     # prefix [(level, value)], the rank within the current tie subset,
     # and that subset's row count.
     cuts: dict[tuple[int, int], dict] = {}
-    for si, (n_buckets, keys, _out) in enumerate(specs):
+    for si, (n_buckets, _keys, _out) in enumerate(specs):
         for h in set(_ntile_boundaries(n, n_buckets)):
             cuts[(si, h)] = {
                 "prefix": [], "local": h, "cnt": n, "done": n == 0,
             }
 
-    max_depth = max(len(keys) for _k, keys, _o in specs)
-    for level in range(max_depth):
+    for level in range(max(len(ps) for ps in proxies)):
         # groups this level: unique (spec, prefix) among unresolved cuts
         groups: dict[tuple, dict] = {}
         for (si, h), state in cuts.items():
-            if state["done"] or len(specs[si][1]) <= level:
+            if state["done"]:
                 continue
             gk = (si, tuple(state["prefix"]))
             g = groups.setdefault(gk, {"ranks": set(), "members": []})
@@ -281,7 +231,7 @@ def with_global_ntiles_cuts(
                     F.lit(gids[gk]).alias("g"), v.cast("double").alias("v")
                 )
             )
-            mn, mx = float(st[f"_mn{si}_{level}"]), float(st[f"_mx{si}_{level}"])
+            mn, mx = spans[si][level]
             rank_sets[gids[gk]] = (
                 (info["cnt"], mn, mx, (0, info["cnt"], 0, 0)),
                 info["ranks"],
@@ -301,9 +251,9 @@ def with_global_ntiles_cuts(
                 state = cuts[(si, h)]
                 v, n_below, n_eq = sel[(gid, state["local"])]
                 state["prefix"].append((level, v))
-                if n_eq == 1 or level + 1 >= len(specs[si][1]):
+                if n_eq == 1 or level + 1 >= len(proxies[si]):
                     # unique at this level (deeper comparison clauses
-                    # can never fire for any other row) or out of keys
+                    # can never fire for any other row) or out of levels
                     state["done"] = True
                 else:
                     state["local"] = state["local"] - n_below
@@ -314,7 +264,7 @@ def with_global_ntiles_cuts(
     # lexicographic over the resolved prefix:
     #   OR_i ( AND_{j<i} proxy_j == v_j ) AND proxy_i > v_i
     out = df
-    for si, (n_buckets, keys, out_col) in enumerate(specs):
+    for si, (n_buckets, _keys, out_col) in enumerate(specs):
         ps = proxies[si]
         bucket = F.lit(1)
         for h in _ntile_boundaries(n, n_buckets):
@@ -333,13 +283,3 @@ def with_global_ntiles_cuts(
             )
         out = out.withColumn(out_col, bucket.cast("int"))
     return out
-
-
-def with_global_ntile_cuts(
-    df: DataFrame,
-    n_buckets: int,
-    keys: list[tuple[str, bool]],
-    out_col: str,
-) -> DataFrame:
-    """Single-spec convenience wrapper over ``with_global_ntiles_cuts``."""
-    return with_global_ntiles_cuts(df, [(n_buckets, keys, out_col)])

@@ -75,6 +75,7 @@ def _dct_basis(n: int) -> np.ndarray:
 
 
 _DCT32 = _dct_basis(32)
+_DCT32.setflags(write=False)
 
 
 def _resample_rows(a: np.ndarray, m: int) -> np.ndarray:

@@ -40,6 +40,7 @@ import struct
 import wave
 import zlib
 from collections.abc import Iterator
+from types import MappingProxyType
 
 import numpy as np
 import pandas as pd
@@ -51,7 +52,7 @@ FEATURE_SCHEMA = (
     "payload_bytes long, checksum long, brightness double"
 )
 
-_FORMATS = ["png", "jpeg", "webp"]
+_FORMATS = ("png", "jpeg", "webp")
 
 
 def media_table_from_documents(docs: DataFrame) -> DataFrame:
@@ -218,7 +219,7 @@ def _decode_ppm(b: bytes, raster: bool = False) -> dict:
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # grey, RGB, grey+alpha, RGBA
+_PNG_CHANNELS = MappingProxyType({0: 1, 2: 3, 4: 2, 6: 4})  # grey, RGB, grey+alpha, RGBA
 
 
 def _png_paeth(a: int, b: int, c: int) -> int:
@@ -447,12 +448,12 @@ def _decode_gif(b: bytes, raster: bool = False) -> dict:
 # Annex K example tables; sequential DCT, Huffman entropy coding.
 # ---------------------------------------------------------------------------
 
-_JPEG_ZIGZAG = [
+_JPEG_ZIGZAG = (
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
     12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
+)
 _JPEG_QUANT_LUMA = np.array([
     16, 11, 10, 16, 24, 40, 51, 61,
     12, 12, 14, 19, 26, 58, 60, 55,
@@ -463,10 +464,11 @@ _JPEG_QUANT_LUMA = np.array([
     49, 64, 78, 87, 103, 121, 120, 101,
     72, 92, 95, 98, 112, 100, 103, 99,
 ], dtype=np.int32)
-_JPEG_DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_JPEG_DC_VALS = list(range(12))
-_JPEG_AC_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-_JPEG_AC_VALS = [
+_JPEG_QUANT_LUMA.setflags(write=False)
+_JPEG_DC_BITS = (0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
+_JPEG_DC_VALS = tuple(range(12))
+_JPEG_AC_BITS = (0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D)
+_JPEG_AC_VALS = (
     0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
     0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
     0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
@@ -482,7 +484,7 @@ _JPEG_AC_VALS = [
     0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
     0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
+)
 
 
 def _jpeg_dct_matrix() -> np.ndarray:
@@ -495,9 +497,10 @@ def _jpeg_dct_matrix() -> np.ndarray:
 
 
 _JPEG_C = _jpeg_dct_matrix()
+_JPEG_C.setflags(write=False)
 
 
-def _jpeg_huff_codes(bits: list, vals: list) -> dict:
+def _jpeg_huff_codes(bits: tuple, vals: tuple) -> dict:
     """Canonical Huffman (T.81 C.2): {symbol: (code, length)}."""
     out, code, i = {}, 0, 0
     for length in range(1, 17):
@@ -553,7 +556,7 @@ def _jpeg_category(v: int) -> int:
 def _jpeg_quantize_block(block: np.ndarray, qtab: np.ndarray) -> np.ndarray:
     """FDCT + quantize one level-shifted 8x8 block -> 64 zigzag coeffs."""
     q = np.round((_JPEG_C @ block @ _JPEG_C.T) / qtab).astype(np.int64)
-    return q.flatten()[_JPEG_ZIGZAG]
+    return np.take(q, _JPEG_ZIGZAG)
 
 
 def _jpeg_write_block(
@@ -804,7 +807,7 @@ def _encode_jpeg_progressive_gray(
         for bx in range(0, pw, 8):
             block = padded[by : by + 8, bx : bx + 8] - 128.0
             q = np.round((_JPEG_C @ block @ _JPEG_C.T) / qtab).astype(np.int64)
-            blocks.append(q.flatten()[_JPEG_ZIGZAG])
+            blocks.append(np.take(q, _JPEG_ZIGZAG))
     dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
 
@@ -1696,7 +1699,7 @@ def _decode_jpeg(b: bytes, raster: bool = False) -> dict:
         for r in range(grid.shape[0]):
             for c in range(grid.shape[1]):
                 q = np.zeros(64, dtype=np.int64)
-                q[_JPEG_ZIGZAG] = grid[r, c]
+                np.put(q, _JPEG_ZIGZAG, grid[r, c])
                 plane[r * 8 : r * 8 + 8, c * 8 : c * 8 + 8] = (
                     _JPEG_C.T @ (q.reshape(8, 8) * qtab) @ _JPEG_C + 128.0
                 )
@@ -1741,14 +1744,14 @@ def _jpeg_finish(
     }
 
 
-_REAL_DECODERS = {
+_REAL_DECODERS = MappingProxyType({
     "wav": _decode_wav,
     "bmp": _decode_bmp,
     "ppm": _decode_ppm,
     "png": _decode_png,
     "gif": _decode_gif,
     "jpeg": _decode_jpeg,
-}
+})
 
 # Image formats whose decoders can hand back the full bitmap (the
 # perceptual-hash stage consumes these; wav is audio and has none).

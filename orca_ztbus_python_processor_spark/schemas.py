@@ -13,6 +13,9 @@ Two groups:
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+from types import MappingProxyType
+
 from pyspark.sql import types as T
 
 
@@ -151,7 +154,7 @@ EMBEDDINGS = T.StructType(
     ]
 )
 
-CORPUS_TABLES: dict[str, T.StructType] = {
+CORPUS_TABLES: Mapping[str, T.StructType] = MappingProxyType({
     "region": REGION,
     "nation": NATION,
     "customer": CUSTOMER,
@@ -162,4 +165,4 @@ CORPUS_TABLES: dict[str, T.StructType] = {
     "events": EVENTS,
     "documents": DOCUMENTS,
     "embeddings": EMBEDDINGS,
-}
+})

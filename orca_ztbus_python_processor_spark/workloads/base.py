@@ -16,7 +16,7 @@ import json
 import os
 import re
 from collections.abc import Callable
-from types import CodeType, FunctionType, ModuleType
+from types import CodeType, FunctionType, MappingProxyType, ModuleType
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -52,7 +52,9 @@ def fingerprints(catalog: Catalog) -> dict[str, str]:
     does not depend on the checkout's path either. Mutable values (a
     dict, list or set, an instance's attributes) add the code they
     reach but not their data, which may be a run-time cache
-    (``parquet._TABLE_MEMO``, a ``Processor``'s Column memo).
+    (``parquet._TABLE_MEMO``, a ``Processor``'s Column memo); a
+    constant table frozen as a ``MappingProxyType`` is hashed with its
+    data, like a tuple of its items.
     """
     pkg = type(catalog).__module__.partition(".")[0]
     nodes: dict[int, tuple[str, list]] = {}
@@ -61,7 +63,9 @@ def fingerprints(catalog: Catalog) -> dict[str, str]:
         if isinstance(v, (dict, list, set)):  # mutable, so maybe a run-time cache: refs only
             enc(tuple(v.items() if isinstance(v, dict) else v), refs)
             return type(v).__name__
-        if isinstance(v, CodeType):
+        if isinstance(v, MappingProxyType):
+            v = tuple(v.items())
+        elif isinstance(v, CodeType):
             v = (v.co_code, v.co_names, v.co_consts)
         elif isinstance(v, property):
             v = (v.fget, v.fset, v.fdel)

@@ -19,10 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from orca_ztbus_python_processor_spark.functions.ranks import (
-    with_global_ntile_cuts,
-    with_global_ntiles_cuts,
-)
+from orca_ztbus_python_processor_spark.functions.ranks import with_global_ntiles_cuts
 from orca_ztbus_python_processor_spark.functions.stats import (
     column_stats,
     f32,
@@ -790,7 +787,7 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # customer count, revenue mass, share, and cumulative share ("top 10%
 # of customers hold X% of revenue"). The fact-table aggregation is
 # fully distributed (one shuffle on o_custkey); the decile assignment
-# uses functions.ranks.with_global_ntile_cuts (histogram-selected cut
+# uses functions.ranks.with_global_ntiles_cuts (histogram-selected cut
 # keys → per-row comparison), so NO stage sorts or shuffles the
 # customer dimension — identical NTILE semantics to the oracle,
 # billion-customer safe. The share/cum-share pass runs on the
@@ -832,8 +829,8 @@ def customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         # boundary-broadcast deciles (round-13): cut keys via histogram
         # selection, per-row bucket by comparison — no shuffle of the
         # customer frame (functions/ranks.py header).
-        with_global_ntile_cuts(
-            per_cust, 10, [("revenue", True), ("o_custkey", False)], "decile"
+        with_global_ntiles_cuts(
+            per_cust, [(10, [("revenue", True), ("o_custkey", False)], "decile")]
         )
         .groupBy("decile")
         .agg(F.count("*").alias("n_customers"), F.sum("revenue").alias("revenue_sum"))
@@ -1239,11 +1236,10 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hours-since conversion (boundary-count vs elapsed semantics
     # diverge between engines). Checkpoint the user frame: the
     # cut-selection passes and the final rollup all re-read it.
-    # Round-13 (VERDICT r12 #6): all three quartile dimensions resolve
-    # in ONE boundary-broadcast cut pipeline (functions/ranks.py
-    # with_global_ntiles_cuts) — the user frame is never shuffled; the
-    # three range shuffles + windows of the ntile form collapse into
-    # shared scalar-aggregation jobs plus a comparison projection.
+    # All three quartile dimensions resolve in ONE cut-key pipeline
+    # (functions/ranks.py with_global_ntiles_cuts): shared
+    # scalar-aggregation jobs plus a comparison projection — the user
+    # frame is never shuffled.
     per_user = per_user.localCheckpoint(eager=False)
     scored = with_global_ntiles_cuts(
         per_user,
@@ -1322,7 +1318,7 @@ def benford_leading_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # customer_revenue_percentile — entity-grain percent_rank WITHOUT the
 # single-partition window sort: exact global rank from
 # functions.ranks.with_global_rank (range shuffle + partitioned local
-# row_number + broadcast offsets), percentile = rank/(n-1). The oracle
+# running count + broadcast offsets), percentile = rank/(n-1). The oracle
 # is SQL percent_rank() over the same TOTAL order (revenue, custkey —
 # unique tie-break makes rank == row_number, so the two definitions
 # coincide exactly). The demonstration query for the docs/SCALE.md
@@ -3364,7 +3360,7 @@ def copurchase_kcore_summary(
 # half and again in the second, and the (decile_h1, decile_h2)
 # transition cells (plus entering/leaving flows as decile 0) form the
 # churn/upsell picture. Both decile passes ride the distributed-rank
-# machinery (functions/ranks.with_global_ntile_cuts — histogram-selected
+# machinery (functions/ranks.with_global_ntiles_cuts — histogram-selected
 # cut keys; NO unpartitioned window at customer grain, per the
 # catalog-wide lint policy), joined FULL OUTER on the customer. The
 # midpoint split is derived from the data (min/max order date), so the
@@ -3423,11 +3419,8 @@ def customer_decile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
             # boundary-broadcast deciles (round-13): the half's customer
             # frame is never shuffled; cut keys come from histogram
             # selection over the filtered aggregation.
-            with_global_ntile_cuts(
-                rev,
-                MIGRATION_DECILES,
-                [("rev", True), ("c", False)],
-                "dec",
+            with_global_ntiles_cuts(
+                rev, [(MIGRATION_DECILES, [("rev", True), ("c", False)], "dec")]
             ).select("c", "dec")
         )
     d1 = halves[0].withColumnRenamed("dec", "dec1")
@@ -4237,11 +4230,11 @@ _POIS_CDF = (
     "0.9998167774148945",
 )
 _BOOT_M = 2147483647
-_BOOT_PARAMS = [
+_BOOT_PARAMS = tuple(
     (_rng.randrange(1, _BOOT_M), _rng.randrange(0, _BOOT_M))
     for _rng in [__import__("random").Random(97)]
     for _ in range(_BOOT_B)
-]
+)
 
 
 def _pois_w_sql(u: str) -> str:
@@ -5495,16 +5488,16 @@ def naive_bayes_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the fact table never shuffles. The oracle replays membership as a
 # row-key semi-join, which is plan-free SQL, not the executed shape.
 # --------------------------------------------------------------------------
-_TREE_FEATURES = [
+_TREE_FEATURES = (
     ("linestatus", "l_linestatus"),
     ("qty_decade", "cast(cast(floor(l_quantity / 10) as int) as string)"),
     ("ship_quarter", "cast(quarter(l_shipdate) as string)"),
-]
-_TREE_FEATURES_SQL = [
+)
+_TREE_FEATURES_SQL = (
     ("linestatus", "l_linestatus"),
     ("qty_decade", "CAST(CAST(floor(l_quantity / 10) AS INTEGER) AS VARCHAR)"),
     ("ship_quarter", "CAST(quarter(l_shipdate) AS VARCHAR)"),
-]
+)
 
 
 def _tree_gain_sql(stacked: str) -> str:
@@ -5721,7 +5714,7 @@ def tree_depth2_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: model = one map-combinable ~12-row cell rollup,
 # broadcast back into the test scan; deciles via
-# functions.ranks.with_global_ntile_cuts (histogram-selected cut keys,
+# functions.ranks.with_global_ntiles_cuts (histogram-selected cut keys,
 # no single-task sort); the cumulative window runs on the 10-row
 # decile-grain aggregate (whitelisted bounded frame).
 # --------------------------------------------------------------------------
@@ -5814,11 +5807,9 @@ def gains_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundary-broadcast deciles (round-13): scores are model-cell
     # values with heavy ties, so the cut keys recurse score -> ok ->
     # lno; the scored test frame itself is never shuffled.
-    ranked = with_global_ntile_cuts(
+    ranked = with_global_ntiles_cuts(
         test,
-        10,
-        [("score", True), ("ok", False), ("lno", False), ("y", False)],
-        "decile",
+        [(10, [("score", True), ("ok", False), ("lno", False), ("y", False)], "decile")],
     )
     dec = ranked.groupBy("decile").agg(
         F.count("*").alias("n_rows"), F.sum("y").alias("n_pos")

@@ -15,6 +15,9 @@ pattern — the hash is computed map-side and the shuffle carries only
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+from types import MappingProxyType
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -169,13 +172,13 @@ def lang_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tie-break. (On this synthetic corpus the labels are random; the
 # point is the deterministic, shippable scoring plumbing.)
 # --------------------------------------------------------------------------
-_LANG_MARKERS: dict[str, str] = {
+_LANG_MARKERS: Mapping[str, str] = MappingProxyType({
     "en": r"\b(the|and|of|is)\b",
     "es": r"\b(el|la|de|que)\b",
     "fr": r"\b(le|la|et|les)\b",
     "de": r"\b(der|die|und|das)\b",
     "zh": r"(的|是|了|在)",
-}
+})
 
 
 @CATALOG.query(
@@ -485,7 +488,7 @@ def bigram_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # into any downstream write as a pure per-row predicate.
 # Scale: map-only assignment + one tiny groupBy(source) rollup.
 # --------------------------------------------------------------------------
-_SAMPLE_THRESHOLDS = {"src0": "80", "src1": "40"}  # 50%, 25%; default ~10%
+_SAMPLE_THRESHOLDS = MappingProxyType({"src0": "80", "src1": "40"})  # 50%, 25%; default ~10%
 _DEFAULT_THRESHOLD = "1a"
 
 

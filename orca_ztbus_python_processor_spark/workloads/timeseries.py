@@ -2911,7 +2911,7 @@ def value_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The dual of value_histogram_equiwidth, and the profiling primitive
 # behind range-partition boundary planning. Bucket assignment is exact
 # SQL NTILE over the TOTAL order (value, event_id) — computed with the
-# distributed-rank machinery (functions.ranks.with_global_ntile_cuts:
+# distributed-rank machinery (functions.ranks.with_global_ntiles_cuts:
 # histogram-selected cut keys + per-row comparison), never an
 # unpartitioned window sort (docs/SCALE.md global-window policy; the
 # catalog-wide lint applies).
@@ -2936,14 +2936,14 @@ EQUIDEPTH_BUCKETS = 10
 )
 def value_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from orca_ztbus_python_processor_spark.functions.ranks import (  # noqa: PLC0415
-        with_global_ntile_cuts,
+        with_global_ntiles_cuts,
     )
 
     ev = _events(spark, sf_dir).select("event_id", "value")
     # boundary-broadcast buckets (round-13): cut keys via histogram
     # selection; the event frame is never shuffled (ranks.py header).
-    bucketed = with_global_ntile_cuts(
-        ev, EQUIDEPTH_BUCKETS, [("value", False), ("event_id", False)], "bucket"
+    bucketed = with_global_ntiles_cuts(
+        ev, [(EQUIDEPTH_BUCKETS, [("value", False), ("event_id", False)], "bucket")]
     )
     return bucketed.groupBy("bucket").agg(
         F.count("*").alias("n"),
@@ -3845,8 +3845,8 @@ def daily_mix_kl_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      functions.quantiles.exact_weighted_quantiles turns it into
 #      decile estimates with one scalar-offset pass.
 # This is the documented sketch path for quantiles at 100 TB: the
-# full-fidelity alternative (exact distributed quantiles) costs a
-# range shuffle of ALL rows; the sketch shuffles only n_partitions x
+# full-fidelity alternative (exact distributed quantiles) costs 2-4
+# scans of ALL rows; the sketch shuffles only n_partitions x
 # SKETCH_BLOCK_TARGET weighted points. Rows-only for the driver
 # (estimates are sketch-dependent by design); the rank-error guarantee
 # is enforced by an independent pytest gate against the exact ranks.

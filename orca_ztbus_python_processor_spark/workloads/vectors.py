@@ -1536,10 +1536,10 @@ def _jl_sign(i: int, j: int) -> int:
     return 1 if h % 2 == 0 else -1
 
 
-_JL_SIGNS = [
-    [_jl_sign(i, j) for j in range(JL_SOURCE_DIM)]
+_JL_SIGNS = tuple(
+    tuple(_jl_sign(i, j) for j in range(JL_SOURCE_DIM))
     for i in range(JL_TARGET_DIM)
-]
+)
 _JL_SIGNS_SPARK = (
     "array("
     + ", ".join(

@@ -10,14 +10,20 @@ old queries and starve changed ones of driver evidence.
 from __future__ import annotations
 
 import glob
+import importlib
 import json
 import os
+import pkgutil
 import re
 import subprocess
 import sys
+from types import MappingProxyType
 
+import numpy as np
+
+import orca_ztbus_python_processor_spark as pkg
 from orca_ztbus_python_processor_spark.functions import ranks
-from orca_ztbus_python_processor_spark.workloads import base
+from orca_ztbus_python_processor_spark.workloads import base, textops
 from orca_ztbus_python_processor_spark.workloads.base import (
     VERIFIED_JSON,
     fingerprints,
@@ -88,16 +94,52 @@ def test_every_correctness_round_is_recorded():
 def test_helper_edit_moves_query_to_front(monkeypatch, tmp_path):
     # Record every query as verified in its current form, then edit a
     # helper customer_value_deciles reaches only through
-    # with_global_ntile_cuts -> with_global_ntiles_cuts, never by name.
+    # with_global_ntiles_cuts, never by name.
     verified = tmp_path / "verified.json"
     verified.write_text(json.dumps({"rounds": [], "fingerprints": fingerprints(merged_catalog())}))
     monkeypatch.setattr(base, "VERIFIED_JSON", str(verified))
     order = sample_order.__wrapped__()
     assert order.index("q1_pricing_summary") < order.index("customer_value_deciles")
-    code = ranks._rank_proxy.__code__
-    monkeypatch.setattr(ranks._rank_proxy, "__code__", code.replace(co_consts=code.co_consts + ("edit",)))
+    code = ranks._key_base.__code__
+    monkeypatch.setattr(ranks._key_base, "__code__", code.replace(co_consts=code.co_consts + ("edit",)))
     order = sample_order.__wrapped__()
     assert order.index("customer_value_deciles") < order.index("q1_pricing_summary")
+
+
+def test_constant_table_edit_moves_reader_to_front(monkeypatch, tmp_path):
+    # Record every query as verified, then change one value of a frozen
+    # constant table that stratified_sample_profile reads.
+    verified = tmp_path / "verified.json"
+    verified.write_text(json.dumps({"rounds": [], "fingerprints": fingerprints(merged_catalog())}))
+    monkeypatch.setattr(base, "VERIFIED_JSON", str(verified))
+    order = sample_order.__wrapped__()
+    assert order.index("q1_pricing_summary") < order.index("stratified_sample_profile")
+    edited = MappingProxyType({**textops._SAMPLE_THRESHOLDS, "src1": "41"})
+    monkeypatch.setattr(textops, "_SAMPLE_THRESHOLDS", edited)
+    order = sample_order.__wrapped__()
+    assert order.index("stratified_sample_profile") < order.index("q1_pricing_summary")
+
+
+def test_only_run_time_caches_are_mutable_module_globals():
+    """Constant tables are tuples, ``MappingProxyType`` or read-only
+    arrays, so ``fingerprints`` hashes their data and no caller can
+    edit them; the only mutable module globals are the run-time
+    caches."""
+    merged_catalog()
+    for mod in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        importlib.import_module(mod.name)
+    mutable = {
+        f"{name.rpartition('.')[2]}.{k}"
+        for name, mod in list(sys.modules.items())
+        if name.partition(".")[0] == pkg.__name__
+        for k, v in vars(mod).items()
+        if not k.startswith("__")
+        and (
+            isinstance(v, (dict, list, set, bytearray))
+            or (isinstance(v, np.ndarray) and v.flags.writeable)
+        )
+    }
+    assert mutable == {"parquet._TABLE_MEMO", "session._SHIPPED_APP_IDS"}
 
 
 _PRINT_FINGERPRINTS = """

@@ -625,7 +625,7 @@ def test_deciles_no_unpartitioned_window(spark, catalog):
 
 def test_rfm_no_unpartitioned_window(spark, catalog):
     """user_rfm_segments formerly ran THREE unpartitioned ntile sorts
-    (VERDICT r5 #2); the three with_global_ntile passes must leave
+    (VERDICT r5 #2); the one with_global_ntiles_cuts pass must leave
     ZERO unpartitioned windows."""
     df = catalog.queries["user_rfm_segments"](spark, SMOKE_SF_DIR)
     assert _unpartitioned_windows(df) == 0
@@ -675,16 +675,25 @@ BOUNDED_GLOBAL_WINDOW_OK = {
 }
 
 
-def test_catalog_wide_unpartitioned_window_lint(spark, catalog):
-    """Catalog-wide lint: no query outside the documented bounded-frame
-    whitelist may plan an unpartitioned window. Streaming queries are
-    excluded (building them executes micro-batches; their stateful ops
-    are key-partitioned by construction and pinned in test_streaming)."""
+@pytest.fixture(scope="module")
+def batch_frames(spark, catalog):
+    """Every batch query built once (its eager build jobs included) and
+    shared by both catalog-wide lints. Streaming queries are excluded:
+    building them executes micro-batches, and their stateful ops are
+    key-partitioned by construction and pinned in test_streaming."""
+    return {
+        name: fn(spark, SMOKE_SF_DIR)
+        for name, fn in catalog.queries.items()
+        if not name.startswith("stream_")
+    }
+
+
+def test_catalog_wide_unpartitioned_window_lint(batch_frames):
+    """Catalog-wide lint: no batch query outside the documented
+    bounded-frame whitelist may plan an unpartitioned window."""
     offenders = {}
-    for name, fn in catalog.queries.items():
-        if name.startswith("stream_"):
-            continue
-        n = _unpartitioned_windows(fn(spark, SMOKE_SF_DIR))
+    for name, df in batch_frames.items():
+        n = _unpartitioned_windows(df)
         if n:
             offenders[name] = n
     unexpected = set(offenders) - set(BOUNDED_GLOBAL_WINDOW_OK)
@@ -795,16 +804,13 @@ def _low_card_windows(spark, df) -> list:
     return hits
 
 
-def test_catalog_wide_low_cardinality_window_lint(spark, catalog):
-    """Catalog-wide lint (VERDICT r11 #2): no query outside the
+def test_catalog_wide_low_cardinality_window_lint(spark, batch_frames):
+    """Catalog-wide lint (VERDICT r11 #2): no batch query outside the
     documented whitelist may window a corpus-grain frame over a
-    partition key with fewer values than defaultParallelism. Streaming
-    queries excluded as in the unpartitioned lint."""
+    partition key with fewer values than defaultParallelism."""
     offenders = {}
-    for name, fn in catalog.queries.items():
-        if name.startswith("stream_"):
-            continue
-        hits = _low_card_windows(spark, fn(spark, SMOKE_SF_DIR))
+    for name, df in batch_frames.items():
+        hits = _low_card_windows(spark, df)
         if hits:
             offenders[name] = hits
     unexpected = set(offenders) - set(LOW_CARD_WINDOW_OK)
@@ -1102,7 +1108,7 @@ def test_cusum_windows_share_one_exchange(spark, catalog):
 
 def test_equidepth_histogram_distributed_rank(spark, catalog):
     """Equi-depth bucketing rides the round-13 boundary-broadcast NTILE
-    (functions.ranks.with_global_ntile_cuts): zero unpartitioned
+    (functions.ranks.with_global_ntiles_cuts): zero unpartitioned
     windows, zero windows at all — cut keys are resolved by histogram
     selection during construction and the bucket is a pure comparison
     projection, so the event frame's only Exchange is the final

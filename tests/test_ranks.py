@@ -1,8 +1,8 @@
-"""Property tests for functions/ranks.py: the distributed global
-rank/NTILE must agree exactly with Spark's own single-partition
-``row_number``/``ntile`` ground truth on randomized frames (sizes that
-exercise empty partitions, n < k, n % k != 0), while never planning an
-unpartitioned window itself.
+"""Property tests for functions/ranks.py: the distributed global rank
+and the cut-key NTILE must agree exactly with Spark's own
+single-partition ``row_number``/``ntile`` ground truth on randomized
+frames (sizes that exercise empty partitions, n < k, n % k != 0), while
+never planning an unpartitioned window itself.
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from orca_ztbus_python_processor_spark.functions.ranks import (
-    with_global_ntile,
+    with_global_ntiles_cuts,
     with_global_rank,
 )
 
@@ -45,7 +45,9 @@ def test_global_ntile_matches_sql_ntile(spark, n, k):
     df = _frame(spark, n, seed=n * 31 + k)
     got = {
         r["id"]: r["b"]
-        for r in with_global_ntile(df, k, [F.col("v"), F.col("id")], "b").collect()
+        for r in with_global_ntiles_cuts(
+            df, [(k, [("v", False), ("id", False)], "b")]
+        ).collect()
     }
     ref = {
         r["id"]: r["b"]
@@ -58,9 +60,7 @@ def test_global_ntile_matches_sql_ntile(spark, n, k):
 
 def test_descending_order_and_column_preservation(spark):
     df = _frame(spark, 50, seed=9).withColumn("extra", F.col("id") * 2)
-    out = with_global_ntile(
-        df, 5, [F.col("v").desc(), F.col("id")], "bucket"
-    )
+    out = with_global_ntiles_cuts(df, [(5, [("v", True), ("id", False)], "bucket")])
     assert set(out.columns) == {"id", "v", "extra", "bucket"}
     rows = out.collect()
     ref = {
@@ -77,5 +77,5 @@ def test_empty_frame_ranks_and_ntile(spark):
     df = spark.createDataFrame([], "id long, v double")
     ranked, n = with_global_rank(df, [F.col("v"), F.col("id")], "r0")
     assert n == 0 and ranked.count() == 0
-    out = with_global_ntile(df, 4, [F.col("v"), F.col("id")], "b")
+    out = with_global_ntiles_cuts(df, [(4, [("v", False), ("id", False)], "b")])
     assert out.count() == 0

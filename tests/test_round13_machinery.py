@@ -4,8 +4,8 @@
 
 Each optimized operator is differentially pinned against an
 independent reference — pandas/numpy order statistics for the
-selection core, the proven range-shuffle ``with_global_ntile`` for the
-cut form — on adversarial shapes: heavy ties, n < k, single row,
+selection core, Spark's own single-partition ``F.ntile`` for the cut
+form — on adversarial shapes: heavy ties, n < k, single row,
 descending keys, multi-spec batching, NaN values, and the
 driver-collect cardinality guard.
 """
@@ -18,6 +18,7 @@ import random
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from orca_ztbus_python_processor_spark.functions.quantiles import (
     _MAX_GROUPS,
@@ -26,10 +27,7 @@ from orca_ztbus_python_processor_spark.functions.quantiles import (
     exact_group_rank_values,
     exact_weighted_quantiles,
 )
-from orca_ztbus_python_processor_spark.functions.ranks import (
-    with_global_ntile,
-    with_global_ntiles_cuts,
-)
+from orca_ztbus_python_processor_spark.functions.ranks import with_global_ntiles_cuts
 
 
 def _rows(seed: int, n: int):
@@ -44,6 +42,16 @@ def _rows(seed: int, n: int):
         )
         for i in range(n)
     ]
+
+
+def _spark_ntile(df, k, keys, out):
+    """Spark's own NTILE over an unpartitioned window (the reference)."""
+    order = [(F.col(nm).desc() if d else F.col(nm)) for nm, d in keys]
+    return df.withColumn(out, F.ntile(k).over(W.orderBy(*order)))
+
+
+def _by_id(df, *cols):
+    return df.select("id", *cols).toPandas().sort_values("id").reset_index(drop=True)
 
 
 def test_exact_group_quantiles_matches_pandas(spark):
@@ -144,24 +152,13 @@ def test_group_guard_message():
 )
 @pytest.mark.parametrize("n,k", [(3000, 10), (7, 10), (10, 10), (1, 4)])
 def test_ntile_cuts_matches_shuffle_form(spark, keys, n, k):
+    """The id predates the one NTILE path, when the reference was the
+    range-shuffle form; the reference is Spark's own NTILE."""
     df = spark.createDataFrame(
         _rows(7, n), "id long, v double, b long, c double, g string"
     )
-    order = [(F.col(nm).desc() if d else F.col(nm)) for nm, d in keys]
-    old = (
-        with_global_ntile(df, k, order, "bk")
-        .select("id", "bk")
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    new = (
-        with_global_ntiles_cuts(df, [(k, keys, "bk")])
-        .select("id", "bk")
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
+    old = _by_id(_spark_ntile(df, k, keys, "bk"), "bk")
+    new = _by_id(with_global_ntiles_cuts(df, [(k, keys, "bk")]), "bk")
     assert old.equals(new)
 
 
@@ -174,44 +171,23 @@ def test_ntile_cuts_multi_spec_batch(spark):
         (4, [("b", False), ("id", False)], "f"),
         (4, [("c", True), ("id", False)], "m"),
     ]
-    new = (
-        with_global_ntiles_cuts(df, specs)
-        .select("id", "r", "f", "m")
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
+    new = _by_id(with_global_ntiles_cuts(df, specs), "r", "f", "m")
     old = df
     for k, keys, out in specs:
-        order = [(F.col(nm).desc() if d else F.col(nm)) for nm, d in keys]
-        old = with_global_ntile(old, k, order, out)
-    old = (
-        old.select("id", "r", "f", "m")
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    assert old.equals(new)
+        old = _spark_ntile(old, k, keys, out)
+    assert _by_id(old, "r", "f", "m").equals(new)
 
 
 def test_ntile_cuts_nan_falls_back(spark):
+    """NaN sorts greatest, as in Spark's NTILE. The id predates the one
+    NTILE path, when a NaN key fell back to a range-shuffle form."""
     rows = [(0, float("nan")), (1, 2.0), (2, 1.0), (3, 3.0)]
     df = spark.createDataFrame(rows, "id long, v double")
-    old = (
-        with_global_ntile(df, 2, [F.col("v"), F.col("id")], "bk")
-        .select("id", "bk")
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    new = (
-        with_global_ntiles_cuts(df, [(2, [("v", False), ("id", False)], "bk")])
-        .select("id", "bk")
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    assert old.equals(new)  # identical because the fallback IS the old form
+    keys = [("v", False), ("id", False)]
+    old = _by_id(_spark_ntile(df, 2, keys, "bk"), "bk")
+    new = _by_id(with_global_ntiles_cuts(df, [(2, keys, "bk")]), "bk")
+    assert old.equals(new)
+    assert new["bk"].tolist() == [2, 1, 1, 2]
 
 
 def test_ntile_cuts_timestamp_key(spark):
@@ -222,18 +198,7 @@ def test_ntile_cuts_timestamp_key(spark):
         for i in range(500)
     ]
     df = spark.createDataFrame(rows, "id long, ts timestamp")
-    old = (
-        with_global_ntile(df, 4, [F.col("ts"), F.col("id")], "bk")
-        .select("id", "bk")
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    new = (
-        with_global_ntiles_cuts(df, [(4, [("ts", False), ("id", False)], "bk")])
-        .select("id", "bk")
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
+    keys = [("ts", False), ("id", False)]
+    old = _by_id(_spark_ntile(df, 4, keys, "bk"), "bk")
+    new = _by_id(with_global_ntiles_cuts(df, [(4, keys, "bk")]), "bk")
     assert old.equals(new)

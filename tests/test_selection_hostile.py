@@ -3,22 +3,25 @@
 
 Each operator is pinned bit-for-bit, at its own f32/double output
 boundary, against an independent reference — ``F.percentile``, a numpy
-sort (NaN last, as in Spark) and a brute-force cumulative pick — on
--Inf, +Inf, NaN, an all-NaN group, a NULL group, NULL values, empty
-input, a single row, heavy ties and a finite range wider than the
-largest double. ``small_fetch`` reruns each case with a 2-row fetch
-limit, so the histogram refinement passes (not only the first bounded
-fetch) see them too.
+sort (NaN last, as in Spark), a brute-force cumulative pick and Spark's
+own single-partition ``F.ntile`` — on -Inf, +Inf, NaN, an all-NaN
+group, a NULL group, NULL values, empty input, a single row, heavy
+ties, a finite range wider than the largest double and integral keys
+past 2^53. ``small_fetch`` reruns each case with a 2-row fetch limit,
+so the histogram refinement passes (not only the first bounded fetch)
+see them too.
 """
 
 from __future__ import annotations
 
+import datetime
 import math
 import random
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from orca_ztbus_python_processor_spark.functions import quantiles
 from orca_ztbus_python_processor_spark.functions.quantiles import (
@@ -26,10 +29,7 @@ from orca_ztbus_python_processor_spark.functions.quantiles import (
     exact_group_rank_values,
     exact_weighted_quantiles,
 )
-from orca_ztbus_python_processor_spark.functions.ranks import (
-    with_global_ntile,
-    with_global_ntiles_cuts,
-)
+from orca_ztbus_python_processor_spark.functions.ranks import with_global_ntiles_cuts
 
 INF, NAN = math.inf, math.nan
 QS = (0.0, 0.25, 0.5, 0.75, 1.0)  # dyadic fractions: both interpolations exact
@@ -184,10 +184,82 @@ def test_group_operators_empty_and_single_row(spark):
     assert exact_group_rank_values(one, "g", "v", lambda n: {"hi": n}).first()["hi"] == INF
 
 
+def _spark_ntiles(df, specs):
+    """Spark's own NTILE per spec: one unpartitioned window each, under
+    ``asc()`` (NULLS FIRST) / ``desc()`` (NULLS LAST)."""
+    for k, keys, out in specs:
+        order = [F.col(nm).desc() if d else F.col(nm).asc() for nm, d in keys]
+        df = df.withColumn(out, F.ntile(k).over(W.orderBy(*order)))
+    return df
+
+
+def _assert_ntiles_match_spark(df, specs):
+    outs = [out for _k, _keys, out in specs]
+
+    def by_id(frame):
+        return {r["id"]: tuple(r[o] for o in outs) for r in frame.collect()}
+
+    assert by_id(with_global_ntiles_cuts(df, specs)) == by_id(_spark_ntiles(df, specs))
+
+
+B53, B63 = 2**53, 2**63
+NTILE_SCHEMA = "id long, v double, g int, t long, k53 long, k63 long, ts timestamp"
+
+
+def _ntile_rows(n):
+    """Keys with NULL, NaN and ±Inf (``v``), heavy ties (``g``), a
+    tie-break column holding NULL (``t``), longs around ±2^53 (``k53``)
+    and near ±2^63 (``k63``), and timestamps whose micros pass 2^53
+    next to NULL (``ts``)."""
+    rng = random.Random(23)
+    vs = [None, NAN, -INF, INF, 0.0, 1.5, -2.0, 1e300, -1e300]
+    k53 = [B53 + d for d in (-1, 0, 1, 2, 3)] + [-B53 + d for d in (-2, -1, 0, 1)] + [0]
+    k63 = [B63 - 1, B63 - 2, B63 - 2**32, -B63, -B63 + 1, -B63 + 2**32, 0, -1]
+    tss = [None, datetime.datetime(1970, 1, 1), datetime.datetime(2300, 1, 1),
+           datetime.datetime(2300, 1, 1, 0, 0, 0, 1), datetime.datetime(9999, 12, 31)]
+    return [
+        (i, rng.choice(vs), rng.choice([1, 2, 3]), rng.choice([None, 5, 6]),
+         rng.choice(k53), rng.choice(k63), rng.choice(tss))
+        for i in range(n)
+    ]
+
+
+NTILE_CASES = {
+    "nonfinite_asc": (300, [(4, [("v", False), ("id", False)], "b")]),
+    "nonfinite_desc": (300, [(4, [("v", True), ("id", False)], "b")]),
+    "null_tiebreak": (300, [(5, [("g", False), ("t", True), ("v", False), ("id", False)], "b")]),
+    "long_2_53": (300, [(7, [("k53", False), ("id", True)], "b")]),
+    "long_2_63": (300, [(7, [("k63", True), ("id", False)], "b")]),
+    "heavy_ties": (300, [(10, [("g", True), ("id", False)], "b")]),
+    "empty": (0, [(4, [("v", False), ("id", False)], "b")]),
+    "single_row": (1, [(4, [("v", True), ("id", False)], "b")]),
+    "n_lt_k": (3, [(10, [("v", False), ("k63", False), ("id", False)], "b")]),
+    "multi_spec": (300, [
+        (4, [("v", False), ("id", False)], "r"),
+        (3, [("v", True), ("t", False), ("id", False)], "f"),
+        (10, [("ts", False), ("k63", True), ("id", False)], "m"),
+        (4, [("t", True), ("k53", False), ("id", False)], "q"),
+    ]),
+}
+
+
+@pytest.mark.parametrize("case", list(NTILE_CASES))
+def test_ntile_cuts_hostile_match_spark_ntile(spark, fetch_limit, case):
+    n, specs = NTILE_CASES[case]
+    df = spark.createDataFrame(_ntile_rows(n), NTILE_SCHEMA)
+    _assert_ntiles_match_spark(df, specs)
+
+
+def test_ntile_cuts_string_key_raises(spark):
+    df = spark.createDataFrame([(0, "a"), (1, "b")], "id long, s string")
+    with pytest.raises(TypeError, match="supported key types"):
+        with_global_ntiles_cuts(df, [(2, [("s", False), ("id", False)], "b")])
+
+
 def test_ntile_cuts_long_keys_past_2_53(spark):
     """Longs past 2^53 collide as doubles (2^53 + 1 -> 2^53), so the cut
-    keys would tie distinct rows; the stats job must route them to the
-    exact shuffle form."""
+    keys would tie distinct rows; the stats job must split them into two
+    exact 32-bit levels."""
     base = 2**53
     rows = [(0, base + 1), (1, base), (2, base + 3), (3, base + 2)]
     df = spark.createDataFrame(rows, "id long, k long")
@@ -196,5 +268,5 @@ def test_ntile_cuts_long_keys_past_2_53(spark):
         for r in with_global_ntiles_cuts(df, [(4, [("k", False)], "b")]).collect()
     }
     assert got == {1: 1, 0: 2, 3: 3, 2: 4}
-    old = {r["id"]: r["b"] for r in with_global_ntile(df, 4, [F.col("k")], "b").collect()}
-    assert got == old
+    ref = {r["id"]: r["b"] for r in _spark_ntiles(df, [(4, [("k", False)], "b")]).collect()}
+    assert got == ref
