@@ -561,10 +561,17 @@ def range_prefix_sum(
             offs.append((pid, *g, off))
             off += sw
         total += off
-    g_types = [f"{g} {df.schema[g].dataType.simpleString()}" for g in groups]
+    # offsets carry the group keys as _og<i>: the join matches them
+    # null-safe, since a NULL group key is a group like any other
+    g_types = [
+        f"_og{i} {df.schema[g].dataType.simpleString()}" for i, g in enumerate(groups)
+    ]
     odf = F.broadcast(
-        spark.createDataFrame(offs, ", ".join(["_pid int", *g_types, "_off long"]))
+        spark.createDataFrame(offs, ", ".join(["_opid int", *g_types, "_off long"]))
     )
+    on = F.col("_pid") == F.col("_opid")
+    for i, g in enumerate(groups):
+        on = on & F.col(g).eqNullSafe(F.col(f"_og{i}"))
 
     # Pass 2: local exclusive cumsum within each (partition, group)
     # cell — bounded by partition size — plus the broadcast offset.
@@ -572,9 +579,9 @@ def range_prefix_sum(
         W.unboundedPreceding, 0
     )
     out = (
-        s.join(odf, ["_pid", *groups])
+        s.join(odf, on)
         .withColumn(out_col, F.col("_off") + F.sum(v).over(w) - v)
-        .drop("_pid", "_off")
+        .select(*groups, *(c for c in df.columns if c not in groups), out_col)
     )
     return out, total
 

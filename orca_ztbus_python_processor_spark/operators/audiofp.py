@@ -138,7 +138,7 @@ def audiofp_near_dups(
     sigs: DataFrame,
     max_hamming: int = 3,
     id_col: str = "media_id",
-    max_members: int | None = 1024,
+    max_members: int = 1024,
 ) -> DataFrame:
     """Hamming-ball pairs over audio fingerprints — the shared
     4 x 16-bit pigeonhole banding (``dedup.hamming_near_dups``), same

@@ -1,16 +1,21 @@
 """Near-duplicate detection operators for the documents pipeline
 (SURVEY.md §2.11 X1/X2): MinHash + LSH banding, SimHash, and exact
-n-gram Jaccard verification — all built from Spark SQL primitives
-(no Python UDFs; shingling/hashing/banding run inside whole-stage
-codegen).
+n-gram Jaccard verification.
+
+MinHash has one path: ``minhash_signatures_and_sets`` computes every
+document's band hashes, nibble sketches and exact shingle-hash set in
+one Arrow-batched numpy stage; ``candidate_pairs_from_sigs`` bands and
+sketch-gates the signatures; ``jaccard_pairs_from_sets`` scores the
+candidates exactly. ``minhash_near_dups`` chains the three.
 
 Scale design (the standard 100 TB near-dup layout):
-  - shingle/minhash/simhash signatures are computed map-side; only
-    (doc_id, signature) tuples shuffle;
+  - signatures and shingle sets are computed map-side; only
+    (doc_id, signature) tuples shuffle for banding;
   - LSH banding turns the quadratic all-pairs problem into an
     equi-join on (band_index, band_hash) — candidate buckets;
-  - exact Jaccard verification re-joins shingle sets only for
-    candidate pairs (tiny compared to the corpus);
+  - exact Jaccard verification joins shingle sets only to candidate
+    pairs (tiny compared to the corpus), executor to executor —
+    nothing is collected to the driver;
   - hash-family parameters are deterministic (seeded) so results are
     reproducible across runs/clusters.
 
@@ -22,7 +27,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MERSENNE31 = (1 << 31) - 1  # universal-hash modulus for the minhash family
@@ -86,25 +91,13 @@ def _hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def _shingles_sql(text_col: str, k: int) -> str:
-    return (
-        f"array_distinct(transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
-        f" i -> substring({text_col}, i, {k})))"
-    )
-
-
-def shingles(text_col: str, k: int = 5) -> Column:
-    """Distinct k-character shingles of a text column (codegen'd)."""
-    return F.expr(_shingles_sql(text_col, k))
-
-
 # Star-fallback centers per flood bucket: a flood member disconnects
 # only if all of its center-pairs fail the downstream verify.
 _STAR_CENTERS = 8
 
 
 def _pair_expand(
-    bucketed: DataFrame, members_col: str = "ids", max_members: int | None = 1024
+    bucketed: DataFrame, members_col: str = "ids", max_members: int = 1024
 ) -> DataFrame:
     """Expand each LSH bucket's sorted member array into (m_a, m_b) pairs
     (a < b) without a self-join.
@@ -133,10 +126,7 @@ def _pair_expand(
     members similar only to non-center members can drop; that trade is
     deliberate, because the exhaustive list is quadratic precisely when
     the bucket is degenerate. At 1024 the legitimate near-dup buckets
-    (tens of members) always take the full expansion; pass ``None`` to
-    force full expansion everywhere (known pre-collapsed, flood-free
-    input — see the sha256 stage in
-    workloads/pipelineops.text_dedup_retention).
+    (tens of members) always take the full expansion.
     """
     full = (
         f"flatten(transform(sequence(1, size({members_col}) - 1),"
@@ -144,88 +134,99 @@ def _pair_expand(
         f" j -> struct(element_at({members_col}, i) as m_a,"
         f" element_at({members_col}, j) as m_b))))"
     )
-    if max_members is None:
-        pairs_expr = full
-    else:
-        # Clamp so the star sequences are always ascending: the star
-        # branch only fires when size > max_members >= k.
-        k = min(_STAR_CENTERS, max_members)
-        star = (
-            # center-center pairs (full expansion over the first k) ...
-            f"concat(flatten(transform(sequence(1, {k - 1}),"
-            f" i -> transform(sequence(i + 1, {k}),"
-            f" j -> struct(element_at({members_col}, i) as m_a,"
-            f" element_at({members_col}, j) as m_b)))),"
-            # ... plus every center paired with every non-center member.
-            f" flatten(transform(sequence(1, {k}),"
-            f" i -> transform(sequence({k} + 1, size({members_col})),"
-            f" j -> struct(element_at({members_col}, i) as m_a,"
-            f" element_at({members_col}, j) as m_b)))))"
-        )
-        pairs_expr = (
-            f"CASE WHEN size({members_col}) <= {max_members}"
-            f" THEN {full} ELSE {star} END"
-        )
+    # Clamp so the star sequences are always ascending: the star
+    # branch only fires when size > max_members >= k.
+    k = min(_STAR_CENTERS, max_members)
+    star = (
+        # center-center pairs (full expansion over the first k) ...
+        f"concat(flatten(transform(sequence(1, {k - 1}),"
+        f" i -> transform(sequence(i + 1, {k}),"
+        f" j -> struct(element_at({members_col}, i) as m_a,"
+        f" element_at({members_col}, j) as m_b)))),"
+        # ... plus every center paired with every non-center member.
+        f" flatten(transform(sequence(1, {k}),"
+        f" i -> transform(sequence({k} + 1, size({members_col})),"
+        f" j -> struct(element_at({members_col}, i) as m_a,"
+        f" element_at({members_col}, j) as m_b)))))"
+    )
+    pairs_expr = (
+        f"CASE WHEN size({members_col}) <= {max_members}"
+        f" THEN {full} ELSE {star} END"
+    )
     return bucketed.where(F.size(members_col) >= 2).select(
         F.explode(F.expr(pairs_expr)).alias("p")
     ).select("p.m_a", "p.m_b")
 
 
-def _doc_signatures(
+def minhash_signatures_and_sets(
     docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    num_hashes: int,
-    bands: int,
-    seed: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 5,
+    num_hashes: int = 64,
+    bands: int = 16,
+    seed: int = 42,
 ) -> DataFrame:
-    """Per-doc minhash band hashes + nibble sketches as ONE row per doc:
-    ``_id, band_hashes array<long>[bands], sk0..skN long`` via vectorized
-    numpy. The raw 64-long signature array is computed internally but
-    NOT emitted: no consumer reads it, and mapInPandas output cannot be
-    column-pruned, so emitting it would Arrow-serialize ~64 longs per
-    doc just to drop them (the nibble sketches carry the bits the
-    candidate gate needs at 1/16 the width).
+    """Per-doc MinHash signature AND exact shingle-hash set, computed in
+    one Arrow-batched numpy stage (one text scan and decode per doc).
 
-    An expression-level form in pure Spark SQL is possible, but
-    higher-order-function lambdas are interpreted, so the 64-hash
-    permutation pass costs ~5 s per million shingles. Here the whole
-    text -> byte-shingle -> Carter-Wegman minhash -> band-hash chain is
-    one Arrow-batched map stage of numpy matrix ops (~10x). Shingles
-    are hashed from UTF-8 bytes with a polynomial rolling hash —
-    equivalent recall structure to the SQL form (candidates are a
-    recall filter; exactness lives in the Jaccard verify stage).
+    - band hashes: the k-BYTE windows of the UTF-8 text (a text shorter
+      than k bytes is one window) hashed poly-257 mod 2^31-1, distinct,
+      minhashed with the seeded Carter-Wegman family (``_hash_params``);
+      each band of ``num_hashes // bands`` minhashes folds poly-1000003
+      mod 2^31-1.
+    - nibble sketches: the low 4 bits of each minhash, 16 per long,
+      ``sk_i = sum_j (sig[16i + j] & 15) << 4j`` — what the candidate
+      gate needs to estimate signature agreement with bit arithmetic
+      (``candidate_pairs_from_sigs``). The raw signature is not
+      emitted: mapInPandas output cannot be column-pruned, and no
+      consumer reads it.
+    - shingle-hash set: the k-CHARACTER windows (the text decoded to
+      UTF-32, one element per code point; a text shorter than k is one
+      window), each hashed with two independent 31-bit polynomial
+      hashes packed as ``(h1 << 31) | h2`` (collision odds ~2^-62 per
+      pair), distinct — char-exact on any unicode text.
+
+    Byte windows suffice for the signatures (candidates are a recall
+    filter); exactness lives in the character-window sets. The
+    expression-level Spark SQL form of this chain runs its
+    higher-order-function lambdas interpreted, ~10x slower than these
+    numpy matrix ops. Empty and NULL texts emit no row. Callers pin the
+    result so banding and verify each read it once. A pure-Python
+    reference pins all three outputs in tests/test_round10_ops.py.
+
+    Output: ``_id, band_hashes, sk0..skN, _set``.
     """
     import numpy as np
     import pandas as pd
 
     params = _hash_params(num_hashes, seed)
     rows = num_hashes // bands
+    n_sk = (num_hashes + 15) // 16
+    M2 = 2147483629  # largest prime below 2^31: the set's second hash modulus
 
     def gen(batches):
         A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
         B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-        pows = np.array([pow(257, k - 1 - j, MERSENNE31) for j in range(k)], dtype=np.int64)
         band_pows = np.array([pow(1_000_003, rows - 1 - j, MERSENNE31) for j in range(rows)], dtype=np.int64)
+        pows1 = np.array([pow(257, k - 1 - j, MERSENNE31) for j in range(k)], dtype=np.int64)
+        pows2 = np.array([pow(263, k - 1 - j, M2) for j in range(k)], dtype=np.int64)
         for pdf in batches:
-            out_id, out_bands, out_sk = [], [], []
+            out_id, out_bands, out_sk, out_set = [], [], [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                b = np.frombuffer((text or "").encode("utf-8"), dtype=np.uint8)
+                t = text or ""
+                b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
                 if len(b) == 0:
                     continue
+                # minhash signature over BYTE k-windows
                 if len(b) < k:
-                    h = np.array([(b.astype(np.int64) @ pows[-len(b):]) % MERSENNE31])
+                    h = np.array([(b.astype(np.int64) @ pows1[-len(b):]) % MERSENNE31])
                 else:
                     win = np.lib.stride_tricks.sliding_window_view(b, k).astype(np.int64)
-                    h = (win @ pows) % MERSENNE31
+                    h = (win @ pows1) % MERSENNE31
                 hu = np.unique(h)
-                sig = ((A * hu[None, :] + B) % MERSENNE31).min(axis=1)  # (num_hashes,)
+                sig = ((A * hu[None, :] + B) % MERSENNE31).min(axis=1)
                 bh = (sig.reshape(bands, rows) @ band_pows) % MERSENNE31
-                # Nibble sketch: the low 4 bits of each of the num_hashes
-                # minhash values, 16 per long — lets the candidate gate
-                # estimate signature agreement with pure bit arithmetic
-                # (see minhash_candidate_pairs), no per-element lambdas.
                 nib = sig & 15
                 sk = [
                     int(
@@ -236,14 +237,27 @@ def _doc_signatures(
                     )
                     if len(nib[i * 16 : (i + 1) * 16])
                     else 0
-                    for i in range((num_hashes + 15) // 16)
+                    for i in range(n_sk)
                 ]
+                # exact shingle-hash set over CODE-POINT k-windows
+                cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+                if len(cp) < k:
+                    kk = len(cp)
+                    p1 = np.array([pow(257, kk - 1 - j, MERSENNE31) for j in range(kk)], dtype=np.int64)
+                    p2 = np.array([pow(263, kk - 1 - j, M2) for j in range(kk)], dtype=np.int64)
+                    swin = cp[None, :]
+                else:
+                    p1, p2 = pows1, pows2
+                    swin = np.lib.stride_tricks.sliding_window_view(cp, k)
+                h1 = (swin @ p1) % MERSENNE31
+                h2 = (swin @ p2) % M2
                 out_id.append(doc_id)
                 out_bands.append(bh)
                 out_sk.append(sk)
+                out_set.append(np.unique((h1 << np.int64(31)) | h2))
             if not out_id:
-                # an empty pandas frame types the array columns float64,
-                # which Arrow cannot convert to list<int64> — skip
+                # empty pandas frames type array columns float64, which
+                # Arrow cannot convert to list<int64> — skip
                 continue
             yield pd.DataFrame(
                 {
@@ -251,55 +265,16 @@ def _doc_signatures(
                     "band_hashes": out_bands,
                     **{
                         f"sk{i}": np.array([s[i] for s in out_sk], dtype=np.int64)
-                        for i in range((num_hashes + 15) // 16)
+                        for i in range(n_sk)
                     },
+                    "_set": out_set,
                 }
             )
 
-    n_sk = (num_hashes + 15) // 16
     sk_schema = ", ".join(f"sk{i} long" for i in range(n_sk))
     return _spread(docs.select(id_col, text_col)).mapInPandas(
-        gen, schema=f"_id long, band_hashes array<long>, {sk_schema}"
-    )
-
-
-def minhash_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-    min_est: float | None = None,
-    return_estimate: bool = False,
-) -> DataFrame:
-    """LSH banding: docs whose signatures collide in >=1 band.
-
-    ``return_estimate`` adds the nibble-sketch Jaccard estimate as a
-    ``j_est`` column (max over a pair's colliding bands — the estimate
-    is a pure function of the two signatures, identical in every
-    band row, so max is just dedup). Used by the calibration audit.
-
-    ``min_est`` adds the sketch-gate stage of the standard LSH verify
-    pipeline: candidate pairs are scored with the UNBIASED signature
-    estimate of Jaccard (fraction of agreeing minhashes — mean j,
-    sigma = sqrt(j(1-j)/num_hashes), ~0.06 at 64 hashes) and pairs
-    below ``min_est`` are dropped BEFORE the exact shingle-set verify.
-    Banding alone admits ~pct-scale false candidates at j ~ 0.2-0.3
-    (16x4 bands collide at ~12% for j=0.3); gating at
-    ``threshold - 3 sigma`` cuts the expensive exact stage ~100x while
-    keeping recall loss below 1e-3 per true pair. The sketch join moves
-    only (id, 64-long sig) — no shingle sets.
-
-    Output: ``id_a, id_b`` (id_a < id_b), distinct — plus a ``j_est``
-    column (the pair's signature-sketch Jaccard estimate, max over its
-    colliding bands via groupBy/max instead of distinct) when
-    ``return_estimate`` is set.
-    """
-    sigs = _doc_signatures(docs, id_col, text_col, k, num_hashes, bands, seed)
-    return candidate_pairs_from_sigs(
-        sigs, num_hashes=num_hashes, min_est=min_est, return_estimate=return_estimate
+        gen,
+        schema=f"_id long, band_hashes array<long>, {sk_schema}, _set array<long>",
     )
 
 
@@ -309,12 +284,29 @@ def candidate_pairs_from_sigs(
     min_est: float | None = None,
     return_estimate: bool = False,
 ) -> DataFrame:
-    """Banding + sketch gate over PRECOMPUTED signatures (the back half
-    of ``minhash_candidate_pairs``, split out in round 13 so a fused
-    signatures+sets stage can feed banding AND the exact verify from
-    one Arrow pass — see ``minhash_signatures_and_sets``). ``sigs``
-    needs ``_id, band_hashes, sk0..skN``; extra columns are ignored
-    (pruned before the band explode)."""
+    """LSH banding over ``minhash_signatures_and_sets`` output: docs
+    whose band hashes collide in >= 1 band. ``sigs`` needs ``_id,
+    band_hashes, sk0..skN``; extra columns are pruned before the band
+    explode.
+
+    ``min_est`` adds the sketch-gate stage of the standard LSH verify
+    pipeline: candidate pairs are scored with the UNBIASED signature
+    estimate of Jaccard (fraction of agreeing minhashes — mean j,
+    sigma = sqrt(j(1-j)/num_hashes), ~0.06 at 64 hashes) and pairs
+    below ``min_est`` are dropped BEFORE the exact shingle-set verify.
+    Banding alone admits ~pct-scale false candidates at j ~ 0.2-0.3
+    (16x4 bands collide at ~12% for j=0.3); gating at
+    ``threshold - 3 sigma`` cuts the expensive exact stage ~100x while
+    keeping recall loss below 1e-3 per true pair.
+
+    ``return_estimate`` adds the nibble-sketch Jaccard estimate as a
+    ``j_est`` column (the estimate is a pure function of the two
+    signatures, identical in every band row, so the max over a pair's
+    colliding bands is just dedup). Used by the calibration audit.
+
+    Output: ``id_a, id_b`` (id_a < id_b), distinct — plus ``j_est``
+    (groupBy/max instead of distinct) when ``return_estimate`` is set.
+    """
     n_sk = (num_hashes + 15) // 16
     sk_cols = [f"sk{i}" for i in range(n_sk)]
     member = F.struct(F.col("_id").alias("id"), *sk_cols)
@@ -365,254 +357,16 @@ def candidate_pairs_from_sigs(
     )
 
 
-def jaccard_pairs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (broadcast form —
-    the OPT-IN small-corpus fast path; ``jaccard_pairs_shuffled`` is the
-    default verify stage).
-
-    The doc -> shingle-set map is collected to the DRIVER, broadcast
-    once per executor, and each candidate pair is scored with native
-    Python set intersection inside an Arrow-batched map stage — only the
-    (id_a, id_b) pairs flow through the plan. ~2x over the shuffle-join
-    form on a corpus that fits driver memory; past that the driver
-    collect is the bound, which is why this form is not the default.
-
-    Output: ``id_a, id_b, jaccard`` (float32).
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = docs.sparkSession
-    pdf = docs.select(id_col, text_col).toPandas()
-
-    def _sh(t: str) -> frozenset:
-        if len(t) < k:
-            return frozenset({t[:k]})
-        return frozenset(t[i : i + k] for i in range(len(t) - k + 1))
-
-    sets = {int(i): _sh(t or "") for i, t in zip(pdf[id_col], pdf[text_col])}
-    bc = spark.sparkContext.broadcast(sets)
-
-    def gen(batches):
-        s = bc.value
-        for chunk in batches:
-            ja = []
-            for x, y in zip(chunk["id_a"], chunk["id_b"]):
-                sa, sb = s[int(x)], s[int(y)]
-                inter = len(sa & sb)
-                union = len(sa) + len(sb) - inter
-                ja.append(inter / union if union else 0.0)
-            yield pd.DataFrame(
-                {
-                    "id_a": chunk["id_a"],
-                    "id_b": chunk["id_b"],
-                    "jaccard": np.asarray(ja, dtype=np.float32),
-                }
-            )
-
-    # NOTE: deliberately NOT _spread() here — every verify worker must
-    # deserialize the broadcast shingle-set dict, so fanning the (small)
-    # pair table across all cores multiplies the fixed broadcast-load
-    # cost without reducing the (cheap) per-pair work. AQE's coalesced
-    # partitioning of the candidate pairs is the right width.
-    return pairs.select("id_a", "id_b").mapInPandas(
-        gen, schema="id_a long, id_b long, jaccard float"
-    )
-
-
-def _shingle_hash_sets(
-    docs: DataFrame, id_col: str, text_col: str, k: int
-) -> DataFrame:
-    """Per-doc distinct k-CHARACTER-shingle hash sets as ``_id, _set``
-    (array<long> of 62-bit hashes), computed in one Arrow-batched numpy
-    stage.
-
-    Char-exact (matches ``_py_shingles``/`jaccard_pairs` semantics on
-    any unicode text): the text is decoded to UTF-32 so each array
-    element is one code point, then every length-k window is hashed with
-    two independent 31-bit polynomial hashes packed into one int64
-    (collision odds ~2^-62 per pair — negligible at any corpus scale).
-    The expression-level SQL form (substring + xxhash64 inside
-    higher-order lambdas) computes the same sets but interprets every
-    lambda element; the vectorized form is ~10x faster (same argument as
-    ``_band_rows_pandas``).
-    """
-    import numpy as np
-    import pandas as pd
-
-    M2 = 2147483629  # largest prime below 2^31, co-prime family to MERSENNE31
-
-    def gen(batches):
-        for pdf in batches:
-            out_id, out_set = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                t = text or ""
-                cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-                if len(cp) == 0:
-                    continue
-                kk = min(k, len(cp))
-                pows1 = np.array([pow(257, kk - 1 - j, MERSENNE31) for j in range(kk)], dtype=np.int64)
-                pows2 = np.array([pow(263, kk - 1 - j, M2) for j in range(kk)], dtype=np.int64)
-                if len(cp) < k:
-                    # _py_shingles: text shorter than k contributes {text[:k]} == {text}
-                    win = cp[None, :]
-                else:
-                    win = np.lib.stride_tricks.sliding_window_view(cp, k)
-                h1 = (win @ pows1) % MERSENNE31
-                h2 = (win @ pows2) % M2
-                out_id.append(doc_id)
-                out_set.append(np.unique((h1 << np.int64(31)) | h2))
-            if not out_id:
-                # an empty pandas frame types the array column float64,
-                # which Arrow cannot convert to list<int64> — skip
-                continue
-            yield pd.DataFrame({"_id": out_id, "_set": out_set})
-
-    return _spread(docs.select(id_col, text_col)).mapInPandas(
-        gen, schema="_id long, _set array<long>"
-    )
-
-
-def minhash_signatures_and_sets(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """``_doc_signatures`` + ``_shingle_hash_sets`` FUSED into one
-    Arrow stage (round 13, guide §4.1/§2.4): the LSH-verify pipelines
-    (``ngram_jaccard_pairs``, ``minhash_jaccard_calibration``,
-    ``minhash_near_dups``) consume BOTH per-doc band hashes (banding /
-    sketch gate) and per-doc exact shingle-hash sets (Jaccard verify),
-    and the two-stage form scans, Arrow-transfers and UTF-decodes every
-    document's text twice. One pass computes both: same byte-polynomial
-    Carter-Wegman minhash (band hashes + nibble sketches) and same
-    UTF-32 double-polynomial hash sets, bit-identical to the split
-    forms (pinned against them in tests). Callers pin the (narrow
-    id + bands + sketches + set) result so banding and verify read it
-    once each.
-
-    Output: ``_id, band_hashes, sk0..skN, _set``.
-    """
-    import numpy as np
-    import pandas as pd
-
-    params = _hash_params(num_hashes, seed)
-    rows = num_hashes // bands
-    n_sk = (num_hashes + 15) // 16
-    M2 = 2147483629  # _shingle_hash_sets' second hash modulus
-
-    def gen(batches):
-        A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-        B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-        pows = np.array([pow(257, k - 1 - j, MERSENNE31) for j in range(k)], dtype=np.int64)
-        band_pows = np.array([pow(1_000_003, rows - 1 - j, MERSENNE31) for j in range(rows)], dtype=np.int64)
-        pows1_k = np.array([pow(257, k - 1 - j, MERSENNE31) for j in range(k)], dtype=np.int64)
-        pows2_k = np.array([pow(263, k - 1 - j, M2) for j in range(k)], dtype=np.int64)
-        for pdf in batches:
-            out_id, out_bands, out_sk, out_set = [], [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                t = text or ""
-                b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-                if len(b) == 0:
-                    continue
-                # --- minhash signature over BYTE k-windows (verbatim
-                # _doc_signatures arithmetic) ---
-                if len(b) < k:
-                    h = np.array([(b.astype(np.int64) @ pows[-len(b):]) % MERSENNE31])
-                else:
-                    win = np.lib.stride_tricks.sliding_window_view(b, k).astype(np.int64)
-                    h = (win @ pows) % MERSENNE31
-                hu = np.unique(h)
-                sig = ((A * hu[None, :] + B) % MERSENNE31).min(axis=1)
-                bh = (sig.reshape(bands, rows) @ band_pows) % MERSENNE31
-                nib = sig & 15
-                sk = [
-                    int(
-                        np.bitwise_or.reduce(
-                            nib[i * 16 : (i + 1) * 16].astype(np.uint64)
-                            << (np.arange(len(nib[i * 16 : (i + 1) * 16]), dtype=np.uint64) * np.uint64(4))
-                        ).astype(np.int64)
-                    )
-                    if len(nib[i * 16 : (i + 1) * 16])
-                    else 0
-                    for i in range(n_sk)
-                ]
-                # --- exact shingle-hash set over CODEPOINT k-windows
-                # (verbatim _shingle_hash_sets arithmetic) ---
-                cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-                if len(cp) < k:
-                    kk = len(cp)
-                    pows1 = np.array([pow(257, kk - 1 - j, MERSENNE31) for j in range(kk)], dtype=np.int64)
-                    pows2 = np.array([pow(263, kk - 1 - j, M2) for j in range(kk)], dtype=np.int64)
-                    swin = cp[None, :]
-                else:
-                    pows1, pows2 = pows1_k, pows2_k
-                    swin = np.lib.stride_tricks.sliding_window_view(cp, k)
-                h1 = (swin @ pows1) % MERSENNE31
-                h2 = (swin @ pows2) % M2
-                out_id.append(doc_id)
-                out_bands.append(bh)
-                out_sk.append(sk)
-                out_set.append(np.unique((h1 << np.int64(31)) | h2))
-            if not out_id:
-                # empty pandas frames type array columns float64, which
-                # Arrow cannot convert to list<int64> — skip
-                continue
-            yield pd.DataFrame(
-                {
-                    "_id": out_id,
-                    "band_hashes": out_bands,
-                    **{
-                        f"sk{i}": np.array([s[i] for s in out_sk], dtype=np.int64)
-                        for i in range(n_sk)
-                    },
-                    "_set": out_set,
-                }
-            )
-
-    sk_schema = ", ".join(f"sk{i} long" for i in range(n_sk))
-    return _spread(docs.select(id_col, text_col)).mapInPandas(
-        gen,
-        schema=f"_id long, band_hashes array<long>, {sk_schema}, _set array<long>",
-    )
-
-
-def jaccard_pairs_shuffled(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
-    """Exact shingle-set Jaccard via joins (the default verify stage —
-    nothing is materialized on the driver, so corpus size is bounded by
-    the cluster, not one process).
-
-    The sets are 62-bit hashes of the shingles, not the strings
-    (`_shingle_hash_sets`): array_intersect on longs is ~10x cheaper
-    than on UTF8 strings and an in-pair collision is ~2^-62 —
-    negligible even at 100 TB corpus scale.
-
-    Output: ``id_a, id_b, jaccard`` (float32).
-    """
-    sets = _shingle_hash_sets(docs, id_col, text_col, k)
-    return jaccard_pairs_from_sets(sets, pairs)
-
-
 def jaccard_pairs_from_sets(sets: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact-Jaccard verify over PRECOMPUTED shingle-hash sets (the back
-    half of ``jaccard_pairs_shuffled``, split out in round 13 for the
-    fused signatures+sets pipeline). ``sets`` needs ``_id, _set``."""
+    """Exact shingle-set Jaccard of the candidate ``pairs`` (``id_a,
+    id_b``) over the ``_id, _set`` columns of
+    ``minhash_signatures_and_sets``. Nothing is materialized on the
+    driver, so corpus size is bounded by the cluster, not one process.
+    The sets hold 62-bit shingle hashes, not strings: array_intersect
+    on longs is ~10x cheaper than on UTF8 strings, and an in-pair
+    collision is ~2^-62 — negligible even at 100 TB corpus scale.
+
+    Output: ``id_a, id_b, jaccard`` (float32)."""
     # SHUFFLE_HASH, not broadcast: the set table is |docs| rows of
     # ~|text| packed longs — materializing that through a driver-built
     # broadcast costs more than the whole verify (and at corpus scale
@@ -642,6 +396,12 @@ def jaccard_pairs_from_sets(sets: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
+# Sketch gate of minhash_near_dups sits this far below the verify
+# threshold: > 3 sigma of the 64-hash signature estimate, so it drops
+# ~1e-3 of the true pairs at the threshold boundary.
+_GATE_SLACK = 0.2
+
+
 def minhash_near_dups(
     docs: DataFrame,
     threshold: float = 0.6,
@@ -651,50 +411,23 @@ def minhash_near_dups(
     num_hashes: int = 64,
     bands: int = 16,
     seed: int = 42,
-    verify: str = "shuffled",
-    gate_margin: float | None = 0.2,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: candidates via banding, then
-    exact-Jaccard verification at ``threshold``.
+    """Full MinHash-LSH near-dup pipeline: candidates via banding,
+    sketch-gated at ``threshold - 0.2`` (``candidate_pairs_from_sigs``)
+    so the exact verify only scores pairs that could plausibly pass,
+    then exact-Jaccard verification at ``threshold``. The fused
+    signatures+sets stage is pinned, so its one text pass feeds both
+    banding and the verify.
 
-    ``verify`` picks the verification stage: ``"shuffled"`` (default —
-    join-based, no driver materialization, the 100 TB path) or
-    ``"broadcast"`` (driver-collected shingle-set dict; ~2x faster on a
-    corpus that fits driver memory, opt-in only).
-
-    Candidates are sketch-gated at ``threshold - gate_margin`` (the
-    default 0.2 is > 3 sigma of the 64-hash signature estimate — see
-    ``minhash_candidate_pairs``) so the exact verify only scores pairs
-    that could plausibly pass; the gate adds ~1e-3 false-negative rate
-    per true pair at the threshold boundary. Exact-recall-sensitive
-    callers pass ``gate_margin=None`` to disable the gate and fall back
-    to pure banding recall.
+    Output: ``id_a, id_b, jaccard`` (float32).
     """
-    min_est = None if gate_margin is None else max(0.0, threshold - gate_margin)
-    if verify == "shuffled":
-        # fused signatures+sets (round 13): one text scan / Arrow pass
-        # feeds banding AND the exact verify, pinned so each leg reads
-        # the computed blocks instead of re-running the stage.
-        fused = minhash_signatures_and_sets(
-            docs, id_col, text_col, k, num_hashes, bands, seed
-        ).localCheckpoint(eager=False)
-        cands = candidate_pairs_from_sigs(
-            fused, num_hashes=num_hashes, min_est=min_est
-        )
-        return jaccard_pairs_from_sets(fused.select("_id", "_set"), cands).where(
-            F.col("jaccard") >= threshold
-        )
-    cands = minhash_candidate_pairs(
-        docs,
-        id_col,
-        text_col,
-        k,
-        num_hashes,
-        bands,
-        seed,
-        min_est=min_est,
+    fused = minhash_signatures_and_sets(
+        docs, id_col, text_col, k, num_hashes, bands, seed
+    ).localCheckpoint(eager=False)
+    cands = candidate_pairs_from_sigs(
+        fused, num_hashes=num_hashes, min_est=max(0.0, threshold - _GATE_SLACK)
     )
-    return jaccard_pairs(docs, cands, id_col, text_col, k).where(
+    return jaccard_pairs_from_sets(fused.select("_id", "_set"), cands).where(
         F.col("jaccard") >= threshold
     )
 
@@ -862,7 +595,7 @@ def hamming_near_dups(
     id_col: str,
     max_hamming: int = 3,
     n_chunks: int = 4,
-    max_members: int | None = 1024,
+    max_members: int = 1024,
 ) -> DataFrame:
     """Hamming-ball pairs over any 64-bit signature column: ``n_chunks``
     x 16-bit pigeonhole banding (``max_hamming < n_chunks`` differing

@@ -149,7 +149,7 @@ def phash_near_dups(
     sigs: DataFrame,
     max_hamming: int = 3,
     id_col: str = "media_id",
-    max_members: int | None = 1024,
+    max_members: int = 1024,
 ) -> DataFrame:
     """Hamming-ball pairs over pHash signatures: 4 x 16-bit pigeonhole
     banding (<=3 differing bits leave >=1 chunk intact; raise the

@@ -21,39 +21,17 @@ evaluated and rejected for this corpus: with near-uniform vectors
 (top-5 neighbor cosine ~0.32 ⇒ ~71°), the per-bit collision
 probability is ~0.6, so any bucket count that prunes meaningfully
 also destroys recall — a property of the data, not the
-implementation. ``bucket_id`` remains available for strongly
-clustered embedding spaces.
+implementation.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from orca_ztbus_python_processor_spark.operators.dedup import _spread
-
-
-def _dot_literal(emb: Column, plane: list[float]) -> Column:
-    lit = F.array(*[F.lit(float(x)) for x in plane])
-    return F.aggregate(
-        F.zip_with(emb, lit, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-
-
-def bucket_id(emb: Column, dim: int, n_planes: int = 12, seed: int = 42) -> Column:
-    """H-bit sign-projection bucket id (for strongly clustered spaces)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim)).tolist()
-    bits = [
-        F.when(_dot_literal(emb, p) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        for i, p in enumerate(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
 
 
 def train_centroids(

@@ -55,10 +55,10 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_lsh_sql(base: str = "documents") -> str:
     """DuckDB replay of the ENTIRE MinHash-LSH pipeline
-    (operators/dedup.py: _doc_signatures -> minhash_candidate_pairs ->
-    jaccard_pairs_shuffled), promoting the minhash family from
-    rows-only to hash-matched (VERDICT r9 #3, the KMV/winnowing
-    convention). Every stage is deterministic and SQL-expressible:
+    (operators/dedup.py: minhash_signatures_and_sets ->
+    candidate_pairs_from_sigs -> jaccard_pairs_from_sets), promoting
+    the minhash family from rows-only to hash-matched (VERDICT r9 #3,
+    the KMV/winnowing convention). Every stage is deterministic and SQL-expressible:
 
     - shingle hashes: poly-257 over the 5-byte windows mod 2^31-1,
       distinct per doc. The Spark side hashes UTF-8 BYTES; the oracle
@@ -78,7 +78,7 @@ def _minhash_lsh_sql(base: str = "documents") -> str:
     - nibble gate: mism = #{j: sig_a[j]%16 != sig_b[j]%16}; the SQL
       mirrors the bit-trick's arithmetic exactly (same double ops).
     - exact verify: distinct 5-char shingle STRINGS (the dual-hash
-      packing in _shingle_hash_sets is collision-free at any
+      packing of the Spark-side sets is collision-free at any
       realistic corpus, so cardinalities agree).
 
     ``base`` names the relation (table or an earlier CTE) holding the
@@ -187,12 +187,11 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 5-gram Jaccard scores over sketch-gated LSH candidate pairs
-    (the verification stage exposed as its own operator — the
-    shuffle-join form; the driver-collect fast path stays opt-in in
-    operators/dedup). Candidates are gated at signature-estimate >= 0.2:
-    banding alone admits ~100x false candidates around j ~ 0.2-0.3, and
-    exact-scoring those is pure waste in a dedup pipeline whose
-    downstream thresholds start at 0.4."""
+    (the verification stage exposed as its own operator). Candidates
+    are gated at signature-estimate >= 0.2: banding alone admits ~100x
+    false candidates around j ~ 0.2-0.3, and exact-scoring those is
+    pure waste in a dedup pipeline whose downstream thresholds start
+    at 0.4."""
     from orca_ztbus_python_processor_spark.operators.dedup import (  # noqa: PLC0415
         candidate_pairs_from_sigs,
         jaccard_pairs_from_sets,
@@ -200,9 +199,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs(spark, sf_dir)
-    # fused signatures+sets (round-13): the two-stage form scanned and
-    # UTF-decoded every doc's text twice (once for band hashes, once
-    # for exact shingle sets); one Arrow pass + pin computes both.
+    # pinned: one Arrow pass feeds banding and the exact verify
     fused = minhash_signatures_and_sets(docs).localCheckpoint(eager=False)
     cands = candidate_pairs_from_sigs(fused, min_est=0.2)
     return jaccard_pairs_from_sets(fused.select("_id", "_set"), cands)
@@ -596,10 +593,10 @@ def text_dedup_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     is semantics-preserving while removing the duplicate mass (typically
     the bulk of all dup mass in a web corpus) from the expensive
     signature + band-shuffle + CC stages. Empty texts are excluded from
-    the sha-grouping (they never enter LSH either — ``_doc_signatures``
-    skips them), so each stays its own representative and survives,
-    exactly as before. The CC label is the min rep id of
-    the cluster and every rep is the min of its sha-group, so the label
+    the sha-grouping (they never enter LSH either —
+    ``minhash_signatures_and_sets`` skips them), so each stays its own
+    representative and survives. The CC label is the min rep id of the
+    cluster and every rep is the min of its sha-group, so the label
     is the min doc_id of the EXPANDED cluster — keep/drop is bit-
     identical to running LSH on the full corpus (union-find parity
     pinned in tests/test_pipeline_ops.py).
@@ -1206,8 +1203,7 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs(spark, sf_dir)
-    # fused signatures+sets (round-13): one text scan / Arrow pass
-    # feeds banding and the exact verify (was two full passes).
+    # pinned: one Arrow pass feeds banding and the exact verify
     fused = minhash_signatures_and_sets(docs).localCheckpoint(eager=False)
     # Lazy-checkpoint the candidate pairs: they feed BOTH the exact
     # verify's pair argument and the estimate join, and without the cut

@@ -42,8 +42,9 @@ def main() -> None:
     args = ap.parse_args()
 
     from orca_ztbus_python_processor_spark.operators.dedup import (
-        jaccard_pairs_shuffled,
-        minhash_candidate_pairs,
+        candidate_pairs_from_sigs,
+        jaccard_pairs_from_sets,
+        minhash_signatures_and_sets,
     )
     from orca_ztbus_python_processor_spark.session import get_spark
     from orca_ztbus_python_processor_spark.sources.parquet import read_table
@@ -58,18 +59,19 @@ def main() -> None:
             continue
         docs = read_table(spark, sf_dir, "documents")
         n_docs = docs.count()
+        fused = minhash_signatures_and_sets(docs)
 
         t0 = time.perf_counter()
-        banding = minhash_candidate_pairs(docs).count()
+        banding = candidate_pairs_from_sigs(fused).count()
         t_banding = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        cands = minhash_candidate_pairs(docs, min_est=0.2)
+        cands = candidate_pairs_from_sigs(fused, min_est=0.2)
         gated = cands.count()
         t_gate = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        verified = jaccard_pairs_shuffled(docs, cands).count()
+        verified = jaccard_pairs_from_sets(fused.select("_id", "_set"), cands).count()
         t_verify = time.perf_counter() - t0
 
         results[sf_dir] = {

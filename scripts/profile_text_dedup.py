@@ -9,7 +9,8 @@ per-stage cost is therefore the DELTA between successive cumulative
 rows, also reported. Stages:
 
   sha_collapse     exact-dup sha256 grouping -> extra table
-  signatures       MinHash(64) signatures over representatives
+  signatures       fused MinHash(64) signatures + shingle-hash sets
+                   over representatives
   band_candidates  LSH banding + nibble-sketch gate (>= 0.3)
   verify           shuffled exact-Jaccard join, >= 0.5
   cc               connected components over verified pairs
@@ -41,10 +42,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from orca_ztbus_python_processor_spark.operators.dedup import (
-        _doc_signatures,
+        candidate_pairs_from_sigs,
         connected_components,
-        jaccard_pairs_shuffled,
-        minhash_candidate_pairs,
+        jaccard_pairs_from_sets,
+        minhash_signatures_and_sets,
     )
     from orca_ztbus_python_processor_spark.session import get_spark
     from orca_ztbus_python_processor_spark.sources.parquet import read_table
@@ -84,10 +85,12 @@ def main() -> None:
             return df
 
         timed("sha_collapse", extra)
-        timed("signatures", _doc_signatures(reps, "doc_id", "text", 5, 64, 16, 42))
-        cands = minhash_candidate_pairs(reps, min_est=0.3)
+        fused = timed("signatures", minhash_signatures_and_sets(reps))
+        cands = candidate_pairs_from_sigs(fused, min_est=0.3)
         timed("band_candidates", cands)
-        verified = jaccard_pairs_shuffled(reps, cands).where(F.col("jaccard") >= 0.5)
+        verified = jaccard_pairs_from_sets(fused.select("_id", "_set"), cands).where(
+            F.col("jaccard") >= 0.5
+        )
         timed("verify", verified)
         timed("cc", connected_components(verified.select("id_a", "id_b")))
 

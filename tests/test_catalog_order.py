@@ -9,6 +9,7 @@ old queries and starve changed ones of driver evidence.
 
 from __future__ import annotations
 
+import ast
 import glob
 import importlib
 import json
@@ -140,6 +141,74 @@ def test_only_run_time_caches_are_mutable_module_globals():
         )
     }
     assert mutable == {"parquet._TABLE_MEMO", "session._SHIPPED_APP_IDS"}
+
+
+# Entry points kept for the windowed-stream serving path (ROADMAP
+# direction 1), which no caller drives yet.
+_UNREFERENCED_ALLOWED = frozenset(
+    {"streaming/simulator.window_trigger_stream", "sources/sinks.write_results"}
+)
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read(), path)
+
+
+def _names_outside_own_def(tree: ast.Module, tests: bool) -> set[str]:
+    """Names a module mentions, leaving out each top-level definition's
+    mentions of itself. Test modules count only imports and attribute
+    references, so a test's local variable names nothing."""
+    names: set[str] = set()
+    for stmt in tree.body:
+        found: set[str] = set()
+        for node in ast.walk(stmt):
+            if isinstance(node, ast.alias):
+                found.add(node.name.rpartition(".")[2])
+            elif isinstance(node, ast.Attribute):
+                found.add(node.attr)
+            elif isinstance(node, ast.Name) and not tests:
+                found.add(node.id)
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            found.discard(stmt.name)
+        names |= found
+    return names
+
+
+def test_every_top_level_definition_is_named_somewhere():
+    """Every undecorated top-level function or class in the package is
+    named outside its own ``def``: by package code, ``scripts/``,
+    ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``, or by an
+    import or attribute reference in ``tests/``."""
+    pkg_dir = os.path.dirname(pkg.__file__)
+    pkg_trees = {
+        os.path.relpath(p, pkg_dir)[: -len(".py")]: _parse(p)
+        for p in glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)
+    }
+    other_code = [
+        *glob.glob(os.path.join(REPO_ROOT, "scripts", "*.py")),
+        *glob.glob(os.path.join(REPO_ROOT, "perfbench", "**", "*.py"), recursive=True),
+        os.path.join(REPO_ROOT, "bench.py"),
+        os.path.join(REPO_ROOT, "__spark_entry__.py"),
+    ]
+    named = set().union(
+        *(_names_outside_own_def(t, tests=False) for t in pkg_trees.values()),
+        *(_names_outside_own_def(_parse(p), tests=False) for p in other_code),
+        *(
+            _names_outside_own_def(_parse(p), tests=True)
+            for p in glob.glob(os.path.join(REPO_ROOT, "tests", "*.py"))
+        ),
+    )
+    unnamed = {
+        f"{module}.{stmt.name}"
+        for module, tree in pkg_trees.items()
+        for stmt in tree.body
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not stmt.decorator_list
+        and stmt.name not in named
+    }
+    assert unnamed - _UNREFERENCED_ALLOWED == set()
+    assert _UNREFERENCED_ALLOWED - unnamed == set(), "stale allowlist entry"
 
 
 _PRINT_FINGERPRINTS = """

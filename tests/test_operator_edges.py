@@ -9,8 +9,9 @@ import pandas as pd
 
 from orca_ztbus_python_processor_spark.operators.asofjoin import asof_join
 from orca_ztbus_python_processor_spark.operators.dedup import (
-    minhash_candidate_pairs,
+    candidate_pairs_from_sigs,
     minhash_near_dups,
+    minhash_signatures_and_sets,
     winnow_fingerprints,
 )
 from orca_ztbus_python_processor_spark.operators.intervaljoin import interval_join
@@ -45,7 +46,10 @@ def test_dedup_short_and_empty_texts(spark):
             }
         )
     )
-    pairs = {(r["id_a"], r["id_b"]) for r in minhash_candidate_pairs(docs).collect()}
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in candidate_pairs_from_sigs(minhash_signatures_and_sets(docs)).collect()
+    }
     assert (1, 2) in pairs  # identical sub-shingle texts still collide
     assert (4, 5) in pairs
     assert not any(3 in p for p in pairs)  # empty text joins nothing

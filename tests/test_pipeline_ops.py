@@ -11,10 +11,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from orca_ztbus_python_processor_spark.operators.dedup import (
-    jaccard_pairs,
-    jaccard_pairs_shuffled,
-    minhash_candidate_pairs,
+    candidate_pairs_from_sigs,
+    jaccard_pairs_from_sets,
     minhash_near_dups,
+    minhash_signatures_and_sets,
     simhash_near_dups,
     winnow_fingerprints,
 )
@@ -29,14 +29,14 @@ from orca_ztbus_python_processor_spark.sources.parquet import read_table
 from tests.conftest import SMOKE_SF_DIR
 
 
-def _py_shingles(text: str, k: int = 5) -> set[str]:
+def _py_shingle_set(text: str, k: int = 5) -> set[str]:
     if len(text) < k:
         return {text[:k]}
     return {text[i : i + k] for i in range(len(text) - k + 1)}
 
 
 def _py_jaccard(a: str, b: str, k: int = 5) -> float:
-    sa, sb = _py_shingles(a, k), _py_shingles(b, k)
+    sa, sb = _py_shingle_set(a, k), _py_shingle_set(b, k)
     inter = len(sa & sb)
     union = len(sa | sb)
     return inter / union if union else 0.0
@@ -68,30 +68,18 @@ def test_minhash_recall_against_bruteforce(spark, docs_pdf):
 
 
 def test_jaccard_values_exact(spark, docs_pdf):
+    """The verify scores EVERY banded candidate pair, each equal to a
+    pure-Python shingle-set recount."""
     docs = read_table(spark, SMOKE_SF_DIR, "documents")
-    cands = minhash_candidate_pairs(docs).limit(20)
-    got = jaccard_pairs(docs, cands).collect()
+    fused = minhash_signatures_and_sets(docs).localCheckpoint()
+    cands = candidate_pairs_from_sigs(fused).localCheckpoint()
+    got = jaccard_pairs_from_sets(fused, cands).collect()
     assert got, "expected at least some candidate pairs on this corpus"
+    assert len(got) == cands.count()
     texts = dict(zip(docs_pdf["doc_id"], docs_pdf["text"]))
     for r in got:
         expected = _py_jaccard(texts[r["id_a"]], texts[r["id_b"]])
         assert abs(r["jaccard"] - expected) < 1e-6, (r["id_a"], r["id_b"])
-
-
-def test_jaccard_shuffled_matches_broadcast(spark, docs_pdf):
-    """The scale-path verify stage (shuffle-hash joins over hashed
-    shingle sets) must produce EXACTLY the broadcast form's scores —
-    same pairs, same float32 jaccard — so switching paths by corpus
-    size never changes results."""
-    docs = read_table(spark, SMOKE_SF_DIR, "documents")
-    cands = minhash_candidate_pairs(docs)
-    a = {(r["id_a"], r["id_b"]): r["jaccard"] for r in jaccard_pairs(docs, cands).collect()}
-    b = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_pairs_shuffled(docs, cands).collect()
-    }
-    assert set(a) == set(b)
-    assert max(abs(a[p] - b[p]) for p in a) < 1e-6
 
 
 def test_sketch_gate_keeps_all_above_threshold_pairs(spark):
@@ -99,14 +87,15 @@ def test_sketch_gate_keeps_all_above_threshold_pairs(spark):
     the ungated pipeline verifies at jaccard >= threshold must survive
     gating at threshold - 0.2 (> 3 sigma of the 64-hash estimate)."""
     docs = read_table(spark, SMOKE_SF_DIR, "documents")
-    ungated = jaccard_pairs_shuffled(docs, minhash_candidate_pairs(docs))
+    fused = minhash_signatures_and_sets(docs).localCheckpoint()
+    ungated = jaccard_pairs_from_sets(fused, candidate_pairs_from_sigs(fused))
     truth = {
         (r["id_a"], r["id_b"])
         for r in ungated.where(F.col("jaccard") >= 0.5).collect()
     }
     gated = {
         (r["id_a"], r["id_b"])
-        for r in minhash_candidate_pairs(docs, min_est=0.3).collect()
+        for r in candidate_pairs_from_sigs(fused, min_est=0.3).collect()
     }
     missed = truth - gated
     assert not missed, f"sketch gate dropped {len(missed)} true pairs"
@@ -526,8 +515,7 @@ def test_pair_expand_flood_bucket_star_fallback(spark):
     bucket, and a member stays CC-connected unless ALL of its
     center-pairs fail the downstream verify) instead of the quadratic
     full expansion that would OOM an executor at corpus scale; buckets
-    at or under the cap expand fully, and None forces full expansion
-    everywhere."""
+    at or under the cap expand fully."""
     from orca_ztbus_python_processor_spark.operators.dedup import _pair_expand
 
     rows = [
@@ -547,7 +535,6 @@ def test_pair_expand_flood_bucket_star_fallback(spark):
     # every flood member touches all 4 centers (multi-center robustness)
     for m in rest:
         assert {(a, m) for a in centers} <= got
-    assert len(_pair_expand(bucketed, max_members=None).collect()) == 28 + 3
 
 
 def test_connected_components_empty_graph(spark):

@@ -481,48 +481,75 @@ def test_documents_fixture_is_ascii_byte_char_equivalent():
         assert bad == 0, f"{sf}: non-ASCII text breaks the oracle's ascii() replay"
 
 
+def py_minhash_rows(rows, k=5, num_hashes=64, bands=16, seed=42) -> dict:
+    """Pure-Python replay of ``minhash_signatures_and_sets`` (plain
+    ints, no numpy) over ``(doc_id, text)`` rows: ``doc_id ->
+    (band_hashes, sketches, shingle-hash set)``. Empty and NULL texts
+    emit no row.
+
+    Signatures minhash the poly-257 hashes of the k-BYTE windows; the
+    set packs two polynomial hashes of each k-CHARACTER window. A text
+    shorter than k is one window in both."""
+    from orca_ztbus_python_processor_spark.operators.dedup import (
+        MERSENNE31,
+        _hash_params,
+    )
+
+    m2 = 2147483629
+    params = _hash_params(num_hashes, seed)
+    per_band = num_hashes // bands
+
+    def windows(seq):
+        return [seq] if len(seq) < k else [seq[i : i + k] for i in range(len(seq) - k + 1)]
+
+    def poly(win, base, mod):
+        return sum(x * pow(base, len(win) - 1 - j, mod) for j, x in enumerate(win)) % mod
+
+    out = {}
+    for doc_id, text in rows:
+        b = (text or "").encode("utf-8")
+        if not b:
+            continue
+        hs = {poly(w, 257, MERSENNE31) for w in windows(b)}
+        sig = [min((a * h + c) % MERSENNE31 for h in hs) for a, c in params]
+        band_hashes = tuple(
+            poly(sig[i * per_band : (i + 1) * per_band], 1_000_003, MERSENNE31)
+            for i in range(bands)
+        )
+        sketches = []
+        for i in range((num_hashes + 15) // 16):
+            u = sum((x & 15) << (4 * j) for j, x in enumerate(sig[16 * i : 16 * i + 16]))
+            sketches.append(u - (1 << 64) if u >= 1 << 63 else u)
+        cps = [ord(ch) for ch in text]
+        shingle_set = tuple(
+            sorted({(poly(w, 257, MERSENNE31) << 31) | poly(w, 263, m2) for w in windows(cps)})
+        )
+        out[doc_id] = (band_hashes, tuple(sketches), shingle_set)
+    return out
+
+
+def fused_rows(df) -> dict:
+    """``minhash_signatures_and_sets`` output keyed like
+    ``py_minhash_rows``."""
+    sk_cols = sorted((c for c in df.columns if c.startswith("sk")), key=lambda c: int(c[2:]))
+    return {
+        r["_id"]: (tuple(r["band_hashes"]), tuple(r[c] for c in sk_cols), tuple(r["_set"]))
+        for r in df.collect()
+    }
+
+
 def test_minhash_signatures_match_pure_python_replay(spark):
     import duckdb
 
     from orca_ztbus_python_processor_spark.operators.dedup import (
-        MERSENNE31,
-        _doc_signatures,
-        _hash_params,
+        minhash_signatures_and_sets,
     )
-
-    params = _hash_params(64, 42)
-    pows = [pow(257, 4 - j, MERSENNE31) for j in range(5)]
-    bpows = [pow(1_000_003, 3 - j, MERSENNE31) for j in range(4)]
 
     rows = duckdb.sql(
         f"SELECT doc_id, text FROM '{SF_DIR}/documents.parquet' ORDER BY doc_id LIMIT 40"
     ).fetchall()
-
-    want = {}
-    for did, text in rows:
-        b = (text or "").encode("utf-8")
-        if not b:
-            continue
-        if len(b) < 5:
-            pw = pows[-len(b):]
-            hs = {sum(x * p for x, p in zip(b, pw)) % MERSENNE31}
-        else:
-            hs = {
-                sum(b[i + j] * pows[j] for j in range(5)) % MERSENNE31
-                for i in range(len(b) - 4)
-            }
-        sig = [min((a * h + bb) % MERSENNE31 for h in hs) for a, bb in params]
-        want[did] = [
-            sum(sig[i * 4 + r] * bpows[r] for r in range(4)) % MERSENNE31
-            for i in range(16)
-        ]
-
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["_id"]: list(r["band_hashes"])
-        for r in _doc_signatures(docs, "doc_id", "text", 5, 64, 16, 42).collect()
-    }
-    assert got == want
+    assert fused_rows(minhash_signatures_and_sets(docs)) == py_minhash_rows(rows)
 
 
 def test_simhash_md5_spec_matches_pure_python_reference(spark):

@@ -1,19 +1,17 @@
-"""Round-13 fused minhash signatures+sets parity: the single-Arrow-stage
-``minhash_signatures_and_sets`` must be row-identical to the two split
-stages it fuses (``_doc_signatures`` for band hashes / nibble sketches,
-``_shingle_hash_sets`` for exact shingle-hash sets) — same arithmetic,
-one text decode instead of two."""
+"""The fused ``minhash_signatures_and_sets`` stage, pinned row for row
+(band hashes, nibble sketches, shingle-hash sets) against the
+pure-Python reference ``py_minhash_rows`` of tests/test_round10_ops.py."""
 
 from __future__ import annotations
 
 import pytest
 
 from orca_ztbus_python_processor_spark.operators.dedup import (
-    _doc_signatures,
-    _shingle_hash_sets,
     minhash_signatures_and_sets,
 )
 from orca_ztbus_python_processor_spark.workloads.pipelineops import _docs
+
+from tests.test_round10_ops import fused_rows, py_minhash_rows
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -23,38 +21,18 @@ def docs(spark):
     return _docs(spark, SF_DIR)
 
 
-def _sig_map(df):
-    return {
-        r["_id"]: (tuple(r["band_hashes"]), r["sk0"], r["sk1"], r["sk2"], r["sk3"])
-        for r in df.collect()
-    }
-
-
-def _set_map(df):
-    return {r["_id"]: tuple(r["_set"]) for r in df.collect()}
-
-
 def test_fused_matches_split_stages(docs):
-    fused = minhash_signatures_and_sets(docs)
-    assert _sig_map(fused.drop("_set")) == _sig_map(
-        _doc_signatures(docs, "doc_id", "text", 5, 64, 16, 42)
-    )
-    assert _set_map(fused.select("_id", "_set")) == _set_map(
-        _shingle_hash_sets(docs, "doc_id", "text", 5)
-    )
+    """Every fixture document, against the reference."""
+    rows = [(r["doc_id"], r["text"]) for r in docs.select("doc_id", "text").collect()]
+    assert fused_rows(minhash_signatures_and_sets(docs)) == py_minhash_rows(rows)
 
 
 def test_fused_edge_texts(spark):
-    # empty text dropped (both split stages drop it); text shorter than
-    # k takes the whole-text shingle path; non-ASCII exercises the
-    # byte-window (utf-8) vs codepoint-window (utf-32) split.
+    # empty and NULL texts emit no row; text shorter than k takes the
+    # whole-text window; non-ASCII splits the byte windows (utf-8,
+    # signatures) from the code-point windows (utf-32, sets).
     rows = [(1, ""), (2, "ab"), (3, "héllo wörld"), (4, "aaaaaaa"), (5, None)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    fused = minhash_signatures_and_sets(docs)
-    assert _sig_map(fused.drop("_set")) == _sig_map(
-        _doc_signatures(docs, "doc_id", "text", 5, 64, 16, 42)
-    )
-    assert _set_map(fused.select("_id", "_set")) == _set_map(
-        _shingle_hash_sets(docs, "doc_id", "text", 5)
-    )
-    assert set(_set_map(fused.select("_id", "_set"))) == {2, 3, 4}
+    got = fused_rows(minhash_signatures_and_sets(docs))
+    assert got == py_minhash_rows(rows)
+    assert set(got) == {2, 3, 4}

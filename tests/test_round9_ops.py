@@ -646,7 +646,8 @@ def test_minhash_calibration_matches_python_exact_recount(spark):
     import duckdb
 
     from orca_ztbus_python_processor_spark.operators.dedup import (
-        minhash_candidate_pairs,
+        candidate_pairs_from_sigs,
+        minhash_signatures_and_sets,
     )
     from orca_ztbus_python_processor_spark.sources.parquet import read_table
     from orca_ztbus_python_processor_spark.workloads.pipelineops import (
@@ -668,7 +669,9 @@ def test_minhash_calibration_matches_python_exact_recount(spark):
 
     sets = {i: sh(t or "") for i, t in texts.items()}
     docs = read_table(spark, SF_DIR, "documents")
-    cands = minhash_candidate_pairs(docs, return_estimate=True).collect()
+    cands = candidate_pairs_from_sigs(
+        minhash_signatures_and_sets(docs), return_estimate=True
+    ).collect()
     from collections import defaultdict
 
     bins = defaultdict(list)

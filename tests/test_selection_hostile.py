@@ -1,5 +1,6 @@
 """Hostile inputs for the one exact selection path
-(functions/quantiles._hist_rank_select) and the NTILE cut keys.
+(functions/quantiles._hist_rank_select), the NTILE cut keys and the
+per-group prefix sum.
 
 Each operator is pinned bit-for-bit, at its own f32/double output
 boundary, against an independent reference — ``F.percentile``, a numpy
@@ -28,6 +29,7 @@ from orca_ztbus_python_processor_spark.functions.quantiles import (
     exact_group_quantiles,
     exact_group_rank_values,
     exact_weighted_quantiles,
+    group_prefix_sum,
 )
 from orca_ztbus_python_processor_spark.functions.ranks import with_global_ntiles_cuts
 
@@ -182,6 +184,21 @@ def test_group_operators_empty_and_single_row(spark):
     one = spark.createDataFrame([("x", INF)], "g string, v double")
     assert exact_group_quantiles(one, "g", "v", qs=(0.5,)).first()["p50"] == INF
     assert exact_group_rank_values(one, "g", "v", lambda n: {"hi": n}).first()["hi"] == INF
+
+
+def test_group_prefix_sum_null_group_matches_window_sum(spark):
+    """A NULL group key is a group of its own, as under
+    ``Window.partitionBy``: its rows keep their running sums."""
+    rng = random.Random(5)
+    rows = [(rng.choice(["a", "b", None]), o, rng.randrange(0, 50)) for o in range(120)]
+    df = spark.createDataFrame(rows, "g string, o long, v long")
+    w = W.partitionBy("g").orderBy("o").rowsBetween(W.unboundedPreceding, -1)
+    want = {
+        r["o"]: r["ref"]
+        for r in df.select("o", F.coalesce(F.sum("v").over(w), F.lit(0)).alias("ref")).collect()
+    }
+    got = {r["o"]: r["prefix_sum"] for r in group_prefix_sum(df, "g", "o", "v").collect()}
+    assert got == want
 
 
 def _spark_ntiles(df, specs):
