@@ -35,15 +35,21 @@ Execution model:
     result-row shape (FIXTURES.md A5: window struct, algorithm,
     version, value, payload).
 
-Scale: one shuffle per window type (on window start + keys), partial
-aggregation map-side. Prepares that need ordering (lag) sort within
-the (key, window) partition only — at 100 TB that partitioning matches
-the storage layout (date-partitioned, key-bucketed), so the sort is
-local.
+Scale: a full-table compile shuffles once per window type (on window
+start + keys; twice with a distinct aggregate such as
+``FindActiveBusses``), partial aggregation map-side. Prepares that need
+ordering (lag) sort within the (key, window) partition only — at 100 TB
+that partitioning matches the storage layout (date-partitioned,
+key-bucketed), so the sort is local. A one-window trigger (a root
+Filter bounding ``time_col`` by timestamp literals at most one
+``duration`` apart) is coalesced to one partition instead: no Exchange,
+one job and one stage per window type, at the price of reading every
+split the pruned scan lists in a single task.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -64,6 +70,32 @@ class Algorithm:
     window_type: WindowType
     aggs: AggsFn
     prepare: PrepareFn | None = None
+
+
+def _bounded_span_us(df: DataFrame, time_col: str) -> float:
+    """``hi - lo`` when the conjuncts of the Filter at the root of
+    ``df``'s analyzed plan bound ``time_col`` from both sides by
+    TimestampType literals (micros); ``inf`` otherwise."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "Filter":
+        return math.inf
+    lo, hi, todo = [-math.inf], [math.inf], [plan.condition()]
+    while todo:
+        e = todo.pop()
+        op = e.nodeName()
+        if op == "And":
+            todo += [e.left(), e.right()]
+        elif op in ("GreaterThan", "GreaterThanOrEqual", "LessThan", "LessThanOrEqual"):
+            sides = [e.left(), e.right()]
+            names = [s.nodeName() for s in sides]
+            if names not in (["AttributeReference", "Literal"], ["Literal", "AttributeReference"]):
+                continue
+            attr, lit = sides if names[0] == "AttributeReference" else sides[::-1]
+            value = lit.value()
+            if attr.name() == time_col and lit.dataType().typeName() == "timestamp" and value is not None:
+                # ``time < lit`` and ``lit > time`` both bound time from above
+                (hi if op.startswith("Less") == (attr is sides[0]) else lo).append(value)
+    return min(hi) - max(lo)
 
 
 @dataclass(frozen=True)
@@ -208,9 +240,12 @@ class Processor:
         exact expression lets Catalyst satisfy the aggregation's
         distribution requirement with the prepare's shuffle — one
         Exchange total instead of two, which at 100 TB halves the
-        shuffled volume of the fact table.
+        shuffled volume of the fact table. A one-window trigger needs no
+        Exchange at all: one partition satisfies every clustering.
         """
         plan = self._compiled(window_type, time_col, duration)
+        if _bounded_span_us(df, time_col) <= self._duration_us(duration):
+            df = df.coalesce(1)
         prepared = df.withColumn("_time_from", plan.time_from)
         for name, col in plan.stages:
             prepared = prepared.withColumn(name, col)

@@ -8,7 +8,9 @@ the independent oracle — SURVEY.md §5 strategy #2/#4).
 from __future__ import annotations
 
 import datetime as dt
+import math
 import warnings
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -285,3 +287,137 @@ def test_aggs_and_prepare_built_once(spark, telemetry_fixture):
         "aggs:ComfortAndSafetyPerMinute": 1,
         "aggs:AssetStressPerMinute": 1,
     }
+
+
+# --------------------------------------------------------------------------
+# One-window trigger: a frame whose root Filter bounds the time column from
+# both sides by timestamp literals at most one window apart compiles into a
+# single-partition plan with no Exchange; every other input keeps the
+# shuffle plan.
+# --------------------------------------------------------------------------
+
+WINDOW_TYPES = (EVERY_MINUTE, EVERY_MINUTE_PER_TRIP_PER_BUS)
+
+
+def _at(seconds: int):
+    from pyspark.sql import functions as F
+
+    return F.lit(T0 + dt.timedelta(seconds=seconds))
+
+
+def _between(frame, lo_s: int, hi_s: int):
+    from pyspark.sql import functions as F
+
+    return frame.where((F.col("time") >= _at(lo_s)) & (F.col("time") < _at(hi_s)))
+
+
+def _melted(frame, wt):
+    return proc.melt_results(proc.compile_window_type(frame, wt, "time"), wt)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _canon(value):
+    """Hashable form of a melted row; floats to 10 digits, since one
+    partition sums in another order than the shuffle's partial merges."""
+    if hasattr(value, "asDict"):
+        value = value.asDict()
+    if isinstance(value, dict):
+        return tuple(sorted((k, _canon(v)) for k, v in value.items()))
+    if isinstance(value, float):
+        return "nan" if math.isnan(value) else float(f"{value:.10g}")
+    return value
+
+
+def _rows(df) -> Counter:
+    return Counter(_canon(r) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def trigger_frame(spark, telemetry_fixture):
+    """The fixture with NULL sensor channels: trip 1's temperature and
+    power are NULL for all of minute 2, and both trips' speed is NULL
+    for ten seconds of minute 3 (so the lag prepare meets NULLs)."""
+    from pyspark.sql import functions as F
+
+    t = F.col("time")
+    minute2_trip1 = (t >= _at(120)) & (t < _at(180)) & (F.col("trip_id") == 1)
+    speed_gap = (t >= _at(190)) & (t < _at(200))
+    frame = spark.createDataFrame(telemetry_fixture)
+    for name, cond in [
+        ("temperature_ambient", minute2_trip1),
+        ("electric_power_demand", minute2_trip1),
+        ("odometry_vehicle_speed", speed_gap),
+    ]:
+        frame = frame.withColumn(name, F.when(cond, F.lit(None)).otherwise(F.col(name)))
+    return frame
+
+
+@pytest.mark.parametrize("wt", WINDOW_TYPES, ids=lambda w: w.name)
+def test_one_window_trigger_matches_shuffle_plan(trigger_frame, wt):
+    whole = _melted(trigger_frame, wt)
+    assert "Exchange" in _executed_plan(whole)
+    by_window: dict = {}
+    for r in whole.collect():
+        by_window.setdefault(r["window"]["time_from"], Counter())[_canon(r)] += 1
+    # minute 5 is past the fixture's 300 s: an empty window
+    for minute in range(6):
+        got = _rows(_melted(_between(trigger_frame, 60 * minute, 60 * minute + 60), wt))
+        assert got == by_window.get(T0 + dt.timedelta(minutes=minute), Counter()), minute
+    assert not by_window.get(T0 + dt.timedelta(minutes=5))
+    # an unaligned 60 s range covers two buckets; ``select("*")`` puts a
+    # Project over the Filter, so the same rows take the shuffle plan
+    unaligned = _between(trigger_frame, 30, 90)
+    shuffled = _melted(unaligned.select("*"), wt)
+    assert "Exchange" in _executed_plan(shuffled)
+    got = _rows(_melted(unaligned, wt))
+    assert got == _rows(shuffled)
+    assert len({dict(dict(row)["window"])["time_from"] for row in got}) == 2
+
+
+@pytest.mark.parametrize("wt", WINDOW_TYPES, ids=lambda w: w.name)
+@pytest.mark.parametrize("reversed_sides", [False, True], ids=["time_op_lit", "lit_op_time"])
+def test_one_window_collect_is_one_job_without_exchange(spark, trigger_frame, wt, reversed_sides):
+    from pyspark.sql import functions as F
+
+    t = F.col("time")
+    bounds = ((_at(60) <= t) & (_at(120) > t)) if reversed_sides else ((t >= _at(60)) & (t < _at(120)))
+    melted = _melted(trigger_frame.where(bounds), wt)
+    sc = spark.sparkContext
+    group = f"one-window-{wt.name}-{reversed_sides}"
+    sc.setJobGroup(group, group)
+    try:
+        assert melted.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    plan = _executed_plan(melted)
+    # Spark still wraps an aggregate in AdaptiveSparkPlan, but with no
+    # Exchange its only query stage is the result stage
+    assert "Exchange" not in plan and "ShuffleQueryStage" not in plan
+    assert "Coalesce 1" in plan
+
+
+@pytest.mark.parametrize(
+    "case", ["two_minutes", "one_sided", "other_column", "column_to_column", "unfiltered"]
+)
+def test_other_inputs_keep_the_shuffle(trigger_frame, case):
+    from pyspark.sql import functions as F
+
+    t = F.col("time")
+    with_t2 = trigger_frame.withColumn("t2", t + F.expr("INTERVAL 30 SECONDS"))
+    frame = {
+        "two_minutes": lambda: _between(trigger_frame, 0, 120),
+        "one_sided": lambda: trigger_frame.where(t >= _at(60)),
+        "other_column": lambda: with_t2.where((F.col("t2") >= _at(60)) & (F.col("t2") < _at(120))),
+        "column_to_column": lambda: with_t2.where((t >= _at(60)) & (t < F.col("t2"))),
+        "unfiltered": lambda: trigger_frame,
+    }[case]()
+    for wt in WINDOW_TYPES:
+        assert "Exchange" in _executed_plan(_melted(frame, wt)), wt.name
